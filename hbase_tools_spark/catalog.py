@@ -60,7 +60,32 @@ _SHUFFLE_EXPANSION = 6
 _SHUFFLE_TARGET_BYTES = 64 << 20  # ~64 MB per post-shuffle partition
 
 
-def _autosize_shuffle_partitions(spark: SparkSession, sf_dir: str) -> None:
+def _model_bytes(sf_dir: str) -> int | None:
+    """On-disk bytes of the model's base tables (files or parquet
+    directories), or ``None`` when unknown: ``sf_dir`` is not a local
+    directory (an HDFS/S3/ABFS URI) or the walk failed.  Sizing is
+    best-effort and never fails registration."""
+    if not os.path.isdir(sf_dir):
+        return None
+    total = 0
+    try:
+        for name in BASE_TABLES:
+            path = os.path.join(sf_dir, f"{name}.parquet")
+            if os.path.isfile(path):
+                total += os.path.getsize(path)
+            elif os.path.isdir(path):
+                for root, _, files in os.walk(path):
+                    total += sum(
+                        os.path.getsize(os.path.join(root, f)) for f in files
+                    )
+    except OSError:
+        return None
+    return total
+
+
+def _autosize_shuffle_partitions(
+    spark: SparkSession, model_bytes: int | None
+) -> None:
     """Scale ``spark.sql.shuffle.partitions`` with the DATA, not the
     bench posture (round-10 verdict task 4: the sf10 certify sweep
     OOMed at 8 g because partitions — and hence shuffled-hash-join
@@ -75,21 +100,12 @@ def _autosize_shuffle_partitions(spark: SparkSession, sf_dir: str) -> None:
     assume exactly this rule: their build sides are bounded per
     partition BECAUSE partitions scale with input bytes; under AQE the
     planner may still fall back to sort-merge when a build side
-    estimate exceeds the local-map threshold.)"""
-    if os.environ.get("SPARK_GRAFT_AUTOSHUFFLE", "on") == "off":
+    estimate exceeds the local-map threshold.)  Unknown bytes leave the
+    session's setting alone."""
+    if model_bytes is None or os.environ.get("SPARK_GRAFT_AUTOSHUFFLE", "on") == "off":
         return
+    by_bytes = -(-model_bytes * _SHUFFLE_EXPANSION // _SHUFFLE_TARGET_BYTES)
     try:
-        total = 0
-        for name in BASE_TABLES:
-            path = os.path.join(sf_dir, f"{name}.parquet")
-            if os.path.isfile(path):
-                total += os.path.getsize(path)
-            elif os.path.isdir(path):
-                for root, _, files in os.walk(path):
-                    total += sum(
-                        os.path.getsize(os.path.join(root, f)) for f in files
-                    )
-        by_bytes = -(-total * _SHUFFLE_EXPANSION // _SHUFFLE_TARGET_BYTES)
         cur = int(spark.conf.get("spark.sql.shuffle.partitions"))
         if by_bytes > cur:
             spark.conf.set(
@@ -99,18 +115,62 @@ def _autosize_shuffle_partitions(spark: SparkSession, sf_dir: str) -> None:
         pass  # sizing is best-effort; the session's setting stands
 
 
+#: Largest model (on-disk bytes of its base tables) that runs
+#: interpreted.  Measured, not derived: summed over both perfbench
+#: workloads, warm-pass CPU favours interpreted at 70 MiB, is about even
+#: at 117 MiB and favours compiled at 233 MiB; the cut sits just below
+#: the even point (README, "Execution posture", has the runs).
+_INTERPRETED_MAX_BYTES = 100 << 20
+
+#: Codegen SQL confs of the two execution postures; ``compiled`` is
+#: Spark's default.  Both keys are set on every registration, in either
+#: direction, because one session may load models of different sizes.
+_CODEGEN_POSTURES = {
+    "interpreted": {
+        "spark.sql.codegen.wholeStage": "false",
+        "spark.sql.codegen.factoryMode": "NO_CODEGEN",
+    },
+    "compiled": {
+        "spark.sql.codegen.wholeStage": "true",
+        "spark.sql.codegen.factoryMode": "FALLBACK",
+    },
+}
+
+
+def _codegen_posture(model_bytes: int | None) -> str:
+    """``interpreted`` for models of at most ``_INTERPRETED_MAX_BYTES``
+    on disk, else ``compiled``; an unknown size is ``compiled``, Spark's
+    default.  Generated classes belong to one plan each: on a small
+    model a request spends more CPU Janino-compiling them (and
+    re-compiling what the 100-entry codegen cache evicted, then
+    JIT-compiling the new classes) than processing rows, while
+    interpreted evaluation is one set of JVM methods shared by every
+    query that warms up once per process.  On a large model rows
+    dominate and compiled code pays for itself.  Both confs are needed:
+    with whole-stage codegen off alone, expression-level codegen
+    compiles many smaller classes instead."""
+    if model_bytes is not None and model_bytes <= _INTERPRETED_MAX_BYTES:
+        return "interpreted"
+    return "compiled"
+
+
 def load_model(spark: SparkSession, sf_dir: str) -> Model:
     """Register base fixture tables + derived relations as temp views.
 
     Idempotent (CREATE OR REPLACE); cheap -- registration is metadata
-    only, nothing is scanned until an action runs.
+    only, nothing is scanned until an action runs.  Sizes shuffle
+    partitions and picks the codegen posture from the model's on-disk
+    bytes (``_autosize_shuffle_partitions``, ``_codegen_posture``).
     """
     # Registration is idempotent but not free (schema reads + one
     # catalog round-trip per view); skip it when this session already
     # has this sf_dir registered — also keeps any cached tables warm.
     if spark.conf.get("spark.hbase_tools.model_dir", "") == sf_dir:
         return Model(spark, sf_dir)
-    _autosize_shuffle_partitions(spark, sf_dir)
+    model_bytes = _model_bytes(sf_dir)
+    _autosize_shuffle_partitions(spark, model_bytes)
+    for key, value in _CODEGEN_POSTURES[_codegen_posture(model_bytes)].items():
+        spark.conf.set(key, value)
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     # Pin UTC so NTZ<->instant conversions and unix_timestamp are
     # deterministic regardless of the host session's timezone (DuckDB

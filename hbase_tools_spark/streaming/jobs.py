@@ -238,7 +238,11 @@ def run_to_table(
     ``foreachBatch`` — identical rows (complete mode overwrites with
     the batch's full result, append/update append exactly the rows the
     memory sink would have appended), but written executor-side so the
-    result never lives on the driver heap.
+    result never lives on the driver heap.  The spill directory is a
+    driver-local ``mkdtemp``, so the spill path is only correct when
+    executors share the driver's filesystem (local and local-cluster
+    masters); on a multi-node cluster executors would commit the parquet
+    files to their own disks and the driver's read-back would miss rows.
 
     State-partition count is pinned low for these run-to-completion
     fixture drains (each state partition costs a state-store instance
@@ -326,7 +330,8 @@ _SOURCE_SIZE_CACHE: dict[str, int] = {}  # path -> bytes; fixtures are
 # immutable for the life of the process (the _SCHEMA_CACHE /
 # functions.memo.sf_cached assumption) — the Hadoop-FS content-summary
 # probe costs several py4j round trips and every user-keyed drain made
-# two of them per build, five builds per bench query.
+# two of them per build, five builds per bench query.  Only successful
+# probes are kept, so a failed one is retried on the next call.
 
 
 def source_size(spark: SparkSession, source_path: str) -> int:
@@ -342,7 +347,7 @@ def source_size(spark: SparkSession, source_path: str) -> int:
     try:
         size = int(p.getFileSystem(conf).getContentSummary(p).getLength())
     except Exception:
-        size = 0
+        return 0
     _SOURCE_SIZE_CACHE[source_path] = size
     return size
 

@@ -10,11 +10,46 @@ import hbase_tools_spark.llm  # noqa: F401
 import hbase_tools_spark.streaming  # noqa: F401
 from hbase_tools_spark.registry import QUERIES
 
-from conftest import assert_query_matches_oracle
+from conftest import SF_DIR, assert_query_matches_oracle
 
 
 @pytest.mark.parametrize("name", sorted(QUERIES))
 def test_query_matches_oracle(spark, ducksql, name):
+    assert_query_matches_oracle(spark, ducksql, name)
+
+
+@pytest.fixture
+def compiled_posture(spark):
+    """Force the compiled codegen posture over the test fixture, which
+    ``load_model`` would run interpreted, and restore it after."""
+    from hbase_tools_spark import catalog as C
+
+    C.load_model(spark, SF_DIR)
+    compiled = C._CODEGEN_POSTURES["compiled"]
+    prev = {k: spark.conf.get(k) for k in compiled}
+    for k, v in compiled.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in prev.items():
+            spark.conf.set(k, v)
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "kv_admin_roundtrip",
+        "topology_diff",
+        "upsert_dedup",
+        "stream_funnel_stage",
+        "report_complex_rollup",
+        "salted_keys",
+    ],
+)
+def test_query_matches_oracle_compiled(spark, ducksql, compiled_posture, name):
+    """Tier-1 runs interpreted; the compiled path larger models take
+    must stay oracle-identical too."""
     assert_query_matches_oracle(spark, ducksql, name)
 
 

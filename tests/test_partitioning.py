@@ -125,19 +125,35 @@ def test_spread_if_undersplit_sizes_by_bytes(spark):
     assert n == expect > slots
 
 
-def test_autosize_shuffle_partitions_scales_with_bytes(spark, tmp_path):
+def test_autosize_shuffle_partitions_scales_with_bytes(spark, tmp_path, monkeypatch):
     """load_model sizes spark.sql.shuffle.partitions from fixture BYTES
     (round-10 verdict task 4: the sf10 certify OOMed because the knob
     was a pinned bench posture).  Rule: only ever RAISES, so a
     fixture-scale session keeps its tuned value; a fixture big enough
-    to demand more partitions gets ceil(bytes*expansion / 64MB)."""
+    to demand more partitions gets ceil(bytes*expansion / 64MB).  The
+    same bytes pick the codegen posture: interpreted up to the measured
+    break-even, compiled past it or when the size is unknown, set in
+    both directions on every registration."""
     import os
 
     from hbase_tools_spark import catalog as C
+    from hbase_tools_spark.model import BASE_TABLES
 
-    # fixture-scale: 17 MB * 6 / 64 MB < 4 -> the session's value stands
+    # the generated fixtures next to the test one, where present
+    fixtures = os.path.dirname(SF_DIR)
+    sf = {
+        n: os.path.join(fixtures, n)
+        for n in ("sf0.001", "sf0.01", "sf0.1")
+        if os.path.isdir(os.path.join(fixtures, n))
+    }
+    sizes = {n: C._model_bytes(d) for n, d in sf.items()}
+    sizes[SF_DIR] = C._model_bytes(SF_DIR)
+    assert all(b > 0 for b in sizes.values()), sizes
+
+    # fixture-scale: the largest generated fixture, sf0.1, is 17 MB;
+    # 17 MB * 6 / 64 MB < 4 -> the session's value stands
     prev = spark.conf.get("spark.sql.shuffle.partitions")
-    C._autosize_shuffle_partitions(spark, "/root/testdata/sf0.1")
+    C._autosize_shuffle_partitions(spark, max(sizes.values()))
     assert spark.conf.get("spark.sql.shuffle.partitions") == prev
 
     # large fixture (sparse files so the test costs no real disk):
@@ -147,8 +163,9 @@ def test_autosize_shuffle_partitions_scales_with_bytes(spark, tmp_path):
     f = big / "lineitem.parquet"
     with open(f, "wb") as fh:
         fh.truncate(10 * 1024**3)
+    big_bytes = C._model_bytes(str(big))
     try:
-        C._autosize_shuffle_partitions(spark, str(big))
+        C._autosize_shuffle_partitions(spark, big_bytes)
         assert int(spark.conf.get("spark.sql.shuffle.partitions")) == 960
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
@@ -156,7 +173,61 @@ def test_autosize_shuffle_partitions_scales_with_bytes(spark, tmp_path):
     # kill switch restores the pinned-knob behavior
     os.environ["SPARK_GRAFT_AUTOSHUFFLE"] = "off"
     try:
-        C._autosize_shuffle_partitions(spark, str(big))
+        C._autosize_shuffle_partitions(spark, big_bytes)
         assert spark.conf.get("spark.sql.shuffle.partitions") == prev
     finally:
         del os.environ["SPARK_GRAFT_AUTOSHUFFLE"]
+
+    # unknown size (a URI, or a walk that fails): the session's
+    # partitions stand, the posture is compiled, registration goes on
+    assert C._model_bytes("hdfs://namenode/warehouse/sf1") is None
+    assert C._model_bytes(str(tmp_path / "missing")) is None
+    C._autosize_shuffle_partitions(spark, None)
+    assert spark.conf.get("spark.sql.shuffle.partitions") == prev
+    assert C._codegen_posture(None) == "compiled"
+
+    # codegen posture: the generated fixtures run interpreted, the
+    # break-even is inclusive, the big dir runs compiled
+    for n in sf:
+        assert C._codegen_posture(sizes[n]) == "interpreted", n
+    assert C._codegen_posture(C._INTERPRETED_MAX_BYTES) == "interpreted"
+    assert C._codegen_posture(C._INTERPRETED_MAX_BYTES + 1) == "compiled"
+    assert C._codegen_posture(big_bytes) == "compiled"
+
+    # the running Spark must know the internal factoryMode key (and
+    # wholeStage): an upgrade that drops either fails here
+    for posture in C._CODEGEN_POSTURES.values():
+        for key in posture:
+            assert spark.conf.isModifiable(key), key
+
+    def posture_now():
+        return {k: spark.conf.get(k) for k in C._CODEGEN_POSTURES["compiled"]}
+
+    def plan_root():
+        df = spark.range(3).selectExpr("id + 1 AS x")
+        return df._jdf.queryExecution().executedPlan().getClass().getSimpleName()
+
+    def alias(name):
+        # a model dir of its own over the test fixture's tables
+        d = tmp_path / name
+        d.mkdir()
+        for t in BASE_TABLES:
+            (d / f"{t}.parquet").symlink_to(os.path.join(SF_DIR, f"{t}.parquet"))
+        return str(d)
+
+    # a small model then a large one in the same session: compiled again
+    small, large = alias("small"), alias("large")
+    try:
+        monkeypatch.setattr(C, "_model_bytes", lambda d: 1 << 20)
+        C.load_model(spark, small)
+        assert posture_now() == C._CODEGEN_POSTURES["interpreted"]
+        assert plan_root() == "ProjectExec"
+        monkeypatch.setattr(C, "_model_bytes", lambda d: big_bytes)
+        C.load_model(spark, large)
+        assert posture_now() == C._CODEGEN_POSTURES["compiled"]
+        assert plan_root() == "WholeStageCodegenExec"
+    finally:
+        monkeypatch.undo()
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+        C.load_model(spark, SF_DIR)
+    assert posture_now() == C._CODEGEN_POSTURES[C._codegen_posture(sizes[SF_DIR])]

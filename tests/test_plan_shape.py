@@ -304,3 +304,22 @@ def test_dir_shj_hint_is_size_guarded(spark, tmp_path):
     raw = [ln for ln in out.splitlines() if ln.strip()]
     allowed = [ln for ln in raw if "def _" in ln or "return df.hint" in ln]
     assert raw == allowed, f"unguarded shuffle_hash sites: {set(raw) - set(allowed)}"
+
+
+def test_codegen_confs_set_only_in_catalog():
+    """The codegen posture is chosen in one place: ``load_model`` picks
+    it from the model's bytes (``catalog._codegen_posture``).  No other
+    package module may mention a ``spark.sql.codegen.`` key, or a
+    request could silently flip the posture for every later one."""
+    import os
+    import subprocess
+
+    import hbase_tools_spark as pkg
+
+    root = os.path.dirname(os.path.abspath(pkg.__file__))
+    out = subprocess.run(
+        ["grep", "-rl", "--include=*.py", "spark.sql.codegen.", root],
+        capture_output=True, text=True,
+    ).stdout
+    files = sorted(os.path.relpath(p, root) for p in out.split())
+    assert files == ["catalog.py"], f"codegen confs set outside catalog.py: {files}"

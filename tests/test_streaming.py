@@ -972,3 +972,22 @@ def test_attribution_late_purchase_is_organic():
     out = feed([(600, 3, "purchase")])[0]
     assert out["attributed_to"][0] == "click"
     assert int(out["latency_us"][0]) == 100
+
+
+def test_source_size_retries_a_failed_probe(spark, tmp_path):
+    """A failed size probe must not be memoized: the first probe of a
+    missing feed reports 0, and once the file exists the next probe
+    returns its size (a cached 0 would pin drains to the memory sink
+    and the state-partition floor for the life of the process)."""
+    from hbase_tools_spark.streaming import jobs as J
+
+    feed = tmp_path / "events.parquet"
+    path = str(feed)
+    try:
+        assert J.source_size(spark, path) == 0
+        assert path not in J._SOURCE_SIZE_CACHE
+        feed.write_bytes(b"x" * 4096)
+        assert J.source_size(spark, path) == 4096
+        assert J._SOURCE_SIZE_CACHE[path] == 4096
+    finally:
+        J._SOURCE_SIZE_CACHE.pop(path, None)
