@@ -1,9 +1,9 @@
-"""Byte-level rowkey functions (M5): the only true scalar UDFs the engine
-needs (SURVEY.md §2.9) — everything else compiles to Column expressions.
-
-Implemented as Arrow-batched pandas UDFs (the fast Python path); the
-algorithms are pure byte manipulation re-derived from the reference's
-observable behavior:
+"""Byte-level rowkey functions (M5), re-derived from the reference's
+observable behavior.  The pure-Python functions are the golden source
+the oracle and the property tests use; the salted-key columns are
+native Column expressions over the same layout, and only
+``midpoint_key_hex`` (arbitrary-width integer math) is still an
+Arrow-batched pandas UDF:
 
 * X1 salted key (common/KeyGenerator.java:27-49): CRC32 of the UTF-8
   key gives 4 big-endian salt bytes; short keys (<4 bytes) get
@@ -23,6 +23,7 @@ from __future__ import annotations
 import zlib
 
 import pandas as pd
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType
 
@@ -59,14 +60,38 @@ def midpoint_key(start: bytes, end: bytes) -> bytes:
     return mid.to_bytes(width, "big")
 
 
-@F.pandas_udf(StringType())
-def salted_key_hex(keys: pd.Series) -> pd.Series:
-    return keys.map(lambda s: salt_key_bytes(s.encode("utf-8")).hex())
+def _salted_key_sql(key: str) -> str:
+    """SQL text of ``salt_key_bytes`` over the UTF-8 bytes of the string
+    column ``key`` (null in, null out)."""
+    b = f"CAST({key} AS BINARY)"
+    return (
+        f"concat(unhex(lpad(hex(crc32({b})), 8, '0')), "
+        f"CASE WHEN octet_length({b}) >= 4 "
+        f"THEN concat(substr({b}, -2, 2), substr({b}, -4, 2)) ELSE X'' END, "
+        f"{b})"
+    )
 
 
-@F.pandas_udf(StringType())
-def salted_key_printable(keys: pd.Series) -> pd.Series:
-    return keys.map(lambda s: to_string_binary(salt_key_bytes(s.encode("utf-8"))))
+# The salted-key columns are built from SQL text, not the Column API:
+# one parse instead of dozens of py4j round trips (both columns 39 vs
+# 93 ms per plan on a 4-vCPU VM).
+
+
+def salted_key_hex(key: str) -> Column:
+    """X1 salted key of the string column ``key``, lower-case hex."""
+    return F.expr(f"lower(hex({_salted_key_sql(key)}))")
+
+
+def salted_key_printable(key: str) -> Column:
+    """X1 salted key of the string column ``key`` in the X2 printable
+    form (``to_string_binary``).  The bytes are split as hex pairs
+    rather than indexed by position, so the salted key is computed
+    once per row, not once per byte inside the lambda."""
+    return F.expr(
+        f"array_join(transform(regexp_extract_all(hex({_salted_key_sql(key)}),"
+        " '(..)', 1), x -> CASE WHEN x BETWEEN '20' AND '7E' AND x != '5C'"
+        " THEN CAST(unhex(x) AS STRING) ELSE concat(chr(92), 'x', x) END), '')"
+    )
 
 
 @F.pandas_udf(StringType())

@@ -301,7 +301,7 @@ def server_prefix_resolve(m: Model) -> DataFrame:
     """F6 — resolve servers by host:port prefix; exactly one match is
     required (HBaseToolsHelper.java:54-94).  Emits match counts + the
     unambiguous flag instead of throwing."""
-    prefixes = m.spark.createDataFrame([("s1",), ("s2",), ("s",)], ["prefix"])
+    prefixes = m.spark.sql("SELECT * FROM VALUES ('s1'), ('s2'), ('s') AS p(prefix)")
     joined = prefixes.join(
         m.servers, F.col("server").startswith(F.col("prefix"))
     )

@@ -65,15 +65,15 @@ def salted_keys(m: Model) -> DataFrame:
     """X1+X2 — salted probe keys for customer names
     (common/KeyGenerator.java:27-49, KeyGeneratorRunner.java:8-15):
     CRC32-derived 4-byte salt + swapped-tail layout, rendered as hex and
-    HBase printable forms.  Arrow-batched pandas UDF — the vectorized
-    Python path; at 100 TB this stays fully data-parallel (pure per-row
+    HBase printable forms.  Native Column expressions, no Python
+    worker; at 100 TB this stays fully data-parallel (pure per-row
     function, no shuffle).  Deterministic key subset so the golden
     VALUES oracle hash-matches."""
     return m.customer.filter(F.col("c_custkey") < _N_SALT_KEYS).select(
         "c_custkey",
         F.col("c_name").alias("row_key"),
-        salted_key_hex(F.col("c_name")).alias("salted_hex"),
-        salted_key_printable(F.col("c_name")).alias("salted_printable"),
+        salted_key_hex("c_name").alias("salted_hex"),
+        salted_key_printable("c_name").alias("salted_printable"),
     )
 
 
@@ -89,8 +89,8 @@ def salted_keys_full(m: Model) -> DataFrame:
     return m.customer.select(
         "c_custkey",
         F.col("c_name").alias("row_key"),
-        salted_key_hex(F.col("c_name")).alias("salted_hex"),
-        salted_key_printable(F.col("c_name")).alias("salted_printable"),
+        salted_key_hex("c_name").alias("salted_hex"),
+        salted_key_printable("c_name").alias("salted_printable"),
     )
 
 

@@ -392,9 +392,13 @@ def table_lifecycle_roundtrip(m) -> DataFrame:
         replaced = _lifecycle_readout(spark, dst, "replaced")
         backup_r = _lifecycle_readout(spark, backup, "backup")
         drop_table(spark, src)  # SC9
-        gone = spark.createDataFrame(
-            [("dropped_src", 0 if not _exists(src) else -1, 0, 0)],
-            "stage string, n_rows long, row_digest long, n_tables long",
+        # a JVM-side row: a local-list createDataFrame is a PythonRDD,
+        # and every warm read would run it through a Python worker
+        gone = spark.range(1).selectExpr(
+            "'dropped_src' AS stage",
+            f"CAST({0 if not _exists(src) else -1} AS BIGINT) AS n_rows",
+            "CAST(0 AS BIGINT) AS row_digest",
+            "CAST(0 AS BIGINT) AS n_tables",
         )
         return [copied, replaced, backup_r, gone]
 

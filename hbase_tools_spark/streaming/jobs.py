@@ -158,30 +158,38 @@ def embeddings_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.readStream.schema(schema).parquet(stage)
 
 
-_STATE_PART_BYTES = 1 << 20  # ~1 MiB of source per state partition
+_STATE_PART_BYTES = 512 << 10  # 512 KiB of source per state partition
 
 
 def auto_state_partitions(spark: SparkSession, source_path: str) -> int:
-    """Size the state-partition count of a user-cardinality-linear
-    stateful drain to the stream's source volume: one partition per
-    ~MiB of source, floored at 2 (per-partition state-store lifecycle
-    dominates sub-second fixture drains — the measured knee behind the
-    old fixed 2) and capped at the scheduler parallelism.
+    """State-partition count of a user-keyed stateful drain (funnel,
+    attribution, session): ``clamp(ceil(feed_bytes / 512 KiB), 1,
+    defaultParallelism)``; a feed of unknown size (``source_size`` 0)
+    gets ``defaultParallelism``.  The one sizing rule: callers pass it
+    to ``run_to_table`` unchanged.
 
-    This is the round-9 answer to the round-8 'stream-drain bottleneck'
-    adjudication: the drain's python-stage parallelism IS the state-
-    partition count (frozen into the checkpoint at first run), not the
-    per-executor worker pool — re-measured on the 10x events fixture
-    (19 MiB), the funnel drain falls 30.8 -> 13.2 -> 8.1 -> 5.2 s at
-    2/4/8/16 partitions on local[16], while at constant 2 partitions
-    adding real executors (local-cluster 2x8, 4x4) changes nothing.
-    A production deployment sets this to cluster parallelism before
-    the first run; this helper is the fixture-calibrated stand-in."""
-    size = source_size(spark, source_path)
-    if size == 0:  # missing/remote-unreachable source: the old floor
-        return 2
+    Each state partition is one ``applyInPandasWithState`` task with
+    about 0.25 CPU-s of Python framework cost whatever its row count,
+    so a small feed wants few of them; a large one wants every core
+    (the drain's Python-stage parallelism IS the state-partition count,
+    frozen into the checkpoint at first run).  Measured per warm drain
+    on a 4-vCPU VM, ``local[4]``, host busy CPU-s (README, "Stateful
+    drain sizing"):
+
+    * sf0.01 (events 221 075 B -> 1 partition), 1 vs 4 partitions:
+      funnel 2.8-3.9 vs 4.3-5.9 CPU-s, attribution 2.1-2.7 vs 3.7-4.3
+      CPU-s, session 1.5-2.4 vs 2.2-3.1 CPU-s, wall equal or lower at 1;
+    * sf0.1 (events 2 045 762 B -> 4 partitions): session 1.8-2.5 s
+      wall at 4 partitions vs 2.8-3.6 s at 1.
+
+    Past that the count stays capped at the core count (on 10x events,
+    19 MiB, the funnel drain fell 30.8 -> 13.2 -> 8.1 -> 5.2 s at
+    2/4/8/16 partitions on local[16])."""
     cores = spark.sparkContext.defaultParallelism
-    return max(2, min(cores, int(size // _STATE_PART_BYTES)))
+    size = source_size(spark, source_path)
+    if size == 0:
+        return cores
+    return min(cores, -(-size // _STATE_PART_BYTES))  # ceil, >= 1
 
 
 def events_state_partitions(m) -> int:
@@ -244,13 +252,10 @@ def run_to_table(
     masters); on a multi-node cluster executors would commit the parquet
     files to their own disks and the driver's read-back would miss rows.
 
-    State-partition count is pinned low for these run-to-completion
-    fixture drains (each state partition costs a state-store instance
-    per stateful operator per batch; 32 of them dominate sub-second
-    streams — measured at sf0.1: 4 partitions cost ~0.2 s more per
-    drain than 2, and 1 regresses the high-cardinality session query).
-    A production deployment sizes it to cluster parallelism before the
-    FIRST run — it is fixed into the checkpoint.
+    ``state_partitions`` is fixed into the checkpoint at the first run;
+    each one costs a state-store instance per stateful operator per
+    batch.  The user-keyed drains size it with ``auto_state_partitions``;
+    the rest keep a small constant.
 
     ``extra_confs`` (e.g. ``ROCKSDB_STATE_CONF``) are applied for the
     drain and restored after — the state-store provider is per-query,
@@ -319,10 +324,9 @@ def run_to_table(
             spark.conf.unset(k) if v is None else spark.conf.set(k, v)
         shutil.rmtree(ckpt, ignore_errors=True)
     if spill:
-        try:
-            return spark.read.parquet(out_dir)
-        except Exception:  # zero-batch drain wrote nothing
-            return spark.createDataFrame([], stream_df.schema)
+        # The schema is given, so a zero-batch drain that wrote nothing
+        # reads back empty instead of failing schema inference.
+        return spark.read.schema(stream_df.schema).parquet(out_dir)
     return spark.table(name)
 
 
@@ -474,16 +478,9 @@ def stream_session_stats(m: Model) -> DataFrame:
             "total_value",
         )
     )
-    # 4 state partitions: session state keys on user_id (high
-    # cardinality) — the one drain where state work outweighs per-
-    # partition store lifecycle (measured 1.2 s vs 1.4 s at 2 parts).
-    # session state keys on user_id (high cardinality) — the one
-    # windowed drain where state work outweighs per-partition store
-    # lifecycle; sized to the events volume (>= 4 measured best at
-    # sf0.1, scaling up with the feed)
     return run_to_table(
         agg, "stream_session_stats", "complete",
-        state_partitions=max(4, events_state_partitions(m)),
+        state_partitions=events_state_partitions(m),
         # session output is corpus-scale (one row per session): past
         # fixture scale the result must not live on the driver heap
         source_bytes=events_source_bytes(m),

@@ -364,13 +364,9 @@ def stream_funnel_stage(m: Model) -> DataFrame:
         .where(F.col("event_type").isin(*FUNNEL_STAGES))
         .select("user_id", "event_type", F.unix_micros("ts").alias("tus"))
     )
-    # user-cardinality-linear state: parallelism = state partitions,
-    # sized to the feed (see auto_state_partitions — the round-9
-    # drain-scaling adjudication) with a floor of 4 (measured knee for
-    # the bucketed Python stage at sf0.1: 1.29 s @2 → 1.09 s @4 →
-    # 1.13 s @8, median-of-3 warm); bucket count scales with it so
-    # per-bucket state stays bounded as the feed grows.
-    parts = max(4, events_state_partitions(m))
+    # bucket count scales with the state partitions so per-bucket
+    # state stays bounded as the feed grows
+    parts = events_state_partitions(m)
     return run_to_table(
         funnel_stages(ev, buckets=_BUCKETS_PER_PARTITION * parts),
         "stream_funnel_stage", "append",
@@ -590,8 +586,8 @@ def stream_attribution(m: Model) -> DataFrame:
             F.unix_micros("ts").alias("tus"),
         )
     )
-    parts = max(4, events_state_partitions(m))  # same measured knee as
-    drained = run_to_table(                     # the funnel drain
+    parts = events_state_partitions(m)
+    drained = run_to_table(
         attribution_stream(ev, buckets=_BUCKETS_PER_PARTITION * parts),
         "stream_attribution", "append",
         state_partitions=parts,

@@ -144,3 +144,51 @@ def test_midpoint12_hex_seeded_vectors_vs_python(spark):
     for r in got:
         expect = midpoint_key(r["start_key"].encode(), r["end_key"].encode()).hex()
         assert r["h"] == expect, (r["start_key"], r["end_key"])
+
+
+def _native_salted(spark, keys):
+    """(hex, printable) of the native salted-key columns per key."""
+    from hbase_tools_spark.functions.keys import (
+        salted_key_hex,
+        salted_key_printable,
+    )
+
+    df = spark.createDataFrame([(i, k) for i, k in enumerate(keys)], "i int, k string")
+    rows = df.select(
+        "i", salted_key_hex("k").alias("h"), salted_key_printable("k").alias("p")
+    ).collect()
+    return [(r["h"], r["p"]) for r in sorted(rows, key=lambda r: r["i"])]
+
+
+def _check_native_salted(spark, keys):
+    for k, (h, p) in zip(keys, _native_salted(spark, keys)):
+        if k is None:
+            assert (h, p) == (None, None)
+            continue
+        raw = salt_key_bytes(k.encode("utf-8"))
+        assert h == raw.hex(), k
+        assert p == to_string_binary(raw), k
+
+
+def test_native_salted_keys_golden_vectors(spark):
+    _check_native_salted(
+        spark,
+        GOLDEN + ["b", "\\", "a\\b", "é", "日本", "\x00\x7f\x1f ~", None],
+    )
+
+
+@given(
+    st.lists(
+        st.one_of(
+            st.text(max_size=3),
+            st.text(alphabet=st.sampled_from("ab\\~ \x1f\x7féß日本😀"), max_size=24),
+            st.text(max_size=40),
+            st.none(),
+        ),
+        min_size=1,
+        max_size=40,
+    )
+)
+@settings(max_examples=25, deadline=None)
+def test_native_salted_keys_property(spark, keys):
+    _check_native_salted(spark, keys)

@@ -323,3 +323,18 @@ def test_codegen_confs_set_only_in_catalog():
     ).stdout
     files = sorted(os.path.relpath(p, root) for p in out.split())
     assert files == ["catalog.py"], f"codegen confs set outside catalog.py: {files}"
+
+
+@pytest.mark.parametrize(
+    "name", ["table_lifecycle_roundtrip", "server_prefix_resolve", "salted_keys"]
+)
+def test_admin_literals_and_keys_run_without_python_workers(spark, name):
+    """Literal rows and salted keys are JVM-side: no ``PythonRDD`` (a
+    local-list ``createDataFrame``) in the RDD lineage and no
+    ``EvalPython`` (a Python UDF) in the executed plan."""
+    import hbase_tools_spark.sources.tables  # noqa: F401 — registers queries
+
+    df = QUERIES[name].fn(load_model(spark, SF_DIR))
+    qe = df._jdf.queryExecution()
+    assert "PythonRDD" not in qe.toRdd().toDebugString()
+    assert "EvalPython" not in qe.executedPlan().toString()

@@ -978,7 +978,7 @@ def test_source_size_retries_a_failed_probe(spark, tmp_path):
     """A failed size probe must not be memoized: the first probe of a
     missing feed reports 0, and once the file exists the next probe
     returns its size (a cached 0 would pin drains to the memory sink
-    and the state-partition floor for the life of the process)."""
+    and the unknown-size partition count for the life of the process)."""
     from hbase_tools_spark.streaming import jobs as J
 
     feed = tmp_path / "events.parquet"
@@ -991,3 +991,72 @@ def test_source_size_retries_a_failed_probe(spark, tmp_path):
         assert J._SOURCE_SIZE_CACHE[path] == 4096
     finally:
         J._SOURCE_SIZE_CACHE.pop(path, None)
+
+
+def test_auto_state_partitions_sizes_to_the_feed(spark, monkeypatch):
+    """One partition per started 512 KiB of feed, clamped to
+    [1, defaultParallelism]; an unknown size (0) gets every core."""
+    from hbase_tools_spark.streaming import jobs as J
+
+    cores = spark.sparkContext.defaultParallelism
+    assert cores >= 4
+    for size, want in [
+        (0, cores),
+        (221_075, 1),  # sf0.01 events
+        (2_045_762, 4),  # sf0.1 events
+        (1 << 30, cores),
+    ]:
+        monkeypatch.setattr(J, "source_size", lambda _s, _p, n=size: n)
+        assert J.auto_state_partitions(spark, "events.parquet") == want, size
+
+
+@pytest.mark.parametrize(
+    "name", ["stream_funnel_stage", "stream_attribution", "stream_session_stats"]
+)
+def test_user_keyed_drains_pass_auto_state_partitions(spark, monkeypatch, name):
+    """The user-keyed drains hand ``auto_state_partitions`` to
+    ``run_to_table`` unchanged: no floor on top of the sizing rule."""
+    from hbase_tools_spark.catalog import load_model
+    from hbase_tools_spark.registry import QUERIES
+    from hbase_tools_spark.streaming import jobs as J
+
+    m = load_model(spark, SF_DIR)
+    want = J.auto_state_partitions(spark, os.path.join(SF_DIR, "events.parquet"))
+    seen = []
+
+    def capture(stream_df, _name, _mode, state_partitions=2, **_kw):
+        seen.append(state_partitions)
+        return stream_df  # lazy: nothing is drained
+
+    monkeypatch.setattr(J, "run_to_table", capture)
+    QUERIES[name].fn(m)
+    assert seen == [want]
+    if os.path.getsize(os.path.join(SF_DIR, "events.parquet")) <= 512 << 10:
+        assert want == 1
+
+
+def test_run_to_table_spill_sink_reads_back_rows_and_empty_drains(spark, tmp_path):
+    """Past ``_MEM_SINK_MAX_SOURCE_BYTES`` the drain spills to parquet:
+    it returns the memory sink's rows, and a drain that saw no batch
+    returns an empty relation with the stream's schema, no Python
+    worker involved."""
+    from hbase_tools_spark.streaming import jobs as J
+
+    schema = "k bigint, v string"
+    feed, empty = tmp_path / "feed", tmp_path / "empty"
+    empty.mkdir()
+    spark.createDataFrame([(1, "a"), (2, "b")], schema).write.parquet(str(feed))
+    big = J._MEM_SINK_MAX_SOURCE_BYTES + 1
+
+    def drain(path, name, source_bytes):
+        return J.run_to_table(
+            spark.readStream.schema(schema).parquet(str(path)),
+            name, "append", source_bytes=source_bytes,
+        )
+
+    spilled = drain(feed, "spill_rows", big)
+    assert sorted(spilled.collect()) == sorted(drain(feed, "mem_rows", 0).collect())
+    gone = drain(empty, "spill_empty", big)
+    assert gone.collect() == []
+    assert [f.name for f in gone.schema] == ["k", "v"]
+    assert "PythonRDD" not in gone._jdf.queryExecution().toRdd().toDebugString()
