@@ -799,20 +799,11 @@ def _lm_artifact_dir(m: Model) -> str:
     ``docs_ccnet_perplexity`` trains in-plan and memoizes the LM
     relations per documents-content; this twin is the PERSISTED shape
     — parquet on disk, survives the session.)"""
-    import tempfile
-
+    from ..functions import workdir
     from ..functions.memo import model_cached
 
     def build() -> str:
-        import atexit
-        import os
-        import shutil
-
-        base = "/dev/shm" if os.path.isdir("/dev/shm") else None
-        out = tempfile.mkdtemp(prefix="ppl_lm_", dir=base)
-        # tmpfs survives process exit — without cleanup every bench/test
-        # process leaks a RAM-backed LM artifact until reboot.
-        atexit.register(shutil.rmtree, out, ignore_errors=True)
+        out = workdir.scratch(m.spark, "ppl_lm_")
         materialize_ppl_lm(m.documents, out)
         return out
 
@@ -1807,18 +1798,11 @@ def _lr_weights_dir(m: Model) -> str:
     dir) into scratch and memoize the path — the ``_lm_artifact_dir``
     convention: in production the artifact exists before any query
     runs, so the serving query's measured cost is scoring alone."""
-    import tempfile
-
+    from ..functions import workdir
     from ..functions.memo import model_cached
 
     def build() -> str:
-        import atexit
-        import os
-        import shutil
-
-        base = "/dev/shm" if os.path.isdir("/dev/shm") else None
-        out = tempfile.mkdtemp(prefix="lr_weights_", dir=base)
-        atexit.register(shutil.rmtree, out, ignore_errors=True)
+        out = workdir.scratch(m.spark, "lr_weights_")
         materialize_lr_weights(m.documents, out)
         return out
 

@@ -2158,26 +2158,18 @@ def _stream_signature_store_dir(m: Model) -> str:
     ingest once per fixture dir and memoize the store path (sf_dir
     keyed because the stream reads the on-disk fixture; consumers
     assert the registered view mirrors it)."""
-    import atexit
-    import os
-    import shutil
-    import tempfile
-
+    from ..functions import workdir
     from ..functions.memo import sf_cached
     from ..streaming.jobs import documents_stream
 
     def build() -> str:
-        base = "/dev/shm" if os.path.isdir("/dev/shm") else None
-        out = tempfile.mkdtemp(prefix="sig_stream_store_", dir=base)
-        atexit.register(shutil.rmtree, out, ignore_errors=True)
-        ckpt = tempfile.mkdtemp(prefix="sig_stream_ckpt_", dir=base)
-        atexit.register(shutil.rmtree, ckpt, ignore_errors=True)
-        q = signature_ingest_stream(
-            documents_stream(m.spark, m.sf_dir).select("doc_id", "text"),
-            out,
-            ckpt,
-        )
-        q.awaitTermination()
+        out = workdir.scratch(m.spark, "sig_stream_store_")
+        with workdir.temp(m.spark, "sig_stream_ckpt_") as ckpt:
+            signature_ingest_stream(
+                documents_stream(m.spark, m.sf_dir).select("doc_id", "text"),
+                out,
+                ckpt,
+            ).awaitTermination()
         return out
 
     return sf_cached(m.sf_dir, "sig_stream_store_dir", build)

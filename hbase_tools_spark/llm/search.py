@@ -1141,18 +1141,11 @@ def _index_artifact_dir(m: Model) -> str:
     fingerprints the analyzed plan), so a test that re-registers the
     view under the same sf_dir rebuilds instead of serving stale
     postings (round-5 advice)."""
-    import tempfile
-
+    from ..functions import workdir
     from ..functions.memo import model_cached
 
     def build() -> str:
-        import atexit
-        import os
-        import shutil
-
-        base = "/dev/shm" if os.path.isdir("/dev/shm") else None
-        out = tempfile.mkdtemp(prefix="bm25_index_", dir=base)
-        atexit.register(shutil.rmtree, out, ignore_errors=True)
+        out = workdir.scratch(m.spark, "bm25_index_")
         materialize_inverted_index(m.documents, out)
         return out
 
@@ -1299,27 +1292,18 @@ def _stream_index_artifact_dir(m: Model) -> str:
     fingerprint-keyed rebuild could never legitimately see different
     data (round-6 ADVICE: the old content-keyed memo re-built from the
     OLD files after a view swap — now it raises instead)."""
-    import tempfile
-
+    from ..functions import workdir
     from ..functions.memo import sf_cached
     from ..streaming.jobs import documents_stream
 
     def build() -> str:
-        import atexit
-        import os
-        import shutil
-
-        base = "/dev/shm" if os.path.isdir("/dev/shm") else None
-        out = tempfile.mkdtemp(prefix="bm25_stream_index_", dir=base)
-        atexit.register(shutil.rmtree, out, ignore_errors=True)
-        ckpt = tempfile.mkdtemp(prefix="bm25_stream_ckpt_", dir=base)
-        atexit.register(shutil.rmtree, ckpt, ignore_errors=True)
-        q = index_ingest_stream(
-            documents_stream(m.spark, m.sf_dir).select("doc_id", "text"),
-            out,
-            ckpt,
-        )
-        q.awaitTermination()
+        out = workdir.scratch(m.spark, "bm25_stream_index_")
+        with workdir.temp(m.spark, "bm25_stream_ckpt_") as ckpt:
+            index_ingest_stream(
+                documents_stream(m.spark, m.sf_dir).select("doc_id", "text"),
+                out,
+                ckpt,
+            ).awaitTermination()
         return out
 
     return sf_cached(m.sf_dir, "bm25_stream_index_dir", build)

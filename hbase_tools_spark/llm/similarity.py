@@ -2308,30 +2308,24 @@ def _stream_ivf_index_dir(m: Model) -> str:
     stream only ever assigns.  Keyed on sf_dir because the build reads
     the on-disk fixture; every consumer first asserts the registered
     view mirrors it (catalog.assert_view_matches_fixture)."""
-    import atexit
     import os
-    import shutil
-    import tempfile
 
+    from ..functions import workdir
     from ..functions.memo import sf_cached
     from ..streaming.jobs import embeddings_stream
 
     def build() -> str:
-        base = "/dev/shm" if os.path.isdir("/dev/shm") else None
-        out = tempfile.mkdtemp(prefix="ivf_stream_index_", dir=base)
-        atexit.register(shutil.rmtree, out, ignore_errors=True)
-        ckpt = tempfile.mkdtemp(prefix="ivf_stream_ckpt_", dir=base)
-        atexit.register(shutil.rmtree, ckpt, ignore_errors=True)
+        out = workdir.scratch(m.spark, "ivf_stream_index_")
         emb = m.spark.read.parquet(os.path.join(m.sf_dir, "embeddings.parquet"))
         cent = _label_centroids(emb)
         cent_rows = [(int(r["label"]), list(r["c"])) for r in cent.collect()]
         cent.select(F.col("label").alias("cell"), "c").write.mode(
             "overwrite"
         ).parquet(out + "/centroids")
-        q = ivf_ingest_stream(
-            embeddings_stream(m.spark, m.sf_dir), out, ckpt, cent_rows
-        )
-        q.awaitTermination()
+        with workdir.temp(m.spark, "ivf_stream_ckpt_") as ckpt:
+            ivf_ingest_stream(
+                embeddings_stream(m.spark, m.sf_dir), out, ckpt, cent_rows
+            ).awaitTermination()
         return out
 
     return sf_cached(m.sf_dir, "ivf_stream_index_dir", build)

@@ -166,9 +166,7 @@ def _topology_store(m) -> tuple:
     partition store, built once per topology content: bulk partitioned
     append of the 48h window minus the newest epoch, the newest epoch
     through the real ``snapshot_topology`` sink, then TTL expiry."""
-    import atexit
-    import tempfile
-
+    from ..functions import workdir
     from ..functions.memo import model_cached
 
     spark = m.spark
@@ -181,8 +179,7 @@ def _topology_store(m) -> tuple:
         )
         me = topo.agg(F.max("e")).collect()[0][0]  # 1-row bounded probe
         recent = topo.where(F.col("e") > me - _STORE_WINDOW_SEC)
-        store = tempfile.mkdtemp(prefix="topology_store_")
-        atexit.register(shutil.rmtree, store, ignore_errors=True)
+        store = workdir.scratch(spark, "topology_store_")
         # bulk history: one partitioned append (the layout SC5 creates)
         (
             recent.where(F.col("e") < me)
@@ -373,16 +370,13 @@ def table_lifecycle_roundtrip(m) -> DataFrame:
     copies per invocation would measure re-doing the action); repeat
     invocations serve the checkpointed stage records, and the cold run
     carries the action cost (functions/memo.py)."""
-    import atexit
-    import tempfile
-
+    from ..functions import workdir
     from ..functions.memo import model_cached
 
     spark = m.spark
 
     def run_lifecycle() -> list:
-        work = tempfile.mkdtemp(prefix="tbl_lifecycle_")
-        atexit.register(shutil.rmtree, work, ignore_errors=True)
+        work = workdir.scratch(spark, "tbl_lifecycle_")
         src, dst, newver = f"{work}/src", f"{work}/dst", f"{work}/newver"
         m.meta_regions.write.parquet(src)
         copy_table(spark, src, dst)  # SC7

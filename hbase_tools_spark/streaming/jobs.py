@@ -29,21 +29,20 @@ path, exercised in tests where batch boundaries are controlled.
 from __future__ import annotations
 
 import os
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import Model
+from ..functions import workdir
 from ..functions.exprs import dsum, epoch_bigint
 from ..registry import query
 
 _GAP_MIN = 10  # session-window gap (minutes)
 
-# Ephemeral one-shot checkpoints go to tmpfs when available (offset/
-# commit/state logs are many tiny fsynced files).
-_CKPT_BASE = "/dev/shm" if os.path.isdir("/dev/shm") else None
-
-_SCHEMA_CACHE: dict[str, object] = {}  # fixture path -> StructType
+# fixture path -> (stage dir, StructType); staged once per process
+_STAGED: dict[str, tuple[str, object]] = {}
 
 
 #: Production state-store configuration (large state): RocksDB keeps
@@ -74,13 +73,7 @@ def _stage_links(path: str, stage: str, prefix: str) -> None:
     fixture's parquet part file(s).  A scaled fixture stores a table as
     a parquet DIRECTORY — a single symlink to it would be silently
     skipped by the file-stream source (it lists plain files only), so
-    each part file is linked individually; stale directory-links from
-    an older staging scheme are dropped."""
-    os.makedirs(stage, exist_ok=True)
-    for f in os.listdir(stage):
-        fp = os.path.join(stage, f)
-        if os.path.islink(fp) and os.path.isdir(fp):
-            os.unlink(fp)
+    each part file is linked individually."""
     if os.path.isdir(path):
         srcs = [
             os.path.join(path, f)
@@ -90,11 +83,21 @@ def _stage_links(path: str, stage: str, prefix: str) -> None:
     else:
         srcs = [path]
     for i, src in enumerate(srcs):
-        link = os.path.join(stage, f"{prefix}-{i:03d}.parquet")
-        try:
-            os.symlink(src, link)
-        except FileExistsError:
-            pass  # another session staged it already
+        os.symlink(src, os.path.join(stage, f"{prefix}-{i:03d}.parquet"))
+
+
+def _staged(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
+    """``readStream`` over a fixture table.  The file-stream source
+    needs a *directory*, so the (read-only) fixture file(s) are linked
+    into a scratch stage dir once per process; in production the feed
+    is already a directory of arriving files."""
+    path = os.path.join(sf_dir, f"{table}.parquet")
+    if path not in _STAGED:
+        stage = workdir.scratch(spark, f"stream_{table}_")
+        _stage_links(path, stage, table)
+        _STAGED[path] = (stage, spark.read.parquet(path).schema)
+    stage, schema = _STAGED[path]
+    return spark.readStream.schema(schema).parquet(stage)
 
 
 def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -103,18 +106,7 @@ def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     sf0.1) so streaming and batch plans see identical rows."""
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    path = os.path.join(sf_dir, "events.parquet")
-    # The file-stream source needs a *directory*; stage one holding
-    # symlinks to the (read-only) fixture file(s).  In production the
-    # feed is already a directory of arriving files.
-    stage = os.path.join(
-        "/tmp", "hbase_tools_stream", sf_dir.strip("/").replace("/", "_")
-    )
-    _stage_links(path, stage, "events")
-    schema = _SCHEMA_CACHE.get(path)
-    if schema is None:
-        schema = _SCHEMA_CACHE[path] = spark.read.parquet(path).schema
-    df = spark.readStream.schema(schema).parquet(stage)
+    df = _staged(spark, sf_dir, "events")
     dtype = dict(df.dtypes)["ts"]
     if dtype == "bigint":
         df = df.withColumn("ts", F.timestamp_micros(F.expr("ts DIV 1000")))
@@ -126,36 +118,14 @@ def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 def documents_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``readStream`` over the documents fixture — the arriving-corpus
     feed for streaming corpus telemetry (no timestamp column, so no
-    normalization; schema comes from the batch reader like
-    ``events_stream``)."""
-    path = os.path.join(sf_dir, "documents.parquet")
-    stage = os.path.join(
-        "/tmp",
-        "hbase_tools_stream",
-        sf_dir.strip("/").replace("/", "_") + "_documents",
-    )
-    _stage_links(path, stage, "documents")
-    schema = _SCHEMA_CACHE.get(path)
-    if schema is None:
-        schema = _SCHEMA_CACHE[path] = spark.read.parquet(path).schema
-    return spark.readStream.schema(schema).parquet(stage)
+    normalization)."""
+    return _staged(spark, sf_dir, "documents")
 
 
 def embeddings_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``readStream`` over the embeddings fixture — the arriving-vector
-    feed for the streaming ANN-index ingest (round 7; same staging as
-    ``documents_stream``)."""
-    path = os.path.join(sf_dir, "embeddings.parquet")
-    stage = os.path.join(
-        "/tmp",
-        "hbase_tools_stream",
-        sf_dir.strip("/").replace("/", "_") + "_embeddings",
-    )
-    _stage_links(path, stage, "embeddings")
-    schema = _SCHEMA_CACHE.get(path)
-    if schema is None:
-        schema = _SCHEMA_CACHE[path] = spark.read.parquet(path).schema
-    return spark.readStream.schema(schema).parquet(stage)
+    feed for the streaming ANN-index ingest (round 7)."""
+    return _staged(spark, sf_dir, "embeddings")
 
 
 _STATE_PART_BYTES = 512 << 10  # 512 KiB of source per state partition
@@ -246,11 +216,9 @@ def run_to_table(
     ``foreachBatch`` — identical rows (complete mode overwrites with
     the batch's full result, append/update append exactly the rows the
     memory sink would have appended), but written executor-side so the
-    result never lives on the driver heap.  The spill directory is a
-    driver-local ``mkdtemp``, so the spill path is only correct when
-    executors share the driver's filesystem (local and local-cluster
-    masters); on a multi-node cluster executors would commit the parquet
-    files to their own disks and the driver's read-back would miss rows.
+    result never lives on the driver heap.  The spill directory and
+    the checkpoint are ``functions.workdir`` scratch dirs, which holds
+    the shared-filesystem check.  A drain that raises removes both.
 
     ``state_partitions`` is fixed into the checkpoint at the first run;
     each one costs a state-store instance per stateful operator per
@@ -260,10 +228,9 @@ def run_to_table(
     ``extra_confs`` (e.g. ``ROCKSDB_STATE_CONF``) are applied for the
     drain and restored after — the state-store provider is per-query,
     chosen at first start."""
-    import shutil
-    import tempfile
-
     spark = stream_df.sparkSession
+    spill = source_bytes > _MEM_SINK_MAX_SOURCE_BYTES
+    out_dir = workdir.scratch(spark, f"sink_{name}_") if spill else None
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     prev_nodata = spark.conf.get(
         "spark.sql.streaming.noDataMicroBatches.enabled", "true"
@@ -278,43 +245,41 @@ def run_to_table(
     # to advance watermarks on idle CONTINUOUS streams); skipping it
     # saves one full micro-batch round-trip per drain (~10% measured).
     spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    # One-shot drains write offset/commit/state logs as many tiny
-    # fsynced files; tmpfs cuts that to memory speed.  Fresh dir per
-    # run — reusing a committed checkpoint would make availableNow a
-    # no-op and leave the memory sink empty.
-    ckpt = tempfile.mkdtemp(prefix="hbase_tools_ckpt_", dir=_CKPT_BASE)
-    spill = source_bytes > _MEM_SINK_MAX_SOURCE_BYTES
-    out_dir = None
     try:
-        if spill:
-            import atexit
+        # Fresh checkpoint per run — reusing a committed one would make
+        # availableNow a no-op and leave the memory sink empty.
+        with workdir.temp(spark, "ckpt_") as ckpt:
+            if spill:
+                write_mode = (
+                    "overwrite" if output_mode == "complete" else "append"
+                )
 
-            out_dir = tempfile.mkdtemp(prefix=f"hbase_tools_sink_{name}_")
-            atexit.register(shutil.rmtree, out_dir, ignore_errors=True)
-            write_mode = "overwrite" if output_mode == "complete" else "append"
+                def _sink(batch_df: DataFrame, _batch_id: int) -> None:
+                    batch_df.write.mode(write_mode).parquet(out_dir)
 
-            def _sink(batch_df: DataFrame, _batch_id: int) -> None:
-                batch_df.write.mode(write_mode).parquet(out_dir)
-
-            writer = stream_df.writeStream.foreachBatch(_sink).outputMode(
-                output_mode
+                writer = stream_df.writeStream.foreachBatch(_sink).outputMode(
+                    output_mode
+                )
+            else:
+                writer = (
+                    stream_df.writeStream.format("memory")
+                    .queryName(name)
+                    .outputMode(output_mode)
+                )
+            q = (
+                writer.option("checkpointLocation", ckpt)
+                .trigger(availableNow=True)
+                .start()
             )
-        else:
-            writer = (
-                stream_df.writeStream.format("memory")
-                .queryName(name)
-                .outputMode(output_mode)
-            )
-        q = (
-            writer.option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        try:
-            LAST_DRAIN_PROGRESS[:] = list(q.recentProgress)
-        except Exception:
-            LAST_DRAIN_PROGRESS[:] = []
+            q.awaitTermination()
+            try:
+                LAST_DRAIN_PROGRESS[:] = list(q.recentProgress)
+            except Exception:
+                LAST_DRAIN_PROGRESS[:] = []
+    except BaseException:
+        if out_dir is not None:
+            shutil.rmtree(out_dir, ignore_errors=True)
+        raise
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
         spark.conf.set(
@@ -322,7 +287,6 @@ def run_to_table(
         )
         for k, v in prev_extra.items():
             spark.conf.unset(k) if v is None else spark.conf.set(k, v)
-        shutil.rmtree(ckpt, ignore_errors=True)
     if spill:
         # The schema is given, so a zero-batch drain that wrote nothing
         # reads back empty instead of failing schema inference.
@@ -331,7 +295,7 @@ def run_to_table(
 
 
 _SOURCE_SIZE_CACHE: dict[str, int] = {}  # path -> bytes; fixtures are
-# immutable for the life of the process (the _SCHEMA_CACHE /
+# immutable for the life of the process (the _STAGED /
 # functions.memo.sf_cached assumption) — the Hadoop-FS content-summary
 # probe costs several py4j round trips and every user-keyed drain made
 # two of them per build, five builds per bench query.  Only successful
@@ -563,13 +527,11 @@ def compaction_plan_stream(
     never touches the driver — each batch's recompute is written
     distributed (executor → sink), so sink size scales with the plan
     relation, not driver memory."""
-    import tempfile
-
     from ..catalog import load_model
     from ..registry import QUERIES
 
     if sink_path is None:
-        sink_path = tempfile.mkdtemp(prefix="hbase_tools_plan_sink_")
+        sink_path = workdir.scratch(spark, "plan_sink_")
 
     def refresh(batch_df: DataFrame, batch_id: int) -> None:
         model = load_model(batch_df.sparkSession, sf_dir)

@@ -338,3 +338,49 @@ def test_admin_literals_and_keys_run_without_python_workers(spark, name):
     qe = df._jdf.queryExecution()
     assert "PythonRDD" not in qe.toRdd().toDebugString()
     assert "EvalPython" not in qe.executedPlan().toString()
+
+
+def test_scratch_dirs_come_from_the_one_work_root():
+    """Only ``functions/workdir.py`` makes scratch directories: no other
+    package file may call ``mkdtemp``, probe ``/dev/shm``, register an
+    ``atexit`` hook or name a ``"/tmp"`` path."""
+    import os
+    import subprocess
+
+    from hbase_tools_spark.functions import workdir
+
+    pkg = os.path.dirname(os.path.dirname(os.path.abspath(workdir.__file__)))
+    out = subprocess.run(
+        ["grep", "-rlE", "--include=*.py", r"""mkdtemp|/dev/shm|atexit|["']/tmp["']""", pkg],
+        capture_output=True, text=True,
+    ).stdout
+    assert out.split() == [os.path.abspath(workdir.__file__)]
+
+
+def test_stream_stage_and_plan_sink_live_under_the_work_root(spark):
+    """The stream stage dir and the plan-refresh sink both lie under
+    ``workdir.root``, not under a hard-coded ``/tmp`` path."""
+    import os
+    from urllib.parse import urlparse
+
+    from hbase_tools_spark.functions import workdir
+    from hbase_tools_spark.streaming import jobs as J
+
+    root = workdir.root(spark) + os.sep
+    sink = J.compaction_plan_stream(spark, SF_DIR).inputFiles()
+    assert sink and all(urlparse(f).path.startswith(root) for f in sink)
+    J.events_stream(spark, SF_DIR)
+    stage, _ = J._STAGED[os.path.join(SF_DIR, "events.parquet")]
+    assert stage.startswith(root)
+
+
+def test_work_root_refuses_a_non_local_master():
+    """Scratch paths are driver-local, so a non-local master (executors
+    on other hosts) is refused with the shared-filesystem reason."""
+    from types import SimpleNamespace
+
+    from hbase_tools_spark.functions import workdir
+
+    stub = SimpleNamespace(sparkContext=SimpleNamespace(master="spark://h:7077"))
+    with pytest.raises(RuntimeError, match="share the driver's filesystem"):
+        workdir.root(stub)

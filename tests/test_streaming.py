@@ -1060,3 +1060,27 @@ def test_run_to_table_spill_sink_reads_back_rows_and_empty_drains(spark, tmp_pat
     assert gone.collect() == []
     assert [f.name for f in gone.schema] == ["k", "v"]
     assert "PythonRDD" not in gone._jdf.queryExecution().toRdd().toDebugString()
+
+
+@pytest.mark.parametrize("spill", [False, True], ids=["memory", "spill"])
+def test_run_to_table_failed_drain_leaves_no_scratch_dir(spark, tmp_path, spill):
+    """A drain whose batch raises propagates the error and removes its
+    checkpoint, and in spill mode the sink directory too: the scratch
+    root holds no more entries than before."""
+    from hbase_tools_spark.functions import workdir
+    from hbase_tools_spark.streaming import jobs as J
+
+    schema = "k bigint, v string"
+    feed = tmp_path / "feed"
+    spark.createDataFrame([(1, "a"), (2, "b")], schema).write.parquet(str(feed))
+    stream = spark.readStream.schema(schema).parquet(str(feed)).withColumn(
+        "ok", F.assert_true(F.col("k") < 0, F.lit("injected batch failure"))
+    )
+    root = workdir.root(spark)
+    before = len(os.listdir(root))
+    with pytest.raises(Exception, match="injected batch failure"):
+        J.run_to_table(
+            stream, f"failed_drain_{int(spill)}", "append",
+            source_bytes=J._MEM_SINK_MAX_SOURCE_BYTES + 1 if spill else 0,
+        )
+    assert len(os.listdir(root)) <= before
