@@ -1,9 +1,7 @@
 """Byte-level rowkey functions (M5), re-derived from the reference's
 observable behavior.  The pure-Python functions are the golden source
 the oracle and the property tests use; the salted-key columns are
-native Column expressions over the same layout, and only
-``midpoint_key_hex`` (arbitrary-width integer math) is still an
-Arrow-batched pandas UDF:
+native Column expressions over the same layout:
 
 * X1 salted key (common/KeyGenerator.java:27-49): CRC32 of the UTF-8
   key gives 4 big-endian salt bytes; short keys (<4 bytes) get
@@ -22,10 +20,8 @@ from __future__ import annotations
 
 import zlib
 
-import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql.types import StringType
 
 
 def salt_key_bytes(key: bytes) -> bytes:
@@ -50,7 +46,9 @@ def to_string_binary(b: bytes) -> str:
 
 def midpoint_key(start: bytes, end: bytes) -> bytes:
     """X4 — arithmetic midpoint of [start, end) as big-endian unsigned
-    integers; empty end means 'unbounded' -> 8 x 0xFF."""
+    integers; empty end means 'unbounded' -> 8 x 0xFF.  No query calls
+    it: it is the arbitrary-width reference the JVM
+    ``keyspace._midpoint12_hex`` is pinned against (tests/test_keys.py)."""
     if end == b"":
         end = b"\xff" * 8
     width = max(len(start), len(end), 1)
@@ -91,14 +89,4 @@ def salted_key_printable(key: str) -> Column:
         f"array_join(transform(regexp_extract_all(hex({_salted_key_sql(key)}),"
         " '(..)', 1), x -> CASE WHEN x BETWEEN '20' AND '7E' AND x != '5C'"
         " THEN CAST(unhex(x) AS STRING) ELSE concat(chr(92), 'x', x) END), '')"
-    )
-
-
-@F.pandas_udf(StringType())
-def midpoint_key_hex(start: pd.Series, end: pd.Series) -> pd.Series:
-    return pd.Series(
-        [
-            midpoint_key(s.encode("utf-8"), e.encode("utf-8")).hex()
-            for s, e in zip(start, end)
-        ]
     )

@@ -4,11 +4,6 @@ The reference relies on HBase's physical layout: tables pre-split into
 key ranges (regions), one work queue per server, salts prepended to hot
 keys (common/KeyGenerator.java:27-49).  The Spark analogs:
 
-- ``repartition_by_bounds`` — co-locate rows by explicit split points,
-  mirroring region pre-splits (deterministic, unlike sample-based
-  ``repartitionByRange``);
-- ``salted_join`` — hot-key equi-join: salt the big side, replicate the
-  small side across salts, join on (key, salt);
 - ``two_phase_agg`` — skewed aggregation: partial agg on (key, salt),
   final agg on key; the map-side combine Catalyst already does, made
   explicit for aggregates that shuffle raw rows (collect_list etc.).
@@ -19,54 +14,8 @@ results are reproducible and oracle-testable.
 
 from __future__ import annotations
 
-from functools import reduce
-
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def bucket_by_bounds(key: Column, bounds: list) -> Column:
-    """Bucket index for explicit ascending split points: number of
-    bounds <= key (0..len(bounds)).  Equal keys always share a bucket,
-    so downstream per-bucket work is co-located — the region pre-split
-    contract."""
-    if not bounds:
-        return F.lit(0)
-    return reduce(
-        lambda acc, b: acc + F.when(key >= F.lit(b), 1).otherwise(0),
-        bounds,
-        F.lit(0),
-    )
-
-
-def repartition_by_bounds(df: DataFrame, key_col: str, bounds: list) -> DataFrame:
-    """Repartition so each explicit key range [bounds[i], bounds[i+1])
-    lands in its own partition."""
-    n = len(bounds) + 1
-    return (
-        df.withColumn("__bucket", bucket_by_bounds(F.col(key_col), bounds))
-        .repartition(n, "__bucket")
-        .drop("__bucket")
-    )
-
-
-def salted_join(
-    big: DataFrame, small: DataFrame, key: str, n_salts: int = 8, how: str = "inner"
-) -> DataFrame:
-    """Equi-join resilient to hot keys: the big side gets a
-    deterministic per-row salt in [0, n_salts); the small side is
-    replicated across all salts; the join keys on (key, salt) so a hot
-    key's rows spread over n_salts reducers.  Output equals the plain
-    join (salt columns are dropped)."""
-    salt = F.pmod(
-        F.xxhash64(*[F.col(c) for c in big.columns]), F.lit(n_salts)
-    ).alias("__salt")
-    big_s = big.withColumn("__salt", salt)
-    salts = big_s.sparkSession.range(n_salts).select(
-        F.col("id").cast("int").alias("__salt")
-    )
-    small_s = small.crossJoin(F.broadcast(salts))
-    return big_s.join(small_s, [key, "__salt"], how).drop("__salt")
 
 
 def two_phase_agg(

@@ -13,8 +13,6 @@ AQE skew-join handles residual hot buckets.
 
 from __future__ import annotations
 
-import math
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -63,23 +61,6 @@ def _corpus_shj(df: DataFrame, m: Model) -> DataFrame:
         return df  # unknown size: take the spill-safe plan
     return df.hint("shuffle_hash") if size <= _SHJ_DOCS_BYTES else df
 
-
-def _dir_shj(df: DataFrame, spark, path: str) -> DataFrame:
-    """``_corpus_shj`` for a build side read from a persisted artifact
-    directory (the novelty-ingest indexes): hint ``shuffle_hash`` only
-    while the directory's bytes stay under the same fixture-scale
-    threshold; above it fall back to the planner's sort-merge, which
-    SPILLS where a forced hash build OOMs.  Sizing goes through the
-    Hadoop FS because ingest indexes may live on hdfs/s3 paths a
-    driver-local stat cannot see (the _fs_exists lesson)."""
-    try:
-        jvm = spark.sparkContext._jvm
-        conf = spark.sparkContext._jsc.hadoopConfiguration()
-        p = jvm.org.apache.hadoop.fs.Path(path)
-        size = p.getFileSystem(conf).getContentSummary(p).getLength()
-    except Exception:
-        return df  # unknown size: take the spill-safe plan
-    return df.hint("shuffle_hash") if size <= _SHJ_DOCS_BYTES else df
 
 # Shared shingle CTE (DuckDB dialect); Spark side built with
 # sequence/transform below — both produce identical shingle strings.
@@ -292,8 +273,8 @@ def _signatures_for(docs: DataFrame) -> DataFrame:
 # bucket that hot means a near-identical cluster, which exact dedup
 # catches far more cheaply).  The cap is applied identically in the
 # oracle SQL so the parity gate covers the capped semantics; dropped
-# buckets are observable via :func:`lsh_hot_buckets` /
-# ``lsh_bucket_stats`` rather than silently vanishing.
+# buckets are observable via ``lsh_bucket_stats`` rather than silently
+# vanishing.
 _BUCKET_CAP = 100
 
 _BANDS_SQL = f"""
@@ -322,85 +303,10 @@ JOIN bands b ON a.band = b.band AND a.band_hash = b.band_hash
 """
 
 
-def materialize_signatures(docs: DataFrame, out_dir: str) -> None:
-    """Persist the MinHash signature relation (doc_id, sig) as parquet —
-    the production shape: signatures are an INDEX computed once per
-    corpus snapshot, not a per-query recompute.  Incremental ingest
-    appends new docs' signatures; banding/pairing then reads the index
-    (``pairs_from_signatures``)."""
-    _signatures_for(docs).write.mode("overwrite").parquet(out_dir)
-
-
 def pairs_from_signatures(sig: DataFrame, cap: int = _BUCKET_CAP) -> DataFrame:
     """Candidate pairs from a (doc_id, sig) relation — e.g. the
-    persisted index written by :func:`materialize_signatures`."""
+    persisted store ``signature_ingest_batch`` writes."""
     return _pairs_from_bands(_bands_from_sig(sig), cap)
-
-
-def incremental_pairs(
-    index_sig: DataFrame,
-    new_docs: DataFrame | None,
-    cap: int = _BUCKET_CAP,
-    new_sig: DataFrame | None = None,
-) -> DataFrame:
-    """Incremental ingest dedup: candidate pairs INVOLVING a new doc —
-    new×indexed plus new×new — without re-enumerating the indexed
-    corpus against itself.
-
-    The join keys new band rows against the union'd band relation and
-    keeps pairs with at least one new doc, so the per-batch cost scales
-    with |new| × bucket width, not |corpus|²; combined with the pairs
-    already recorded for the index, the result equals a full
-    re-pairing of index+new (asserted in tests/test_llm.py).  The
-    hot-bucket cap applies to the UNION bucket size, so a bucket that
-    crosses the cap at ingest emits no new pairs — same as a full
-    recompute (its historical pairs, already recorded, are the one
-    divergence from recompute-from-scratch, and the right call for an
-    append-only pipeline).
-
-    The new-batch ID set is broadcast: ingest batches are bounded by
-    the source rate limits (maxFilesPerTrigger/maxBytesPerTrigger in
-    streaming/ingest.py), so the broadcast is trigger-config-sized,
-    never corpus-sized.
-
-    Pass ``new_sig`` when the batch signatures are already computed
-    (the ingest loop materializes them ONCE and reuses the relation for
-    both this pairing and the index append — the signer is the
-    expensive pass)."""
-    if new_sig is None and new_docs is None:
-        raise ValueError(
-            "incremental_pairs needs new_docs or a precomputed new_sig"
-        )
-    if new_sig is None:
-        new_sig = _signatures_for(new_docs)
-    all_bands = _bands_from_sig(index_sig.unionByName(new_sig)).localCheckpoint(
-        eager=False
-    )
-    new_ids = new_sig.select("doc_id").distinct()
-    ok = (
-        all_bands.groupBy("band", "band_hash")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .filter((F.col("n") >= 2) & (F.col("n") <= cap))
-        .select("band", "band_hash")
-    )
-    new_bands = all_bands.join(
-        F.broadcast(new_ids), "doc_id"
-    ).join(ok, ["band", "band_hash"])
-    pairs = (
-        new_bands.alias("a")
-        .join(
-            all_bands.alias("b"),
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.band_hash") == F.col("b.band_hash"))
-            & (F.col("a.doc_id") != F.col("b.doc_id")),
-        )
-        .select(
-            F.least("a.doc_id", "b.doc_id").alias("doc_a"),
-            F.greatest("a.doc_id", "b.doc_id").alias("doc_b"),
-        )
-        .distinct()
-    )
-    return pairs
 
 
 def _bands_for(docs: DataFrame) -> DataFrame:
@@ -464,18 +370,6 @@ def _pairs_from_bands(bands: DataFrame, cap: int) -> DataFrame:
         buckets.select(F.explode(pairs).alias("p"))
         .select("p.doc_a", "p.doc_b")
         .distinct()
-    )
-
-
-def lsh_hot_buckets(docs: DataFrame, cap: int = _BUCKET_CAP) -> DataFrame:
-    """The buckets the cap dropped: (band, band_hash, n_docs) — emitted
-    so a pipeline can route them to exact dedup instead of losing them
-    silently."""
-    return (
-        _bands_for(docs)
-        .groupBy("band", "band_hash")
-        .agg(F.count(F.lit(1)).alias("n_docs"))
-        .filter(F.col("n_docs") > cap)
     )
 
 
@@ -1371,11 +1265,10 @@ def docs_dup_spans(m: Model) -> DataFrame:
     flag and a running sum group positions whose windows overlap in
     token space, all inside per-doc windows (bounded by doc length,
     never corpus-wide).  At 100 TB the duplicated-window relation is
-    the persistable artifact (the ``materialize_signatures`` contract)
-    — incremental ingest probes it instead of recomputing the corpus
-    aggregate.  Reference criterion: Lee et al. 2022 §4 ExactSubstr
-    (suffix-array granularity tightened to fixed windows so the
-    result is certifiable against ANSI SQL)."""
+    the persistable artifact — incremental ingest probes it instead
+    of recomputing the corpus aggregate.  Reference criterion: Lee et
+    al. 2022 §4 ExactSubstr (suffix-array granularity tightened to
+    fixed windows so the result is certifiable against ANSI SQL)."""
     base, d = _dup_window_positions(m)
     W = _DUP_WINDOW
     wd = Window.partitionBy("doc_id").orderBy("pos")
@@ -1494,8 +1387,8 @@ def corpus_novelty_curve(m: Model) -> DataFrame:
     length(window)) and accepting a documented ~2^-80 per-pair merge
     tolerance — a deliberate trade, not a default.  At 100 TB the
     incremental form keeps the first-seen relation as a persisted
-    index keyed by window (the ``materialize_signatures`` contract)
-    and each new batch probes it instead of recomputing history."""
+    index keyed by window and each new batch probes it instead of
+    recomputing history."""
     B = _NOVELTY_BATCH
     batch = F.floor(F.col("doc_id") / B).cast("bigint")
     posts = _shingles_with_size(m, width=_DUP_WINDOW).select(
@@ -1767,229 +1660,6 @@ def docs_span_removed(m: Model) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Incremental novelty — the 100 TB production shape of the novelty
-# curves: a crawl never recomputes history.  The first-seen window
-# relation persists as a parquet index partitioned by the batch that
-# introduced each window; each new ingest batch (a) probes the index
-# to score its own novelty and (b) appends only its genuinely-new
-# windows.  Mirrors the materialize_signatures / incremental_pairs
-# contract of the MinHash index.
-# ---------------------------------------------------------------------------
-
-
-def _batch_windows(docs: DataFrame) -> DataFrame:
-    """Per-doc distinct {_DUP_WINDOW}-word windows of a document batch
-    (the same window definition as the novelty curves)."""
-    W = _DUP_WINDOW
-    toks = F.split(F.col("text"), " ")
-    return (
-        docs.select("doc_id", toks.alias("toks"))
-        .where(F.size("toks") >= W)
-        .select(
-            "doc_id",
-            F.explode(
-                F.expr(
-                    f"array_distinct(transform(sequence(0, size(toks) - {W}),"
-                    f" i -> concat_ws(' ', slice(toks, i + 1, {W}))))"
-                )
-            ).alias("shingle"),
-        )
-    )
-
-
-def novelty_ingest_batch(
-    spark, index_dir: str, docs: DataFrame, batch_id: int
-) -> dict:
-    """Score one ingest batch's novelty against the persisted
-    first-seen index and append its new windows — ONE window pass over
-    the batch, history never recomputed.
-
-    Returns the batch's novelty row
-    ``{batch, n_docs, n_windows, n_novel, novelty_rate}`` — identical
-    to the corresponding ``corpus_novelty_curve`` row when batches are
-    ingested in order (pinned by test).  The index at
-    ``{index_dir}`` is parquet partitioned by ``first_batch``: the
-    probe reads only the shingle column, and the append writes one new
-    partition per batch (no rewrite of history — the same
-    dynamic-partition discipline as streaming/ingest.py)."""
-    from ..streaming.ingest import _fs_exists
-
-    w = _batch_windows(docs)
-    # ONE window pass: bc feeds the novel anti-join AND the batch
-    # totals, so the checkpoint belongs HERE (checkpointing only the
-    # derived `novel` left the totals aggregate re-running the whole
-    # explode+aggregate from scratch every batch).
-    bc = (
-        w.groupBy("shingle")
-        .agg(F.count(F.lit(1)).alias("c"))
-        .persist()
-    )
-    try:
-        return _novelty_batch_body(spark, index_dir, docs, batch_id, bc)
-    finally:
-        # batch-scoped cache: release the moment the batch commits
-        # (streaming/ingest.py discipline) — without this each ingest
-        # batch leaks one persisted relation for the session lifetime
-        bc.unpersist()
-
-
-def _novelty_batch_body(spark, index_dir, docs, batch_id, bc) -> dict:
-    from ..streaming.ingest import _fs_exists
-
-    n_docs = docs.where(
-        F.size(F.split(F.col("text"), " ")) >= _DUP_WINDOW
-    ).count()
-    # Hadoop-FS probe, not os.path — a driver-local isdir always says
-    # no for HDFS/S3/ABFS index locations and every batch would score
-    # ~100% novel while still appending (the exact failure mode
-    # streaming/ingest._fs_exists documents).
-    have_index = _fs_exists(spark, index_dir)
-    if have_index:
-        seen = spark.read.parquet(index_dir).select("shingle")
-        # corpus-proportional on BOTH sides -> co-keyed join, never a
-        # broadcast; novel windows are the anti-join survivors
-        novel = bc.join(
-            _dir_shj(seen, spark, index_dir), "shingle", "left_anti"
-        )
-    else:
-        novel = bc
-    agg = novel.agg(
-        F.coalesce(F.sum("c"), F.lit(0)).alias("nc"),
-    ).collect()[0]
-    totals = bc.agg(F.coalesce(F.sum("c"), F.lit(0)).alias("t")).collect()[0]
-    (
-        novel.select("shingle", F.lit(batch_id).alias("first_batch"))
-        .write.mode("append")
-        .partitionBy("first_batch")
-        .parquet(index_dir)
-    )
-    n_windows = int(totals["t"])
-    n_novel = int(agg["nc"])
-    return {
-        "batch": batch_id,
-        "n_docs": int(n_docs),
-        "n_windows": n_windows,
-        "n_novel": n_novel,
-        "novelty_rate": (
-            math.floor((n_novel * 1.0 / n_windows) * 1e6 + 0.5) / 1e6
-            if n_windows
-            else None
-        ),
-    }
-
-
-#: Bloom-novelty state bound: the same m/k contract as the
-#: decontamination filter (llm/pipeline.py) so the two sketches share
-#: one position definition.
-_NOV_BLOOM_M = 131072  # filter bits (2^17)
-_NOV_BLOOM_K = 3
-
-
-def _bloom_positions(rel: DataFrame) -> DataFrame:
-    """(shingle, c) -> (shingle, c, p): the k md5-slice bit positions
-    of each window — identical arithmetic to bloom_contamination's
-    probe, so one certified position definition backs both sketches."""
-    return rel.select(
-        "shingle",
-        "c",
-        F.explode(
-            F.array(
-                *[
-                    F.conv(
-                        F.substring(F.md5(F.col("shingle")), 1 + 8 * i, 8),
-                        16,
-                        10,
-                    ).cast("bigint")
-                    % _NOV_BLOOM_M
-                    for i in range(_NOV_BLOOM_K)
-                ]
-            )
-        ).alias("p"),
-    )
-
-
-def novelty_ingest_bloom(
-    spark, index_dir: str, docs: DataFrame, batch_id: int
-) -> dict:
-    """Bounded-state incremental novelty: the sketch twin of
-    :func:`novelty_ingest_batch`.  The persisted state is not the
-    first-seen window index (O(distinct windows) forever) but the
-    SET-BIT POSITION relation of an m={2**17} k={3} Bloom filter —
-    **at most m rows, ever**, no matter how much corpus flows past.
-    A window is estimated already-seen iff all k of its positions are
-    set; Bloom false positives can only mark truly-novel windows as
-    seen, so the novelty estimate is ONE-SIDED (never above the exact
-    rate — pinned by test against :func:`novelty_ingest_batch` on the
-    same batch sequence).
-
-    Per batch: one window pass, one position explode (k rows per
-    distinct window), one co-keyed join against the position relation,
-    and an append of only the NEW positions (anti-join), partitioned by
-    introducing batch — the ingest discipline of the exact index with
-    sketch-bounded storage.  At 100 TB the exact index is a real
-    table; this filter is ~16 KB of logical state serving the same
-    \"is the crawl saturating\" signal."""
-    from ..streaming.ingest import _fs_exists
-
-    bc = (
-        _batch_windows(docs)
-        .groupBy("shingle")
-        .agg(F.count(F.lit(1)).alias("c"))
-        .persist()
-    )
-    try:
-        return _novelty_bloom_body(spark, index_dir, batch_id, bc)
-    finally:
-        bc.unpersist()  # batch-scoped cache, see novelty_ingest_batch
-
-
-def _novelty_bloom_body(spark, index_dir, batch_id, bc) -> dict:
-    from ..streaming.ingest import _fs_exists
-
-    pos = _bloom_positions(bc)
-    have_index = _fs_exists(spark, index_dir)
-    if have_index:
-        seen = spark.read.parquet(index_dir).select("p")
-        probe = pos.join(
-            _dir_shj(seen, spark, index_dir).withColumn("hit", F.lit(1)),
-            "p", "left",
-        )
-    else:
-        probe = pos.withColumn("hit", F.lit(None).cast("int"))
-    per_window = probe.groupBy("shingle", "c").agg(
-        (F.count("hit") == _NOV_BLOOM_K).alias("est_seen")
-    )
-    agg = per_window.agg(
-        F.coalesce(F.sum("c"), F.lit(0)).alias("t"),
-        F.coalesce(
-            F.sum(F.when(F.col("est_seen"), 0).otherwise(F.col("c"))), F.lit(0)
-        ).alias("novel"),
-    ).collect()[0]
-    new_pos = pos.select("p").distinct()
-    if have_index:
-        new_pos = new_pos.join(
-            _dir_shj(seen, spark, index_dir), "p", "left_anti"
-        )
-    (
-        new_pos.select("p", F.lit(batch_id).alias("first_batch"))
-        .write.mode("append")
-        .partitionBy("first_batch")
-        .parquet(index_dir)
-    )
-    n_windows, n_novel = int(agg["t"]), int(agg["novel"])
-    return {
-        "batch": batch_id,
-        "n_windows": n_windows,
-        "n_novel_est": n_novel,
-        "novelty_rate_est": (
-            math.floor((n_novel * 1.0 / n_windows) * 1e6 + 0.5) / 1e6
-            if n_windows
-            else None
-        ),
-    }
-
-
-# ---------------------------------------------------------------------------
 # PageRank over the near-duplicate graph — which documents sit at the
 # CENTER of duplication clusters (high-rank nodes are the template /
 # boilerplate sources worth human review; the complement of the
@@ -2185,10 +1855,8 @@ def minhash_stream_served(m: Model) -> DataFrame:
     MinHash signatures land idempotently in the partitioned store, and
     banding/pairing over the store is bit-identical to
     ``minhash_band_pairs`` (same oracle).  At 100 TB the signer never
-    re-touches old documents; per-batch pairing against the store is
-    :func:`incremental_pairs` (tested separately) — this query
-    certifies that the STORE itself reproduces the direct pair
-    relation."""
+    re-touches old documents — this query certifies that the STORE
+    itself reproduces the direct pair relation."""
     from ..catalog import assert_view_matches_fixture
 
     assert_view_matches_fixture(m, "documents")

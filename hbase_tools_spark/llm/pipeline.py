@@ -288,25 +288,6 @@ def epoch_shuffle_for(docs: DataFrame, epochs: list[int]) -> DataFrame:
     )
 
 
-def materialize_epoch_shuffle(docs: DataFrame, epoch: int, out_dir: str) -> None:
-    """Persist one epoch's reading order as a shard-partitioned parquet
-    manifest — the data-loader production shape: each trainer rank
-    opens ONLY its shard partition(s) (a partition-pruned scan, no
-    corpus touch) and the rows inside each shard file are already in
-    position order, so 'read the file top to bottom' IS the training
-    order.  Writing repartitions by shard (one task, one file per
-    shard) and sorts within partitions — the same single-exchange shape
-    as the query."""
-    (
-        epoch_shuffle_for(docs, [epoch])
-        .repartition("shard")
-        .sortWithinPartitions("position")
-        .write.partitionBy("shard")
-        .mode("overwrite")
-        .parquet(out_dir)
-    )
-
-
 @query(
     "docs_repetition_ratio",
     oracle=f"""

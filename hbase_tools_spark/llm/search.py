@@ -15,7 +15,7 @@ both shapes, Spark-first:
     ``TakeOrderedAndProject`` — no global sort, no driver loop.
   * :func:`materialize_inverted_index` / :func:`bm25_topk_from_index`
     — the query-many production shape (the text analog of
-    ``similarity.materialize_ivf_index``): postings persisted
+    ``similarity.ivf_ingest_batch``): postings persisted
     PARTITIONED BY a term-hash bucket so each query reads only its
     terms' buckets (static PartitionFilters, pinned by test), never
     the corpus.
@@ -322,7 +322,7 @@ def index_ingest_batch(
     n_buckets: int = _INDEX_BUCKETS,
 ) -> None:
     """One replay-idempotent search-index ingest cycle (the inverted-
-    index twin of ``streaming.ingest.dedup_ingest_batch``): the batch's
+    index twin of ``dedup.signature_ingest_batch``): the batch's
     postings, dictionary partials, and statistics each overwrite ONLY
     their own ``batch_id=N`` partition via dynamic partition overwrite,
     so a foreachBatch replay after a partial failure rewrites the same
@@ -332,7 +332,7 @@ def index_ingest_batch(
     write batches, and its bucket pruning composes with the batch_id
     partitioning (every batch's other buckets are still skipped).
 
-    Replay contract (same as ``dedup_ingest_batch``, round-5 advice):
+    Replay contract (round-5 advice):
     idempotence assumes a replayed batch_id carries the SAME document
     composition as the failed attempt — exactly what Structured
     Streaming's checkpointed source offsets guarantee for foreachBatch

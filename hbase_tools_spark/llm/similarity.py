@@ -424,8 +424,7 @@ def _ivf_candidate_topk(
         "query_id", "vec_id", fround(F.col("cos_raw"), 6).alias("cosine"), "rank"
     )
 
-# Cosine between two DOUBLE lists (DuckDB side).
-_DOTDD_SQL = "list_sum(list_transform(range(1, 65), i -> {a}[i] * {b}[i]))"
+# Norm of a DOUBLE list (DuckDB side).
 _NORMDD_SQL = "sqrt(list_sum(list_transform(range(1, 65), i -> {a}[i] * {a}[i])))"
 # vector(FLOAT[]) x centroid(DOUBLE[])
 _DOTVC_SQL = "list_sum(list_transform(range(1, 65), i -> CAST({a}[i] AS DOUBLE) * {b}[i]))"
@@ -519,9 +518,9 @@ def embedding_ivf_topk(m: Model) -> DataFrame:
     vectors instead of N, and no assignment relation is ever
     materialized or shuffled.  For the query-many production posture
     (persist the quantizer + cell-partitioned inverted lists once,
-    prune partitions per probe) see :func:`materialize_ivf_index` /
-    :func:`ivf_topk_from_index` — result-equality is pinned in
-    tests/test_llm.py."""
+    prune partitions per probe) see ``embedding_ivf_stream_served``
+    (:func:`ivf_ingest_batch` / :func:`ivf_topk_from_index`) —
+    result-equality is pinned in tests/test_llm.py."""
     emb = m.embeddings
     cent_rows, probes = _collect_cent_and_probes(_label_centroids(emb), emb)
     return _ivf_candidate_topk(emb, cent_rows, probes)
@@ -583,34 +582,11 @@ def _label_centroids(emb: DataFrame) -> DataFrame:
     )
 
 
-def materialize_ivf_index(emb: DataFrame, out_dir: str) -> None:
-    """Persist the IVF index — the query-many production shape (the ANN
-    analog of ``dedup.materialize_signatures``): the C-row centroid
-    relation plus every vector's inverted-list assignment, written
-    PARTITIONED BY cell so a probe's read prunes to its nprobe cells
-    (~N·nprobe/C rows touched per query instead of N).
-
-    The assignment scan reuses the same strict index-order quantizer as
-    the per-query path, so index reads reproduce the direct search
-    bit-for-bit (equality pinned in tests)."""
-    cent = _label_centroids(emb)
-    cent_rows = [(int(r["label"]), list(r["c"])) for r in cent.collect()]
-    cent.select(F.col("label").alias("cell"), "c").write.mode("overwrite").parquet(
-        out_dir + "/centroids"
-    )
-    (
-        _assigned(emb, cent_rows)
-        .write.mode("overwrite")
-        .partitionBy("cell")
-        .parquet(out_dir + "/assignments")
-    )
-
-
 def _assigned(emb: DataFrame, cent_rows: list) -> DataFrame:
     """(vec_id, cell, embedding) under the FIXED quantizer ``cent_rows``
-    — the shared assignment scan of the batch materialize and the
-    streaming ingest (one Arrow pass, no shuffle; the quantizer is a
-    tiny closure constant, the 100 TB broadcast)."""
+    — the assignment scan of the streaming ingest (one Arrow pass, no
+    shuffle; the quantizer is a tiny closure constant, the 100 TB
+    broadcast)."""
     import pandas as pd
 
     cell_ids, cmat, cnorm = _quantizer(cent_rows)
@@ -945,16 +921,6 @@ def embedding_ivf_kmeans_topk(m: Model) -> DataFrame:
 
 _INT8_LEVELS = 127  # symmetric code range
 
-
-def _codes(a: Column) -> Column:
-    """Per-vector int8 codes: floor(x / (max|x|/127) + 0.5), exact ints."""
-    maxabs = F.array_max(F.transform(a, lambda x: F.abs(x.cast("double"))))
-    scale = F.greatest(maxabs / float(_INT8_LEVELS), F.lit(1e-30))
-    return F.transform(
-        a, lambda x: F.floor(x.cast("double") / scale + 0.5).cast("bigint")
-    )
-
-
 _CODES_SQL = (
     "list_transform({a}, x -> CAST(floor(CAST(x AS DOUBLE) / "
     "greatest(list_max(list_transform({a}, v -> abs(CAST(v AS DOUBLE)))) "
@@ -1020,9 +986,9 @@ def embedding_int8_topk(m: Model) -> DataFrame:
     Scale story: codes are 4x smaller than float32 — at 100 TB the
     search scan reads 25 TB, and in a real deployment the code column
     is materialized once next to the embeddings (same contract as the
-    persisted IVF index, ``materialize_ivf_index``) so search never
-    touches the floats; the exact-rerank side here stands in for the
-    verify pass a production pipeline runs only over the candidate
+    persisted IVF index of ``embedding_ivf_stream_served``) so search
+    never touches the floats; the exact-rerank side here stands in for
+    the verify pass a production pipeline runs only over the candidate
     sliver.  Scores are pure functions of exact integer codes (int →
     double, IEEE sqrt/div), so both engines rank identically with the
     (score desc, vec_id) tie-break.  Plan: probe codes/norms are
@@ -1362,25 +1328,6 @@ def _adc_fold() -> Column:
     )
 
 
-def _pq_adc_ranked(codes_df: DataFrame, q: DataFrame) -> DataFrame:
-    """ADC ranking over a (vec_id, label, codes) relation: an exact-
-    decimal M-term fold over the broadcast lookup tables, one
-    (query_id) rank-window exchange; candidates never touch floats."""
-    adc_dec = _adc_fold()
-    w = Window.partitionBy("query_id")
-    return (
-        F.broadcast(q)
-        .crossJoin(codes_df)
-        .filter(F.col("query_id") != F.col("vec_id"))
-        .select("query_id", "vec_id", "label", adc_dec.alias("adc_dec"))
-        .withColumn(
-            "rank",
-            F.row_number().over(w.orderBy(F.asc("adc_dec"), F.asc("vec_id"))),
-        )
-        .filter(F.col("rank") <= _TOPK)
-    )
-
-
 @query("embedding_pq_topk", oracle=_pq_oracle(), views=[])
 def embedding_pq_topk(m: Model) -> DataFrame:
     """Product-quantized top-{10} search with recall accounting: {8}
@@ -1425,8 +1372,7 @@ def embedding_pq_topk(m: Model) -> DataFrame:
     )
     # The trained codebook is query-independent INDEX STATE — a pure
     # function of the immutable embeddings content (literal seeds, one
-    # deterministic Lloyd iteration), the same artifact
-    # ``materialize_pq_index`` persists.  Memoize it per embeddings
+    # deterministic Lloyd iteration).  Memoize it per embeddings
     # fingerprint (the round-11 serving-handle convention; the r11
     # verdict's round-12 list names the PQ codebooks as the candidate):
     # the cold run pays the one training pass (bench records it in
@@ -1487,66 +1433,6 @@ def embedding_pq_topk(m: Model) -> DataFrame:
             "rank",
             (F.col("erank") <= _TOPK).alias("in_exact_topk"),
         )
-    )
-
-
-def materialize_pq_index(emb: DataFrame, out_dir: str) -> None:
-    """Persist the PQ index — the query-many production shape (vector
-    sibling of ``materialize_ivf_index``): the trained M*K codebook
-    plus every vector's 4-bit-per-subspace code array.  The codes
-    relation is 64x smaller than the float vectors; serving reads ONLY
-    it, and the codebook (a few KB) broadcasts anywhere.  Training is
-    the same one-Lloyd-iteration trajectory as the per-query path, so
-    index serving reproduces the direct search bit-for-bit (equality
-    pinned in tests)."""
-    import numpy as np
-
-    spark = emb.sparkSession
-    seed_vecs = {
-        int(r["vec_id"]): np.asarray(r["embedding"], dtype=np.float64)
-        for r in emb.filter(F.col("vec_id").isin(_PQ_INIT_IDS))
-        .select("vec_id", "embedding")
-        .collect()
-    }
-    cb2 = _pq_train(emb, seed_vecs)
-    M, K, S = _PQ_M, _PQ_K, _PQ_SUB
-    cb_rows = [
-        (mm, k, [float(cb2[mm, k, i]) for i in range(S)])
-        for mm in range(M)
-        for k in range(K)
-    ]
-    spark.createDataFrame(cb_rows, "m int, k int, c array<double>").write.mode(
-        "overwrite"
-    ).parquet(out_dir + "/codebook")
-    (
-        emb.select(
-            "vec_id", "label", _pq_codes_udf(cb2)("embedding").alias("codes")
-        )
-        .write.mode("overwrite")
-        .parquet(out_dir + "/codes")
-    )
-
-
-def pq_topk_from_index(spark, index_dir: str, probes: list) -> DataFrame:
-    """Serve PQ top-{10} from the persisted index: rebuild each probe's
-    ADC lookup table from the stored codebook (driver-side, ~8 KB per
-    probe) and rank the stored code relation — no float vector is read
-    anywhere.  ``probes`` is [(query_id, np.ndarray(64))]."""
-    import numpy as np
-
-    cb_rows = spark.read.parquet(index_dir + "/codebook").collect()
-    M, K, S = _PQ_M, _PQ_K, _PQ_SUB
-    cb2 = np.zeros((M, K, S))
-    for r in cb_rows:
-        cb2[int(r["m"]), int(r["k"])] = np.asarray(r["c"], dtype=np.float64)
-    q = _pq_probe_df(spark, cb2, probes)
-    codes = spark.read.parquet(index_dir + "/codes")
-    return _pq_adc_ranked(codes, q).select(
-        "query_id",
-        "vec_id",
-        "label",
-        F.round(F.col("adc_dec"), 6).cast("double").alias("approx_distance"),
-        "rank",
     )
 
 
@@ -1792,127 +1678,6 @@ def embedding_ivfpq_topk(m: Model) -> DataFrame:
     q = m.spark.createDataFrame(
         [(qid, c, _adc_lut(qr, cb2)) for qid, c, qr in probes],
         "query_id int, cell int, lut array<decimal(28,12)>",
-    )
-    adc_dec = _adc_fold()
-    w = Window.partitionBy("query_id")
-    return (
-        codes.join(F.broadcast(q), "cell")
-        .filter(F.col("query_id") != F.col("vec_id"))
-        .select(
-            "query_id", "vec_id", F.col("cell").cast("int").alias("cell"),
-            adc_dec.alias("adc_dec"),
-        )
-        .withColumn(
-            "rank",
-            F.row_number().over(w.orderBy(F.asc("adc_dec"), F.asc("vec_id"))),
-        )
-        .filter(F.col("rank") <= _TOPK)
-        .select(
-            "query_id",
-            "vec_id",
-            "cell",
-            F.round(F.col("adc_dec"), 6).cast("double").alias("approx_distance"),
-            "rank",
-        )
-    )
-
-
-def materialize_ivfpq_index(emb: DataFrame, out_dir: str) -> None:
-    """Persist the composed IVF+PQ index: centroid relation, residual
-    PQ codebook, and per-vector (cell, codes) PARTITIONED BY cell —
-    the full billion-scale serving layout (a probe reads nprobe cell
-    partitions of 4 B/vector codes; floats never leave training).
-    Training replays ``embedding_ivfpq_topk``'s exact trajectory, so
-    index serving reproduces the direct search bit-for-bit."""
-    import numpy as np
-
-    spark = emb.sparkSession
-    cent = _label_centroids(emb)
-    cent_rows = [(int(r["label"]), list(r["c"])) for r in cent.collect()]
-    cell_ids, cmat, cnorm = _quantizer(cent_rows)
-    cell_row = {cid: i for i, cid in enumerate(cell_ids)}
-
-    import pandas as pd
-
-    @F.pandas_udf("struct<cell:int, r:array<double>>")
-    def assign_res(embedding: pd.Series) -> pd.DataFrame:
-        ed = np.stack(embedding.values).astype(np.float64)
-        cells, _ = _nearest_cells(ed, cell_ids, cmat, cnorm, 1)
-        rows = np.array([cell_row[c] for c in cells[:, 0]])
-        return pd.DataFrame({"cell": cells[:, 0], "r": list(ed - cmat[rows])})
-
-    res = emb.select("vec_id", assign_res("embedding").alias("ar")).select(
-        "vec_id", "ar.cell", F.col("ar.r").alias("embedding")
-    )
-    seed_vecs = {
-        int(r["vec_id"]): np.asarray(r["embedding"], dtype=np.float64)
-        for r in emb.filter(F.col("vec_id").isin(_PQ_INIT_IDS))
-        .select("vec_id", "embedding")
-        .collect()
-    }
-
-    def _residual_of(v: np.ndarray) -> np.ndarray:
-        cells, _ = _nearest_cells(v[None, :], cell_ids, cmat, cnorm, 1)
-        return v - cmat[cell_row[cells[0, 0]]]
-
-    seed_res = {vid: _residual_of(v) for vid, v in seed_vecs.items()}
-    cb2 = _pq_train(res, seed_res)
-    M, K, S = _PQ_M, _PQ_K, _PQ_SUB
-    cent.select(F.col("label").alias("cell"), "c").write.mode("overwrite").parquet(
-        out_dir + "/centroids"
-    )
-    spark.createDataFrame(
-        [
-            (mm, k, [float(cb2[mm, k, i]) for i in range(S)])
-            for mm in range(M)
-            for k in range(K)
-        ],
-        "m int, k int, c array<double>",
-    ).write.mode("overwrite").parquet(out_dir + "/codebook")
-    (
-        res.select("vec_id", "cell", _pq_codes_udf(cb2)("embedding").alias("codes"))
-        .write.mode("overwrite")
-        .partitionBy("cell")
-        .parquet(out_dir + "/codes")
-    )
-
-
-def ivfpq_topk_from_index(spark, index_dir: str, probes: list) -> DataFrame:
-    """Serve composed IVF+PQ top-{10} from the persisted index: route
-    each probe to its nprobe cells against the stored centroids, build
-    the per-(query, cell) residual ADC tables driver-side, and rank
-    ONLY the probed cells' code partitions (partition-pruned read).
-    ``probes`` is [(query_id, np.ndarray(64))]."""
-    import numpy as np
-    from decimal import ROUND_HALF_UP, Decimal
-
-    cent_rows = [
-        (int(r["cell"]), list(r["c"]))
-        for r in spark.read.parquet(index_dir + "/centroids").collect()
-    ]
-    cell_ids, cmat, cnorm = _quantizer(cent_rows)
-    cell_row = {cid: i for i, cid in enumerate(cell_ids)}
-    M, K, S = _PQ_M, _PQ_K, _PQ_SUB
-    cb2 = np.zeros((M, K, S))
-    for r in spark.read.parquet(index_dir + "/codebook").collect():
-        cb2[int(r["m"]), int(r["k"])] = np.asarray(r["c"], dtype=np.float64)
-    rows = []
-    for qid, qv in probes:
-        qcells, _ = _nearest_cells(qv[None, :], cell_ids, cmat, cnorm, _NPROBE)
-        for c in qcells[0]:
-            rows.append(
-                (qid, int(c), _adc_lut(qv - cmat[cell_row[int(c)]], cb2))
-            )
-    q = spark.createDataFrame(
-        rows, "query_id int, cell int, lut array<decimal(28,12)>"
-    )
-    # The probed cells are driver-known, so the cell filter is STATIC —
-    # it reaches the scan as a PartitionFilter and only the nprobe cell
-    # partitions are listed/read (asserted in tests; dynamic partition
-    # pruning does not fire for a local broadcast relation).
-    probed = sorted({c for _, c, _ in rows})
-    codes = spark.read.parquet(index_dir + "/codes").where(
-        F.col("cell").isin(probed)
     )
     adc_dec = _adc_fold()
     w = Window.partitionBy("query_id")

@@ -12,7 +12,6 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from ..catalog import Model
 from ..functions.exprs import fround, fround_sql

@@ -188,43 +188,11 @@ GROUP BY event_type
 def events_user_cardinality(m: Model) -> DataFrame:
     """Distinct-cardinality per event type — exact form (expand +
     two-phase distinct aggregation; Catalyst plans the partial/final
-    split).  The HLL sketch path (approx_count_distinct) is the 100 TB
-    variant — one pass, constant memory per group, mergeable partials —
-    and is asserted within tolerance of this exact query in
-    tests/test_llm.py (sketches are engine-specific, so the oracle
-    gates the exact form)."""
+    split).  The one-pass sketch variant is the oracle-gated
+    ``events_hll_cardinality`` (operators/sketches.py)."""
     return m.events.groupBy("event_type").agg(
         F.count_distinct("user_id").alias("exact_users"),
         F.count(F.lit(1)).alias("n_events"),
-    )
-
-
-def events_user_cardinality_approx(m: Model) -> DataFrame:
-    """HLL-sketch cardinality (the scale path for A4-style distinct
-    counting): single pass, mergeable, bounded error."""
-    return m.events.groupBy("event_type").agg(
-        F.approx_count_distinct("user_id", rsd=0.02).alias("approx_users")
-    )
-
-
-def analyzer_weight_stats_approx(m: Model) -> DataFrame:
-    """A9's 100 TB variant: ``percentile_approx`` (KLL-style sketch —
-    single pass, mergeable partials, bounded rank error) in place of the
-    exact median.  The exact form (`analyzer_weight_stats`) keeps
-    reference parity (CompactorServer.java:298-315 computes a true
-    median) and remains the oracle-gated query; this one is asserted
-    within tolerance of it in tests/test_llm.py — sketches are
-    engine-specific, so a DuckDB hash-oracle cannot gate it."""
-    w = (
-        (1 - F.col("locality")) * 115
-        + ((F.col("size_mb") - F.col("max_file_mb")) / 1024.0)
-        * (F.col("file_count") * 1.33)
-    )
-    return (
-        m.region_metrics.select("server", w.alias("w"))
-        .groupBy("server")
-        .agg(F.expr("percentile_approx(w, 0.5, 1000)").alias("approx_median"))
-        .orderBy("server")
     )
 
 

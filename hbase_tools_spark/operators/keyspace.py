@@ -178,9 +178,7 @@ def split_points(m: Model) -> DataFrame:
     Column-API form spent ~0.2 s/plan on py4j round-trips alone — and
     the midpoint is the SAME ``_midpoint12_hex`` Column helper the key
     tests pin against the Python reference (one implementation, no
-    hand-inlined SQL twin), applied to the 8 surviving rows (the
-    arbitrary-width pandas-UDF ``midpoint_key_hex`` remains the
-    library surface; the 12-byte fixture path needs no Python)."""
+    hand-inlined SQL twin), applied to the 8 surviving rows."""
     best = m.spark.sql("""
 WITH sized AS (
   SELECT /*+ BROADCAST(rm) */ mr.table_name, mr.region_id, coalesce(rm.size_mb, 0.0) AS size_mb

@@ -260,57 +260,6 @@ def _merge_pairs(state: DataFrame) -> DataFrame:
     )
 
 
-def apply_merge_plan(state: DataFrame, pairs: DataFrame) -> DataFrame:
-    """Apply one pass: region_a absorbs region_b (end key extends, sizes
-    add), region_b disappears — the DataFrame form of what
-    admin.mergeRegions does to hbase:meta."""
-    upd = pairs.select(
-        F.col("region_a").alias("region_id"),
-        "end_b",
-        (F.col("size_a") + F.col("size_b")).alias("new_size"),
-    )
-    return (
-        state.join(
-            pairs.select(F.col("region_b").alias("region_id")),
-            "region_id",
-            "left_anti",
-        )
-        .join(upd, "region_id", "left")
-        .select(
-            "region_id",
-            "table_name",
-            "start_key",
-            F.coalesce("end_b", "end_key").alias("end_key"),
-            F.coalesce("new_size", "size_mb").alias("size_mb"),
-        )
-    )
-
-
-def multipass_merge_plans(
-    state: DataFrame, max_passes: int = _MERGE_PASSES
-) -> tuple[DataFrame, DataFrame]:
-    """Driver loop of the reference's merger (merger/Merger.java:131-150):
-    emit a pass plan, apply it to the state, repeat until a pass is
-    empty or ``max_passes`` is hit.  Returns (all pass plans with a
-    ``pass_id`` column, final state).
-
-    The loop is driver-orchestrated control flow only — state and plans
-    stay distributed; each pass checkpoint-truncates its lineage and the
-    only driver value is the per-pass plan count (the loop condition,
-    exactly the reference's ``while (mergedCount > border)``)."""
-    plans = None
-    for pass_id in range(1, max_passes + 1):
-        pairs = _merge_pairs(state).localCheckpoint(eager=False)
-        if pairs.count() == 0:
-            break
-        emitted = pairs.withColumn("pass_id", F.lit(pass_id))
-        plans = emitted if plans is None else plans.unionByName(emitted)
-        state = apply_merge_plan(state, pairs).localCheckpoint(eager=True)
-    if plans is None:
-        plans = _merge_pairs(state).withColumn("pass_id", F.lit(1)).limit(0)
-    return plans, state
-
-
 def _merge_pass_oracle(n_passes: int) -> str:
     """Unrolled n-pass merge loop in portable SQL (the bounded oracle
     form, same device as the label-propagation oracle)."""
@@ -392,10 +341,7 @@ def merge_plan_multipass(m: Model) -> DataFrame:
     group — one stage total, vs 2 driver-synced jobs per pass for the
     generic loop.  This is the 100 TB shape too: tables are the
     parallelism unit (thousands of groups), and a group is one table's
-    region list (~1e5 rows max), comfortably in-memory.  The
-    cross-state driver loop (the reference's literal
-    ``while (mergedCount > border)``) is :func:`multipass_merge_plans`,
-    for state too wide for a single group."""
+    region list (~1e5 rows max), comfortably in-memory."""
     import pandas as pd
 
     min_mb, max_mb, merged_max = _MERGE_MIN_MB, _MERGE_MAX_MB, _MERGED_MAX_MB

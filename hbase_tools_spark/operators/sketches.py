@@ -250,8 +250,7 @@ def events_hll_cardinality(m: Model) -> DataFrame:
     """HyperLogLog daily-active cardinality per event type, certified
     against its own exact count — the deterministic sketch the driver
     can hash-gate (unlike engine-native ``approx_count_distinct``,
-    whose register layout is Spark-internal; see
-    ``events_user_cardinality_approx``).
+    whose register layout is Spark-internal).
 
     Registers: p=8 bucket bits and rho = leading-zero rank of the
     remaining 40 bits of the shared 48-bit md5 hash, via exact integer

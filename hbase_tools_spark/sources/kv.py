@@ -26,7 +26,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from ..catalog import Model, load_model
 
@@ -157,7 +156,9 @@ def load_model_from_kv(
     """The ``load_model`` contract with the two KV-backed relations
     rebuilt from connector-shaped cell snapshots instead of the fixture
     derivations; every registered query runs unchanged against the
-    returned model (the porting path off the reference's live scan)."""
+    returned model (the porting path off the reference's live scan).
+    No query calls it: it is the public connector entry point, kept
+    live by ``test_queries_green_on_kv_model``."""
     m = load_model(spark, sf_dir)
     kv_meta_regions(meta_kv).createOrReplaceTempView("meta_regions")
     kv_topology(topo_kv).createOrReplaceTempView("topology")
@@ -173,7 +174,6 @@ def load_model_from_kv(
 # face the same oracle as the parquet path, not just pytest.
 # ---------------------------------------------------------------------------
 
-from ..functions.exprs import fround  # noqa: E402
 from ..registry import query  # noqa: E402
 
 

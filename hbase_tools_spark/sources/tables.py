@@ -119,27 +119,6 @@ def read_topology_asof(spark: SparkSession, out_dir: str, at_ts: int) -> DataFra
     return eligible.join(F.broadcast(best), "snapshot_epoch")
 
 
-def write_bucketed_table(
-    df: DataFrame, name: str, key: str, n_buckets: int
-) -> None:
-    """Write ``df`` as a bucketed+sorted parquet table: the storage-side
-    half of a shuffle-free J1/J2 join.  Two tables bucketed on the same
-    key with the same bucket count co-locate matching keys in matching
-    buckets, so Catalyst plans their equi-join with ZERO Exchange (and,
-    with ``sortBy``, no per-task Sort) — the bucketing analog of HBase's
-    region-aligned storage, and the layout the 100 TB deployment uses
-    for the region_metrics ⋈ meta_regions hot path
-    (analyze/TableAnalyzer.java:174-203).  Asserted as a plan-shape
-    regression test in tests/test_plan_shape.py."""
-    (
-        df.write.format("parquet")
-        .mode("overwrite")
-        .bucketBy(n_buckets, key)
-        .sortBy(key)
-        .saveAsTable(name)
-    )
-
-
 # ---------------------------------------------------------------------------
 # Digest certificate for the topology partition store — the SC5/S8/J7
 # sink family faced the oracle only through pytest until round 7 (the

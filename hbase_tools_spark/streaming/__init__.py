@@ -1,6 +1,6 @@
 """Structured-Streaming analogs of the reference's continuous modes
 (SURVEY.md §2.8 S-series)."""
 
-from . import ingest, jobs, stateful  # noqa: F401
+from . import jobs, stateful  # noqa: F401
 
-__all__ = ["ingest", "jobs", "stateful"]
+__all__ = ["jobs", "stateful"]

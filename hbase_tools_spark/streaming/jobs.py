@@ -8,8 +8,8 @@ health checks; compactor/CompactorManager.java:147-164 — membership
 diffing every 90 s).  The Spark-idiomatic generalization is Structured
 Streaming: ``readStream`` over the event/metric feed, event-time
 windows + watermarks for its periodic aggregations, streaming
-deduplication for its TTL caches, and ``foreachBatch`` for its
-plan-refresh cycles.
+deduplication for its TTL caches, and ``foreachBatch`` for table
+sinks.
 
 Each registered query runs its stream to completion with
 ``Trigger.AvailableNow`` into an in-memory sink and returns the result
@@ -510,44 +510,6 @@ def stream_dedup_keys_rocksdb(m: Model) -> DataFrame:
         state_partitions=1,
         extra_confs=ROCKSDB_STATE_CONF,
     )
-
-
-# ---------------------------------------------------------------------------
-# S1 proper — per-micro-batch plan refresh via foreachBatch
-# ---------------------------------------------------------------------------
-
-def compaction_plan_stream(
-    spark: SparkSession, sf_dir: str, sink_path: str | None = None
-) -> DataFrame:
-    """S1 — the compactor's refresh cycle: every micro-batch of new
-    metric events triggers a full plan recompute (re-scan → re-weight →
-    re-sort, CompactorServer.java:127-155), appended to a parquet table
-    sink with its batch id.  ``foreachBatch`` is the idiomatic home for
-    this snapshot-replace (not windowed-append) semantics; the plan
-    never touches the driver — each batch's recompute is written
-    distributed (executor → sink), so sink size scales with the plan
-    relation, not driver memory."""
-    from ..catalog import load_model
-    from ..registry import QUERIES
-
-    if sink_path is None:
-        sink_path = workdir.scratch(spark, "plan_sink_")
-
-    def refresh(batch_df: DataFrame, batch_id: int) -> None:
-        model = load_model(batch_df.sparkSession, sf_dir)
-        plan = QUERIES["compaction_plan"].fn(model).withColumn(
-            "batch_id", F.lit(batch_id)
-        )
-        plan.write.mode("append").parquet(sink_path)
-
-    ev = events_stream(spark, sf_dir)
-    q = (
-        ev.writeStream.foreachBatch(refresh)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.read.parquet(sink_path)
 
 
 # ---------------------------------------------------------------------------

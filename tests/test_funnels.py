@@ -154,23 +154,6 @@ def test_int8_codes_and_recall(spark):
     assert hit / total >= 0.6
 
 
-def test_int8_code_bounds(spark):
-    """The quantizer emits integer codes within ±127 for every vector."""
-    from hbase_tools_spark.llm.similarity import _codes
-    import pyspark.sql.functions as F
-
-    m = load_model(spark, SF_DIR)
-    bad = (
-        m.embeddings.select(_codes(F.col("embedding")).alias("code"))
-        .select(
-            F.array_max(F.transform("code", F.abs)).alias("mx")
-        )
-        .where(F.col("mx") > 127)
-        .count()
-    )
-    assert bad == 0
-
-
 def test_anomaly_zscore_replay(spark):
     """Mean/std/z replay in NumPy per event type, and the flag obeys
     the |z| > 2 bar."""
@@ -353,37 +336,6 @@ def test_novelty_curve_properties(spark):
         assert r["n_docs"] > 0
 
 
-def test_pq_index_matches_direct(spark, tmp_path):
-    """Persisted-index PQ serving reproduces the direct query's ranked
-    ADC results bit-for-bit (the materialize-once production shape)."""
-    import numpy as np
-    import pyspark.sql.functions as F
-
-    from hbase_tools_spark.llm.similarity import (
-        materialize_pq_index,
-        pq_topk_from_index,
-    )
-
-    m = load_model(spark, SF_DIR)
-    out = str(tmp_path / "pq_index")
-    materialize_pq_index(m.embeddings, out)
-    probes = [
-        (int(r["vec_id"]), np.asarray(r["embedding"], dtype=np.float64))
-        for r in m.embeddings.where(F.col("vec_id") < 5)
-        .select("vec_id", "embedding")
-        .collect()
-    ]
-    served = {
-        (r["query_id"], r["rank"]): (r["vec_id"], r["approx_distance"])
-        for r in pq_topk_from_index(spark, out, probes).collect()
-    }
-    direct = {
-        (r["query_id"], r["rank"]): (r["vec_id"], r["approx_distance"])
-        for r in _run(spark, "embedding_pq_topk")
-    }
-    assert served == direct
-
-
 def test_ivfpq_topk_properties(spark):
     """Per query exactly 10 ranked results drawn only from the probed
     cells, ADC distances nonnegative and rank-sorted, and the result
@@ -400,47 +352,6 @@ def test_ivfpq_topk_properties(spark):
         assert all(d >= 0 for d in ds) and ds == sorted(ds)
         cells = {r["cell"] for r in rs}
         assert len(cells) <= 2  # nprobe bound
-
-
-def test_ivfpq_index_matches_direct(spark, tmp_path):
-    """Persisted composed-index serving reproduces the direct IVFPQ
-    query bit-for-bit, and the codes read is partition-pruned to the
-    probed cells."""
-    import numpy as np
-    import pyspark.sql.functions as F
-
-    from hbase_tools_spark.llm.similarity import (
-        ivfpq_topk_from_index,
-        materialize_ivfpq_index,
-    )
-
-    m = load_model(spark, SF_DIR)
-    out = str(tmp_path / "ivfpq_index")
-    materialize_ivfpq_index(m.embeddings, out)
-    probes = [
-        (int(r["vec_id"]), np.asarray(r["embedding"], dtype=np.float64))
-        for r in m.embeddings.where(F.col("vec_id") < 5)
-        .select("vec_id", "embedding")
-        .collect()
-    ]
-    served_df = ivfpq_topk_from_index(spark, out, probes)
-    plan = served_df._jdf.queryExecution().executedPlan().toString()
-    import re
-
-    pf = re.findall(r"PartitionFilters: \[[^\]]*\]", plan)
-    assert pf and any("IN" in f or "in(" in f.lower() for f in pf), (
-        "probed-cell filter did not reach the codes scan as a "
-        f"static PartitionFilter: {pf}"
-    )
-    served = {
-        (r["query_id"], r["rank"]): (r["vec_id"], r["cell"], r["approx_distance"])
-        for r in served_df.collect()
-    }
-    direct = {
-        (r["query_id"], r["rank"]): (r["vec_id"], r["cell"], r["approx_distance"])
-        for r in _run(spark, "embedding_ivfpq_topk")
-    }
-    assert served == direct
 
 
 def test_weighted_sample_favors_heavy_docs(spark):

@@ -60,8 +60,8 @@ def test_multimodal_features_schema_and_values(spark):
 def test_lsh_hot_bucket_cap(spark):
     """A pathological identical-doc cluster (> cap) must be excluded
     from pair enumeration — bounding per-bucket fan-out — while small
-    dup groups still pair, and the dropped buckets stay observable."""
-    from hbase_tools_spark.llm.dedup import lsh_hot_buckets, minhash_pairs_for
+    dup groups still pair."""
+    from hbase_tools_spark.llm.dedup import minhash_pairs_for
 
     rows = [(i, "alpha beta gamma delta epsilon zeta eta") for i in range(150)]
     rows += [(1000 + i, "one two three four five six seven") for i in range(3)]
@@ -70,64 +70,9 @@ def test_lsh_hot_bucket_cap(spark):
     pairs = {(r["doc_a"], r["doc_b"]) for r in minhash_pairs_for(docs, cap=100).collect()}
     assert pairs == {(1000, 1001), (1000, 1002), (1001, 1002)}
 
-    hot = lsh_hot_buckets(docs, cap=100).collect()
-    # identical docs share one bucket per band
-    assert len(hot) == 4
-    assert all(r["n_docs"] == 150 for r in hot)
-
     # with a cap that admits the cluster, the fan-out appears
     uncapped = minhash_pairs_for(docs, cap=1000).count()
     assert uncapped == 150 * 149 // 2 + 3
-
-
-def test_signature_index_roundtrip(spark, tmp_path):
-    """materialize_signatures is the persisted-index shape: pairing
-    from the parquet index must equal pairing from the raw corpus."""
-    from hbase_tools_spark.llm.dedup import (
-        materialize_signatures,
-        minhash_pairs_for,
-        pairs_from_signatures,
-    )
-
-    m = load_model(spark, SF_DIR)
-    out = str(tmp_path / "sig_index")
-    materialize_signatures(m.documents, out)
-    sig = spark.read.parquet(out)
-    from_index = {(r["doc_a"], r["doc_b"]) for r in pairs_from_signatures(sig).collect()}
-    direct = {(r["doc_a"], r["doc_b"]) for r in minhash_pairs_for(m.documents).collect()}
-    assert from_index == direct and from_index
-
-
-def test_incremental_dedup_matches_full_recompute(spark, tmp_path):
-    """Incremental ingest over the persisted index must reconstruct the
-    full-corpus pairing: recorded-index pairs ∪ incremental pairs ==
-    pairs over the whole corpus, and every incremental pair involves a
-    new doc."""
-    from pyspark.sql import functions as F
-
-    from hbase_tools_spark.llm.dedup import (
-        incremental_pairs,
-        materialize_signatures,
-        minhash_pairs_for,
-        pairs_from_signatures,
-    )
-
-    m = load_model(spark, SF_DIR)
-    old = m.documents.filter(F.col("doc_id") % 5 != 0)
-    new = m.documents.filter(F.col("doc_id") % 5 == 0)
-    out = str(tmp_path / "sig_index")
-    materialize_signatures(old, out)
-    sig = spark.read.parquet(out)
-
-    as_pairs = lambda df: {(r["doc_a"], r["doc_b"]) for r in df.collect()}
-    recorded = as_pairs(pairs_from_signatures(sig))
-    inc = as_pairs(incremental_pairs(sig, new))
-    full = as_pairs(minhash_pairs_for(m.documents))
-
-    new_ids = {r["doc_id"] for r in new.select("doc_id").collect()}
-    assert all(a in new_ids or b in new_ids for a, b in inc)
-    assert recorded | inc == full
-    assert inc, "no incremental pairs — split produced a degenerate case"
 
 
 def test_multimodal_decode_stub_raises(spark):
@@ -235,49 +180,6 @@ def test_multimodal_real_decode_gated(spark):
         media.mapInPandas(_frame_sample(decode_stub=False), FRAME_SCHEMA).collect()
 
 
-def test_approx_median_within_tolerance(spark):
-    """The percentile_approx scale variant must track the exact median
-    (rank error bounded by the accuracy parameter)."""
-    from hbase_tools_spark.catalog import load_model
-    from hbase_tools_spark.operators.analyzer import analyzer_weight_stats_approx
-    from hbase_tools_spark.registry import QUERIES
-
-    m = load_model(spark, SF_DIR)
-    exact = {
-        r["server"]: r["median_weight"]
-        for r in QUERIES["analyzer_weight_stats"].fn(m).collect()
-    }
-    approx = {
-        r["server"]: r["approx_median"]
-        for r in analyzer_weight_stats_approx(m).collect()
-    }
-    assert set(exact) == set(approx)
-    for server, med in exact.items():
-        spread = abs(med) * 0.25 + 1.0
-        assert abs(approx[server] - med) <= spread, (server, med, approx[server])
-
-
-def test_approx_cardinality_within_tolerance(spark):
-    from hbase_tools_spark.catalog import load_model
-    from hbase_tools_spark.operators.analyzer import (
-        events_user_cardinality,
-        events_user_cardinality_approx,
-    )
-
-    m = load_model(spark, SF_DIR)
-    exact = {
-        r["event_type"]: r["exact_users"]
-        for r in events_user_cardinality(m).collect()
-    }
-    approx = {
-        r["event_type"]: r["approx_users"]
-        for r in events_user_cardinality_approx(m).collect()
-    }
-    assert set(exact) == set(approx)
-    for k, ex in exact.items():
-        assert abs(approx[k] - ex) <= max(0.05 * ex, 2), (k, ex, approx[k])
-
-
 def test_connected_components_long_chain(spark):
     # a 12-hop duplicate chain: the bounded 4-round variant CANNOT
     # collapse this; the convergent operator must
@@ -308,20 +210,27 @@ def test_connected_components_matches_bounded_on_fixture(spark):
 
 
 def test_ivf_index_reads_equal_direct_search_and_prune(spark, tmp_path):
-    """The persisted-IVF path (materialize once, partition-pruned reads
-    per probe) must reproduce the direct embedding_ivf_topk result
-    exactly, and its candidate scan must read only the probed cell
-    partitions (PartitionFilters on the parquet scan)."""
+    """The persisted-IVF path (one ingest batch under the pretrained
+    quantizer, partition-pruned reads per probe) must reproduce the
+    direct embedding_ivf_topk result exactly, and its candidate scan
+    must read only the probed cell partitions (PartitionFilters on the
+    parquet scan)."""
+    from pyspark.sql import functions as F
+
     from hbase_tools_spark.catalog import load_model
     from hbase_tools_spark.llm.similarity import (
+        _label_centroids,
+        ivf_ingest_batch,
         ivf_topk_from_index,
-        materialize_ivf_index,
     )
     from hbase_tools_spark.registry import QUERIES
 
     m = load_model(spark, SF_DIR)
     idx = str(tmp_path / "ivf_index")
-    materialize_ivf_index(m.embeddings, idx)
+    cent = _label_centroids(m.embeddings)
+    cent_rows = [(int(r["label"]), list(r["c"])) for r in cent.collect()]
+    cent.select(F.col("label").alias("cell"), "c").write.parquet(idx + "/centroids")
+    ivf_ingest_batch(m.embeddings, idx, 0, cent_rows)
     from_index = ivf_topk_from_index(spark, idx)
     plan = from_index._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters: [" in plan and "cell" in plan.split(
@@ -369,33 +278,6 @@ def test_embedding_pair_bucket_cap_drops_hot_bucket(spark):
     finally:
         spark.conf.set("spark.hbase_tools.model_dir", "")
         load_model(spark, SF_DIR)
-
-
-def test_int8_codes_column_matches_oracle_sql(spark, ducksql):
-    """The Spark Column quantizer (_codes) and the oracle's _CODES_SQL
-    must stay pinned together: the query path scores via a numpy UDF,
-    so without this test the Column definition could silently drift
-    from the real quantizer (round-4 advice)."""
-    from pyspark.sql import functions as F
-
-    from hbase_tools_spark.llm.similarity import _CODES_SQL, _codes
-
-    m = load_model(spark, SF_DIR)
-    got = {
-        r["vec_id"]: list(r["code"])
-        for r in m.embeddings.select(
-            "vec_id", _codes(F.col("embedding")).alias("code")
-        ).collect()
-    }
-    pdf = ducksql(
-        "SELECT vec_id, "
-        + _CODES_SQL.format(a="embedding")
-        + " AS code FROM embeddings"
-    )
-    want = {
-        int(v): list(c) for v, c in zip(pdf["vec_id"], pdf["code"])
-    }
-    assert got == want
 
 
 def test_dup_spans_planted_duplicates(spark):
@@ -713,38 +595,6 @@ def test_pii_scrub_python_port(spark):
             assert r["clean"] and r["raw_chars"] == len(text)
         n_hits_total += r["n_pii"]
     assert n_hits_total > 0  # the scrub actually fires on the fixture
-
-
-def test_incremental_novelty_matches_full_curve(spark, tmp_path):
-    """The persisted first-seen index is the incremental production
-    shape: ingesting the fixture's batches in order through
-    novelty_ingest_batch must reproduce corpus_novelty_curve's rows
-    EXACTLY, while each step only probes the index (no history
-    recompute) and appends one new partition."""
-    import os
-
-    import hbase_tools_spark.llm  # noqa: F401
-    from pyspark.sql import functions as F
-
-    from hbase_tools_spark.llm.dedup import _NOVELTY_BATCH, novelty_ingest_batch
-    from hbase_tools_spark.registry import QUERIES
-
-    m = load_model(spark, SF_DIR)
-    full = {r["batch"]: r for r in QUERIES["corpus_novelty_curve"].fn(m).collect()}
-    idx = str(tmp_path / "first_seen")
-    batches = sorted(full)
-    for b in batches[:4]:  # four steps keep the test fast
-        docs = m.documents.where(
-            F.floor(F.col("doc_id") / _NOVELTY_BATCH) == b
-        )
-        got = novelty_ingest_batch(spark, idx, docs, int(b))
-        want = full[b]
-        assert got["n_docs"] == want["n_docs"], b
-        assert got["n_windows"] == want["n_windows"], b
-        assert got["n_novel"] == want["n_novel"], b
-        assert got["novelty_rate"] == want["novelty_rate"], b
-    parts = [e for e in os.listdir(idx) if e.startswith("first_batch=")]
-    assert len(parts) == 4  # one partition per ingested batch
 
 
 def test_png_codec_roundtrip_property():
@@ -1403,41 +1253,6 @@ def test_neardup_triangles_match_bruteforce(spark):
     assert sum(got.values()) % 3 == 0  # each triangle counted at 3 nodes
 
 
-def test_bloom_novelty_one_sided_and_bounded(spark, tmp_path):
-    """The Bloom-state novelty twin: per batch the estimate never
-    EXCEEDS the exact novelty (false positives only deflate it), it
-    stays close at fixture scale (filter far under capacity), and the
-    persisted state is position-bounded — at most 3 rows per distinct
-    window and never more than the filter size, regardless of corpus."""
-    import hbase_tools_spark.llm  # noqa: F401
-    from pyspark.sql import functions as F
-
-    from hbase_tools_spark.llm.dedup import (
-        _NOV_BLOOM_M, _NOVELTY_BATCH, novelty_ingest_bloom,
-    )
-    from hbase_tools_spark.registry import QUERIES
-
-    m = load_model(spark, SF_DIR)
-    full = {r["batch"]: r for r in QUERIES["corpus_novelty_curve"].fn(m).collect()}
-    idx = str(tmp_path / "bloom_bits")
-    total_windows = 0
-    for b in sorted(full)[:4]:
-        docs = m.documents.where(
-            F.floor(F.col("doc_id") / _NOVELTY_BATCH) == b
-        )
-        got = novelty_ingest_bloom(spark, idx, docs, int(b))
-        want = full[b]
-        assert got["n_windows"] == want["n_windows"], b
-        assert got["n_novel_est"] <= want["n_novel"], b  # one-sided
-        # far below filter capacity -> estimates essentially exact
-        assert got["n_novel_est"] >= want["n_novel"] * 0.98, b
-        total_windows += want["n_novel"]
-    state_rows = spark.read.parquet(idx).count()
-    assert state_rows <= min(_NOV_BLOOM_M, 3 * total_windows)
-    distinct_rows = spark.read.parquet(idx).select("p").distinct().count()
-    assert distinct_rows == state_rows  # appends never duplicate a position
-
-
 def test_ann_recall_scoreboard_consistent_with_legs(spark):
     """The recall relation is exactly the set intersection of each
     method's certified result with the certified exact top-k (recomputed
@@ -1536,22 +1351,19 @@ def test_exact_cosine_ranks_helper_pins_to_embedding_topk(spark):
 
 def test_ivf_stream_ingest_additive_and_replay_idempotent(spark, tmp_path):
     """The streaming ANN ingest contract: (a) an index built in two
-    batch cycles serves exactly like the single-shot materialize, and
-    (b) replaying a batch_id (the foreachBatch at-least-once case)
-    leaves the served result unchanged."""
+    batch cycles serves exactly like the direct embedding_ivf_topk
+    search, and (b) replaying a batch_id (the foreachBatch
+    at-least-once case) leaves the served result unchanged."""
     from hbase_tools_spark.catalog import load_model
     from hbase_tools_spark.llm.similarity import (
         _label_centroids,
         ivf_ingest_batch,
         ivf_topk_from_index,
-        materialize_ivf_index,
     )
+    from hbase_tools_spark.registry import QUERIES
     from pyspark.sql import functions as F
 
     m = load_model(spark, SF_DIR)
-    full = str(tmp_path / "ivf_full")
-    materialize_ivf_index(m.embeddings, full)
-
     inc = str(tmp_path / "ivf_inc")
     cent = _label_centroids(m.embeddings)
     cent_rows = [(int(r["label"]), list(r["c"])) for r in cent.collect()]
@@ -1563,8 +1375,7 @@ def test_ivf_stream_ingest_additive_and_replay_idempotent(spark, tmp_path):
     ivf_ingest_batch(lo, inc, 0, cent_rows)
     ivf_ingest_batch(hi, inc, 1, cent_rows)
 
-    key = lambda r: (r["query_id"], r["rank"])
-    want = sorted(map(tuple, ivf_topk_from_index(spark, full).collect()))
+    want = sorted(map(tuple, QUERIES["embedding_ivf_topk"].fn(m).collect()))
     got = sorted(map(tuple, ivf_topk_from_index(spark, inc).collect()))
     assert got == want
     # replay batch 1 with the same composition: exactly-once state
@@ -1596,22 +1407,19 @@ def test_ivf_stream_served_guards_view_swap(spark):
 
 def test_signature_stream_store_additive_and_replay_idempotent(spark, tmp_path):
     """The streaming signature ingest contract: a store built in two
-    batch cycles pairs exactly like the single-shot materialize, and a
-    replayed batch_id leaves the pair relation unchanged."""
+    batch cycles pairs exactly like the direct minhash_pairs_for over
+    the corpus, and a replayed batch_id leaves the pair relation
+    unchanged."""
     from hbase_tools_spark.catalog import load_model
     from hbase_tools_spark.llm.dedup import (
-        materialize_signatures,
+        minhash_pairs_for,
         pairs_from_signatures,
         signature_ingest_batch,
     )
     from pyspark.sql import functions as F
 
     m = load_model(spark, SF_DIR)
-    full = str(tmp_path / "sig_full")
-    materialize_signatures(m.documents, full)
-    want = sorted(
-        map(tuple, pairs_from_signatures(spark.read.parquet(full)).collect())
-    )
+    want = sorted(map(tuple, minhash_pairs_for(m.documents).collect()))
 
     inc = str(tmp_path / "sig_inc")
     lo = m.documents.where(F.col("doc_id") % 2 == 0)

@@ -415,38 +415,6 @@ def test_split_leakage_matches_python_port(spark):
     assert n_test == len(rows) > 0
 
 
-def test_epoch_shuffle_manifest_partition_pruned(spark, tmp_path):
-    """The persisted manifest equals the query's epoch-0 slice, a
-    single-shard read is partition-pruned (static PartitionFilter, no
-    corpus touch), and rows inside a shard file arrive already in
-    position order."""
-    from hbase_tools_spark.llm.pipeline import materialize_epoch_shuffle
-
-    m = load_model(spark, SF_DIR)
-    out = str(tmp_path / "epoch0")
-    materialize_epoch_shuffle(m.documents, 0, out)
-
-    manifest = spark.read.parquet(out)
-    got = {
-        (r["doc_id"], int(r["shard"]), r["position"])
-        for r in manifest.collect()
-    }
-    expect = {
-        (r["doc_id"], r["shard"], r["position"])
-        for r in QUERIES["docs_epoch_shuffle"].fn(m).collect()
-        if r["epoch"] == 0
-    }
-    assert got == expect
-
-    one = manifest.where("shard = 3")
-    plan = one._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters: [isnotnull(shard" in plan.replace("#", "shard#") or \
-        "shard" in plan.split("PartitionFilters:")[1].split("]")[0]
-    rows = one.collect()  # single file per shard: arrival order = file order
-    assert [r["position"] for r in rows] == sorted(r["position"] for r in rows)
-    assert rows and rows[0]["position"] == 1
-
-
 def test_corpus_version_diff_conserves_both_snapshots(spark):
     """Status counts reconcile exactly with the derived old/new version
     populations: old = removed+changed+unchanged, new =

@@ -52,33 +52,6 @@ def test_embedding_topk_pushes_probe_filter_to_scan(spark):
     assert "LessThan(vec_id" in plan, "probe filter no longer pushed to parquet"
 
 
-def test_bucketed_join_has_zero_exchange(spark):
-    """Storage-scale claim, frozen as a test: two tables bucketed on
-    region_id with equal bucket counts join with NO shuffle (and no
-    broadcast needed) — the co-located J1 layout for the 100 TB hot
-    path."""
-    from hbase_tools_spark.sources.tables import write_bucketed_table
-
-    m = load_model(spark, SF_DIR)
-    write_bucketed_table(m.meta_regions, "mr_bucketed", "region_id", 8)
-    write_bucketed_table(m.region_metrics, "rm_bucketed", "region_id", 8)
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        joined = spark.table("mr_bucketed").join(
-            spark.table("rm_bucketed"), "region_id"
-        )
-        plan = joined._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" not in plan, "bucketed join gained a shuffle"
-        assert "SortMergeJoin" in plan
-        # sortBy metadata removes the per-task sorts too
-        assert joined.count() > 0
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-        spark.sql("DROP TABLE IF EXISTS mr_bucketed")
-        spark.sql("DROP TABLE IF EXISTS rm_bucketed")
-
-
 def test_salted_rollup_is_two_phase(spark):
     """The skew-safe rollup must really aggregate in two phases keyed
     through the salt: the salt column appears in the plan and there are
@@ -239,8 +212,10 @@ def test_jaccard_shj_hint_is_size_guarded(spark, tmp_path):
     scale (both sides hashed — the measured-faster local plan) and
     DROP above the documents-bytes threshold, where a forced SHJ
     build map OOMs and the sort-merge fallback spills (measured at
-    the 100x fixture, 8 g default heap — round 11)."""
+    the 100x fixture, 8 g default heap — round 11).  No unguarded
+    ``hint("shuffle_hash")`` call may remain anywhere in the package."""
     import os
+    import subprocess
 
     from hbase_tools_spark.catalog import Model
     from hbase_tools_spark.llm import dedup as D
@@ -262,47 +237,15 @@ def test_jaccard_shj_hint_is_size_guarded(spark, tmp_path):
         unhinted._jdf.queryExecution().logical().toString()
     ), "over-threshold corpus kept the forced SHJ hint"
 
-
-def test_dir_shj_hint_is_size_guarded(spark, tmp_path):
-    """Round-12: every forced shuffle_hash site is size-guarded (the
-    r11 verdict's residual-hint-sites item).  The index-directory
-    variant must hint below the threshold and fall back to the
-    spill-safe sort-merge above it — and no unguarded
-    ``hint("shuffle_hash")`` call may remain anywhere in the package
-    (the two sites inside the guard helpers are the allowed ones)."""
-    import os
-    import subprocess
-
-    from hbase_tools_spark.llm import dedup as D
-
-    df = spark.range(1)
-    small = tmp_path / "idx_small"
-    small.mkdir()
-    with open(small / "part-0.parquet", "wb") as fh:
-        fh.write(b"x" * 128)
-    hinted = D._dir_shj(df, spark, str(small))
-    assert "UnresolvedHint shuffle_hash" in (
-        hinted._jdf.queryExecution().logical().toString()
-    ), "small index dir lost the shuffle_hash hint"
-
-    big = tmp_path / "idx_big"
-    big.mkdir()
-    with open(big / "part-0.parquet", "wb") as fh:
-        fh.truncate(D._SHJ_DOCS_BYTES + 1)
-    unhinted = D._dir_shj(df, spark, str(big))
-    assert "UnresolvedHint" not in (
-        unhinted._jdf.queryExecution().logical().toString()
-    ), "over-threshold index dir kept the forced SHJ hint"
-
     pkg = os.path.join(os.path.dirname(D.__file__), "..")
     out = subprocess.run(
         ["grep", "-rn", 'hint("shuffle_hash")', os.path.abspath(pkg)],
         capture_output=True, text=True,
     ).stdout
-    # the only allowed raw-hint lines are the two inside the guard
-    # helpers themselves (_corpus_shj / _dir_shj in dedup.py)
+    # the only allowed raw-hint line is the one inside the guard
+    # helper itself (_corpus_shj in dedup.py)
     raw = [ln for ln in out.splitlines() if ln.strip()]
-    allowed = [ln for ln in raw if "def _" in ln or "return df.hint" in ln]
+    allowed = [ln for ln in raw if "return df.hint" in ln]
     assert raw == allowed, f"unguarded shuffle_hash sites: {set(raw) - set(allowed)}"
 
 
@@ -357,18 +300,15 @@ def test_scratch_dirs_come_from_the_one_work_root():
     assert out.split() == [os.path.abspath(workdir.__file__)]
 
 
-def test_stream_stage_and_plan_sink_live_under_the_work_root(spark):
-    """The stream stage dir and the plan-refresh sink both lie under
-    ``workdir.root``, not under a hard-coded ``/tmp`` path."""
+def test_stream_stage_lives_under_the_work_root(spark):
+    """The stream stage dir lies under ``workdir.root``, not under a
+    hard-coded ``/tmp`` path."""
     import os
-    from urllib.parse import urlparse
 
     from hbase_tools_spark.functions import workdir
     from hbase_tools_spark.streaming import jobs as J
 
     root = workdir.root(spark) + os.sep
-    sink = J.compaction_plan_stream(spark, SF_DIR).inputFiles()
-    assert sink and all(urlparse(f).path.startswith(root) for f in sink)
     J.events_stream(spark, SF_DIR)
     stage, _ = J._STAGED[os.path.join(SF_DIR, "events.parquet")]
     assert stage.startswith(root)
@@ -384,3 +324,74 @@ def test_work_root_refuses_a_non_local_master():
     stub = SimpleNamespace(sparkContext=SimpleNamespace(master="spark://h:7077"))
     with pytest.raises(RuntimeError, match="share the driver's filesystem"):
         workdir.root(stub)
+
+
+#: Top-level defs no root reaches but the package keeps on purpose.
+_UNREACHED_ON_PURPOSE = {
+    # golden reference the JVM _midpoint12_hex is pinned against (test_keys.py)
+    "midpoint_key",
+    # public connector porting path; test_queries_green_on_kv_model runs it
+    "load_model_from_kv",
+}
+
+
+def test_every_package_function_is_reachable():
+    """Every top-level def in the package is reached from a root: an
+    ``@query`` function, module-level code, or a name used by
+    ``__spark_entry__.py``, ``bench.py``, ``scripts/`` or non-test
+    ``perfbench/``.  Uses are matched by name (a ``Name`` or an
+    attribute), which over-approximates reachability, so a live def is
+    never flagged; a def only tests call is."""
+    import ast
+    import glob
+    import os
+
+    import hbase_tools_spark as pkg
+
+    pkg_dir = os.path.dirname(os.path.abspath(pkg.__file__))
+    repo = os.path.dirname(pkg_dir)
+
+    def names(node) -> set:
+        return {
+            n.id if isinstance(n, ast.Name) else n.attr
+            for n in ast.walk(node)
+            if isinstance(n, (ast.Name, ast.Attribute))
+        }
+
+    def parse(path):
+        with open(path) as fh:
+            return ast.parse(fh.read(), path)
+
+    uses: dict[str, set] = {}  # def name -> names its body uses
+    roots: set = set()
+    for path in glob.glob(os.path.join(pkg_dir, "**", "*.py"), recursive=True):
+        for node in parse(path).body:
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+                uses.setdefault(node.name, set()).update(names(node))
+                # decorators and defaults run at import time
+                for d in node.decorator_list:
+                    roots |= names(d)
+                    if "query" in names(d):
+                        roots.add(node.name)
+                if not isinstance(node, ast.ClassDef):
+                    for d in filter(None, node.args.defaults + node.args.kw_defaults):
+                        roots |= names(d)
+            elif not isinstance(node, (ast.Import, ast.ImportFrom)):
+                roots |= names(node)
+    entry = [os.path.join(repo, "__spark_entry__.py"), os.path.join(repo, "bench.py")]
+    entry += glob.glob(os.path.join(repo, "scripts", "*.py"))
+    entry += glob.glob(os.path.join(repo, "perfbench", "*.py"))
+    for path in entry:
+        roots |= names(parse(path))
+
+    reached, todo = set(), roots & set(uses)
+    while todo:
+        name = todo.pop()
+        reached.add(name)
+        todo |= (uses[name] & set(uses)) - reached
+    unreached = set(uses) - reached
+    assert unreached == _UNREACHED_ON_PURPOSE, (
+        f"only tests reach: {sorted(unreached - _UNREACHED_ON_PURPOSE)}; "
+        f"now reached, drop from the allowlist: "
+        f"{sorted(_UNREACHED_ON_PURPOSE - unreached)}"
+    )

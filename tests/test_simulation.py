@@ -110,28 +110,6 @@ def test_merge_passes_converge(spark):
     assert one_pass({k: dict(v) for k, v in state.items()}) == 0
 
 
-def test_multipass_merge_reaches_fixpoint(spark):
-    """The library loop (multipass_merge_plans) must terminate at the
-    reference's terminal condition — an empty pass — with contiguous
-    pass ids and a final region count equal to initial minus every
-    merged pair (each pair removes exactly one region)."""
-    from hbase_tools_spark.operators.planners import (
-        _merge_pairs,
-        _merge_state,
-        multipass_merge_plans,
-    )
-
-    m = load_model(spark, SF_DIR)
-    plans, final = multipass_merge_plans(_merge_state(m))
-    assert _merge_pairs(final).count() == 0, "final state still mergeable"
-    per_pass = {
-        r["pass_id"]: r["count"]
-        for r in plans.groupBy("pass_id").count().collect()
-    }
-    assert sorted(per_pass) == list(range(1, len(per_pass) + 1))
-    assert final.count() == _merge_state(m).count() - sum(per_pass.values())
-
-
 def test_split_points_bisect_their_region(spark):
     """Applying a split replaces [start,end) with two non-empty halves:
     the midpoint must be strictly inside the range (with the 8x0xFF

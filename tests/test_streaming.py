@@ -1,7 +1,7 @@
 """M7 streaming tests: oracle parity of the run-to-completion streaming
 queries, true multi-batch incremental execution (statefulness across
-micro-batches), bounded-state dedup, and the foreachBatch plan-refresh
-cycle (SURVEY.md §2.8 S1/S4/F11/S8)."""
+micro-batches), bounded-state dedup, and the stateful drains
+(SURVEY.md §2.8 S1/S4/F11/S8)."""
 
 from __future__ import annotations
 
@@ -76,52 +76,6 @@ def test_stream_asof_enrichment_against_topology_store(spark, tmp_path):
     }
     assert got == expect and got
     assert all(s.startswith("e2000_") for s in got), "floor snapshot not picked"
-
-
-def test_dedup_ingest_stream_reconstructs_full_pairing(spark, tmp_path):
-    """Continuous-ingest dedup: documents streamed in 3 micro-batches
-    through the foreachBatch index loop must discover exactly the
-    full-corpus candidate pairs, each exactly once, and leave the index
-    holding every signature."""
-    from hbase_tools_spark.catalog import load_model
-    from hbase_tools_spark.llm.dedup import minhash_pairs_for
-    from hbase_tools_spark.streaming.ingest import dedup_ingest_stream
-
-    m = load_model(spark, SF_DIR)
-    src = str(tmp_path / "docs_in")
-    os.makedirs(src)
-    # three arrival files (deterministic split by doc_id)
-    for i in range(3):
-        (
-            m.documents.filter(F.col("doc_id") % 3 == i)
-            .select("doc_id", "text")
-            .coalesce(1)
-            .write.parquet(os.path.join(src, f"arrival-{i}.parquet"))
-        )
-    index_dir = str(tmp_path / "sig_index")
-    pairs_dir = str(tmp_path / "pairs_log")
-    stream = (
-        spark.readStream.schema("doc_id long, text string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src + "/*.parquet")
-    )
-    q = dedup_ingest_stream(
-        stream, index_dir, pairs_dir, str(tmp_path / "ckpt")
-    )
-    q.awaitTermination()
-    assert len(q.recentProgress) >= 3, "expected one micro-batch per arrival file"
-
-    logged = spark.read.parquet(pairs_dir).select("doc_a", "doc_b").collect()
-    got = [(r["doc_a"], r["doc_b"]) for r in logged]
-    full = {
-        (r["doc_a"], r["doc_b"]) for r in minhash_pairs_for(m.documents).collect()
-    }
-    assert set(got) == full and full
-    assert len(got) == len(set(got)), "a pair was discovered twice"
-    n_sigs = spark.read.parquet(index_dir).count()
-    from hbase_tools_spark.llm.dedup import _signatures_for
-
-    assert n_sigs == _signatures_for(m.documents).count()
 
 
 def _split_events(spark, tmp_path, n_files=3):
@@ -217,24 +171,6 @@ def test_dedup_within_watermark_bounded_state(spark, tmp_path):
         .collect()
     }
     assert got == expect
-
-
-def test_compaction_plan_stream_foreachbatch(spark):
-    """S1 — the foreachBatch refresh cycle emits a full compaction plan
-    per micro-batch, tagged with its batch id, and the plan rows equal
-    the batch compaction_plan query."""
-    from hbase_tools_spark.catalog import load_model
-    from hbase_tools_spark.registry import QUERIES
-    from hbase_tools_spark.streaming.jobs import compaction_plan_stream
-
-    out = compaction_plan_stream(spark, SF_DIR)
-    batch_ids = {r["batch_id"] for r in out.select("batch_id").distinct().collect()}
-    assert batch_ids, "no micro-batches ran"
-    one = out.filter(F.col("batch_id") == min(batch_ids)).drop("batch_id")
-    expect = QUERIES["compaction_plan"].fn(load_model(spark, SF_DIR))
-    got_rows = sorted(map(tuple, one.collect()))
-    exp_rows = sorted(map(tuple, expect.collect()))
-    assert got_rows == exp_rows
 
 
 def test_membership_changes_stateful_across_batches(spark, tmp_path):
@@ -538,85 +474,6 @@ def test_checkpoint_resume_processes_only_new_files(spark, tmp_path):
     assert run_once() == 3, "restart reprocessed already-committed files"
     got = sorted(r["v"] for r in spark.read.parquet(out).collect())
     assert got == [1, 2, 3, 4, 5]
-
-
-def test_dedup_ingest_batch_replay_idempotent(spark, tmp_path):
-    """foreachBatch is at-least-once: replaying a batch (same batch_id)
-    after any partial failure must leave the pairs log and the index
-    byte-identical — the idempotent-partition-overwrite contract.  Also
-    covers replay AFTER both writes landed (checkpoint lost): the
-    index read excludes the batch's own partition."""
-    from hbase_tools_spark.catalog import load_model
-    from hbase_tools_spark.streaming.ingest import dedup_ingest_batch
-
-    m = load_model(spark, SF_DIR)
-    batches = [
-        m.documents.filter(F.col("doc_id") % 2 == i).select("doc_id", "text")
-        for i in range(2)
-    ]
-    index_dir = str(tmp_path / "sig_index")
-    pairs_dir = str(tmp_path / "pairs_log")
-    dedup_ingest_batch(spark, batches[0], index_dir, pairs_dir, 0)
-    dedup_ingest_batch(spark, batches[1], index_dir, pairs_dir, 1)
-
-    def snapshot():
-        pairs = sorted(
-            (r["doc_a"], r["doc_b"], r["batch_id"])
-            for r in spark.read.parquet(pairs_dir).collect()
-        )
-        sigs = sorted(
-            (r["doc_id"], tuple(r["sig"]), r["batch_id"])
-            for r in spark.read.parquet(index_dir).collect()
-        )
-        return pairs, sigs
-
-    before = snapshot()
-    # replay batch 1 (simulates restart after the checkpoint was lost —
-    # both sinks already hold batch_id=1 partitions)
-    dedup_ingest_batch(spark, batches[1], index_dir, pairs_dir, 1)
-    assert snapshot() == before
-    pairs, _ = before
-    assert len(pairs) == len({(a, b) for a, b, _ in pairs}), "duplicate pair"
-
-
-def test_compact_pairs_log(spark, tmp_path):
-    """Compaction folds a re-ingested doc's re-discovered pairs to the
-    earliest batch_id.  The DEFAULT boundary spares the newest batch's
-    partition (the only batch a foreachBatch restart can replay — a
-    replay after a full fold would re-add folded pairs), so duplicates
-    vanish only once a newer batch exists or the caller folds
-    explicitly; the explicit full fold is exercised too, as is
-    idempotence."""
-    from hbase_tools_spark.catalog import load_model
-    from hbase_tools_spark.streaming.ingest import (
-        compact_pairs_log,
-        dedup_ingest_batch,
-    )
-
-    m = load_model(spark, SF_DIR)
-    docs = m.documents.select("doc_id", "text")
-    index_dir = str(tmp_path / "sig_index")
-    pairs_dir = str(tmp_path / "pairs_log")
-    dedup_ingest_batch(spark, docs, index_dir, pairs_dir, 0)
-    # the same docs re-arrive under a NEW batch id (source re-delivery,
-    # not a replay): their pairs are legitimately re-emitted...
-    dedup_ingest_batch(spark, docs, index_dir, pairs_dir, 1)
-    raw = spark.read.parquet(pairs_dir).collect()
-    keys = {(r["doc_a"], r["doc_b"]) for r in raw}
-    assert len(raw) > len(keys), "expected re-emitted pairs before compaction"
-    # default boundary: batch 1 is newest -> left untouched, so the
-    # duplicates it re-emitted survive this pass
-    compact_pairs_log(spark, pairs_dir)
-    kept = spark.read.parquet(pairs_dir).collect()
-    assert len(kept) == len(raw), "newest batch must not be rewritten"
-    # explicit full fold (caller asserts batches are committed)
-    compact_pairs_log(spark, pairs_dir, through_batch=1)
-    got = spark.read.parquet(pairs_dir).collect()
-    assert len(got) == len(keys)
-    assert {(r["doc_a"], r["doc_b"]) for r in got} == keys
-    assert all(r["batch_id"] == 0 for r in got), "earliest batch_id kept"
-    compact_pairs_log(spark, pairs_dir, through_batch=1)  # idempotent no-op
-    assert len(spark.read.parquet(pairs_dir).collect()) == len(keys)
 
 
 def test_funnel_stateful_late_arrival(spark, tmp_path):
