@@ -802,12 +802,9 @@ def _lm_artifact_dir(m: Model) -> str:
     from ..functions import workdir
     from ..functions.memo import model_cached
 
-    def build() -> str:
-        out = workdir.scratch(m.spark, "ppl_lm_")
-        materialize_ppl_lm(m.documents, out)
-        return out
-
-    return model_cached(m, "ppl_lm_artifact_dir", build)
+    return model_cached(m, "ppl_lm_artifact_dir", lambda: workdir.built(
+        m.spark, "ppl_lm_", lambda out: materialize_ppl_lm(m.documents, out)
+    ))
 
 
 def docs_ccnet_perplexity_served(m: Model) -> DataFrame:
@@ -1801,12 +1798,10 @@ def _lr_weights_dir(m: Model) -> str:
     from ..functions import workdir
     from ..functions.memo import model_cached
 
-    def build() -> str:
-        out = workdir.scratch(m.spark, "lr_weights_")
-        materialize_lr_weights(m.documents, out)
-        return out
-
-    return model_cached(m, "lr_weights_dir", build)
+    return model_cached(m, "lr_weights_dir", lambda: workdir.built(
+        m.spark, "lr_weights_",
+        lambda out: materialize_lr_weights(m.documents, out),
+    ))
 
 
 @query("docs_lr_quality_served", oracle=_lr_oracle(), views=[])

@@ -1802,27 +1802,6 @@ def signature_ingest_batch(
     )
 
 
-def signature_ingest_stream(
-    docs_stream: DataFrame, store_dir: str, checkpoint_dir: str
-):
-    """Continuous signature ingest: every arriving micro-batch of
-    documents signs into the persisted store through the idempotent
-    batch cycle (AvailableNow = deterministic backlog drain;
-    ProcessingTime = the continuous crawl loop)."""
-
-    def on_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        signature_ingest_batch(batch_df, store_dir, batch_id)
-
-    return (
-        docs_stream.writeStream.foreachBatch(on_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
 def _stream_signature_store_dir(m: Model) -> str:
     """Drain the documents fixture through the exactly-once signature
     ingest once per fixture dir and memoize the store path (sf_dir
@@ -1830,19 +1809,18 @@ def _stream_signature_store_dir(m: Model) -> str:
     assert the registered view mirrors it)."""
     from ..functions import workdir
     from ..functions.memo import sf_cached
-    from ..streaming.jobs import documents_stream
+    from ..streaming.jobs import documents_stream, drain_batches
 
-    def build() -> str:
-        out = workdir.scratch(m.spark, "sig_stream_store_")
-        with workdir.temp(m.spark, "sig_stream_ckpt_") as ckpt:
-            signature_ingest_stream(
-                documents_stream(m.spark, m.sf_dir).select("doc_id", "text"),
-                out,
-                ckpt,
-            ).awaitTermination()
-        return out
+    def fill(out: str) -> None:
+        drain_batches(
+            documents_stream(m.spark, m.sf_dir).select("doc_id", "text"),
+            lambda df, batch_id: signature_ingest_batch(df, out, batch_id),
+        )
 
-    return sf_cached(m.sf_dir, "sig_stream_store_dir", build)
+    return sf_cached(
+        m.sf_dir, "sig_stream_store_dir",
+        lambda: workdir.built(m.spark, "sig_stream_store_", fill),
+    )
 
 
 from ..registry import QUERIES as _Q  # noqa: E402 — reuse the direct oracle

@@ -40,6 +40,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..catalog import Model
+from ..functions.partitioning import spread_if_undersplit
 from ..registry import query
 
 # Feature vector flattened to scalar columns (f_len/f_first/f_last/
@@ -435,6 +436,41 @@ def multimodal_frame_sample(m: Model) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
+# The real-codec queries below share one shape: filter the documents,
+# spread them by doc_id, and map each document through its codec to at
+# most one typed output row.  ``_per_doc`` is that shape; each codec
+# supplies only its per-document ``row`` function.
+# ---------------------------------------------------------------------------
+
+#: pandas dtype of each Spark type a per-document row emits (nullable
+#: arrays, so an empty batch still carries its column types)
+_PD_DTYPES = {"bigint": "Int64", "long": "Int64", "int": "Int32",
+              "boolean": "boolean"}
+
+
+def _per_doc(media: DataFrame, row, schema: str) -> DataFrame:
+    """Map ``row`` over every document of ``media`` in one
+    zero-shuffle Arrow map stage.  ``row`` takes the selected columns
+    in order and returns a dict keyed by ``schema``'s column names, or
+    ``None`` to drop the document; each batch's frame is built in
+    ``schema``'s column order."""
+    cols = [c.split() for c in schema.split(",")]
+
+    def per_doc(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            rows = [
+                r for r in map(row, *(pdf[c] for c in pdf.columns))
+                if r is not None
+            ]
+            yield pd.DataFrame({
+                name: pd.array([r[name] for r in rows], dtype=_PD_DTYPES[t])
+                for name, t in cols
+            })
+
+    return spread_if_undersplit(media, "doc_id").mapInPandas(per_doc, schema)
+
+
+# ---------------------------------------------------------------------------
 # REAL image decode: PNG via the pure-stdlib codec (llm/png.py).
 # PIL is absent, but PNG is chunk framing + CRC-32 + DEFLATE (zlib is
 # stdlib) + five scanline filters — all implemented for real.  This
@@ -456,46 +492,25 @@ PNG_STATS_SCHEMA = (
 )
 
 
-def _png_roundtrip_stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+def _png_row(doc_id, text):
     from .png import decode_png, encode_png
 
+    data = text.encode("utf-8")
+    n = len(data)
+    if n == 0:
+        return None
     W = _PNG_W
-    for pdf in batches:
-        out = {k: [] for k in (
-            "doc_id", "width", "height", "n_pixels", "px_sum",
-            "px_min", "px_max", "n_pad_zero",
-        )}
-        for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-            data = text.encode("utf-8")
-            n = len(data)
-            if n == 0:
-                continue
-            h = (n + W - 1) // W
-            px = data + bytes(W * h - n)
-            # vary the row filter deterministically so every decode
-            # exercises all five unfilter branches over real data
-            png = encode_png(W, h, px, 0, [y % 5 for y in range(h)])
-            w2, h2, _, decoded = decode_png(png)
-            out["doc_id"].append(doc_id)
-            out["width"].append(w2)
-            out["height"].append(h2)
-            out["n_pixels"].append(w2 * h2)
-            out["px_sum"].append(sum(decoded))
-            out["px_min"].append(min(decoded))
-            out["px_max"].append(max(decoded))
-            out["n_pad_zero"].append(decoded.count(0))
-        yield pd.DataFrame(
-            {
-                "doc_id": pd.array(out["doc_id"], dtype="Int64"),
-                "width": pd.array(out["width"], dtype="Int32"),
-                "height": pd.array(out["height"], dtype="Int32"),
-                "n_pixels": pd.array(out["n_pixels"], dtype="Int64"),
-                "px_sum": pd.array(out["px_sum"], dtype="Int64"),
-                "px_min": pd.array(out["px_min"], dtype="Int32"),
-                "px_max": pd.array(out["px_max"], dtype="Int32"),
-                "n_pad_zero": pd.array(out["n_pad_zero"], dtype="Int64"),
-            }
-        )
+    h = (n + W - 1) // W
+    px = data + bytes(W * h - n)
+    # vary the row filter deterministically so every decode exercises
+    # all five unfilter branches over real data
+    png = encode_png(W, h, px, 0, [y % 5 for y in range(h)])
+    w2, h2, _, decoded = decode_png(png)
+    return {
+        "doc_id": doc_id, "width": w2, "height": h2, "n_pixels": w2 * h2,
+        "px_sum": sum(decoded), "px_min": min(decoded),
+        "px_max": max(decoded), "n_pad_zero": decoded.count(0),
+    }
 
 
 @query(
@@ -535,11 +550,7 @@ def multimodal_png_stats(m: Model) -> DataFrame:
     media = m.documents.select("doc_id", "text").where(
         (F.col("doc_id") % 3 == 0) & (F.length("text") > 0)
     )
-    from ..functions.partitioning import spread_if_undersplit
-
-    return spread_if_undersplit(media, "doc_id").mapInPandas(
-        _png_roundtrip_stats, PNG_STATS_SCHEMA
-    )
+    return _per_doc(media, _png_row, PNG_STATS_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -567,44 +578,29 @@ WAV_STATS_SCHEMA = (
 )
 
 
-def _wav_pcm_stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        out = {k: [] for k in (
-            "doc_id", "n_samples", "peak", "sum_sq", "n_zero_cross",
-        )}
-        for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-            data = text.encode("utf-8")
-            ns = len(data) // 2
-            if ns == 0:
-                continue
-            samples = [
-                data[2 * i] + 256 * data[2 * i + 1] - _PCM_BIAS
-                for i in range(ns)
-            ]
-            wav = build_wav(8000, 1, struct.pack(f"<{ns}h", *samples))
-            # REAL decode: header fields + every sample back out of the
-            # container bytes
-            rate, ch, bits = parse_wav(wav)
-            if (rate, ch, bits) != (8000, 1, 16):
-                raise ValueError("WAV header roundtrip failed")
-            (dn,) = struct.unpack_from("<I", wav, 40)
-            dec = struct.unpack_from(f"<{dn // 2}h", wav, 44)
-            out["doc_id"].append(doc_id)
-            out["n_samples"].append(len(dec))
-            out["peak"].append(max(abs(v) for v in dec))
-            out["sum_sq"].append(sum(v * v for v in dec))
-            out["n_zero_cross"].append(
-                sum(1 for a, b in zip(dec, dec[1:]) if a * b < 0)
-            )
-        yield pd.DataFrame(
-            {
-                "doc_id": pd.array(out["doc_id"], dtype="Int64"),
-                "n_samples": pd.array(out["n_samples"], dtype="Int64"),
-                "peak": pd.array(out["peak"], dtype="Int32"),
-                "sum_sq": pd.array(out["sum_sq"], dtype="Int64"),
-                "n_zero_cross": pd.array(out["n_zero_cross"], dtype="Int64"),
-            }
-        )
+def _wav_pcm_row(doc_id, text):
+    data = text.encode("utf-8")
+    ns = len(data) // 2
+    if ns == 0:
+        return None
+    samples = [
+        data[2 * i] + 256 * data[2 * i + 1] - _PCM_BIAS for i in range(ns)
+    ]
+    wav = build_wav(8000, 1, struct.pack(f"<{ns}h", *samples))
+    # REAL decode: header fields + every sample back out of the
+    # container bytes
+    rate, ch, bits = parse_wav(wav)
+    if (rate, ch, bits) != (8000, 1, 16):
+        raise ValueError("WAV header roundtrip failed")
+    (dn,) = struct.unpack_from("<I", wav, 40)
+    dec = struct.unpack_from(f"<{dn // 2}h", wav, 44)
+    return {
+        "doc_id": doc_id,
+        "n_samples": len(dec),
+        "peak": max(abs(v) for v in dec),
+        "sum_sq": sum(v * v for v in dec),
+        "n_zero_cross": sum(1 for a, b in zip(dec, dec[1:]) if a * b < 0),
+    }
 
 
 from ..functions.exprs import fround, fround_sql  # noqa: E402
@@ -649,14 +645,10 @@ def multimodal_wav_pcm_stats(m: Model) -> DataFrame:
     exact integer sum of squares (IEEE sqrt of an exact-int ratio —
     identical doubles both engines).  One zero-shuffle Arrow map
     stage."""
-    from ..functions.partitioning import spread_if_undersplit
-
     media = m.documents.select("doc_id", "text").where(
         (F.col("doc_id") % 3 == 1) & (F.length("text") >= 2)
     )
-    stats = spread_if_undersplit(media, "doc_id").mapInPandas(
-        _wav_pcm_stats, WAV_STATS_SCHEMA
-    )
+    stats = _per_doc(media, _wav_pcm_row, WAV_STATS_SCHEMA)
     rms = F.sqrt(F.col("sum_sq").cast("double") / F.col("n_samples"))
     return stats.select(
         "doc_id", "n_samples", "peak", "sum_sq", "n_zero_cross",
@@ -683,39 +675,23 @@ GIF_STATS_SCHEMA = (
 )
 
 
-def _gif_roundtrip_stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+def _gif_row(doc_id, text):
     from .gif import build_gif, parse_gif
 
+    data = text.encode("utf-8")
+    n = len(data)
+    if n == 0:
+        return None
     W, C = _GIF_W, _GIF_COLORS
     palette = bytes(3 * C)  # C gray triples (values irrelevant to pixels)
-    for pdf in batches:
-        out = {k: [] for k in (
-            "doc_id", "width", "height", "n_pixels", "index_sum", "pos_sum",
-        )}
-        for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-            data = text.encode("utf-8")
-            n = len(data)
-            if n == 0:
-                continue
-            h = (n + W - 1) // W
-            idx = bytes(b % C for b in data) + bytes(W * h - n)
-            w2, h2, _, dec = parse_gif(build_gif(W, h, palette, idx))
-            out["doc_id"].append(doc_id)
-            out["width"].append(w2)
-            out["height"].append(h2)
-            out["n_pixels"].append(w2 * h2)
-            out["index_sum"].append(sum(dec))
-            out["pos_sum"].append(sum(i * v for i, v in enumerate(dec, 1)))
-        yield pd.DataFrame(
-            {
-                "doc_id": pd.array(out["doc_id"], dtype="Int64"),
-                "width": pd.array(out["width"], dtype="Int32"),
-                "height": pd.array(out["height"], dtype="Int32"),
-                "n_pixels": pd.array(out["n_pixels"], dtype="Int64"),
-                "index_sum": pd.array(out["index_sum"], dtype="Int64"),
-                "pos_sum": pd.array(out["pos_sum"], dtype="Int64"),
-            }
-        )
+    h = (n + W - 1) // W
+    idx = bytes(b % C for b in data) + bytes(W * h - n)
+    w2, h2, _, dec = parse_gif(build_gif(W, h, palette, idx))
+    return {
+        "doc_id": doc_id, "width": w2, "height": h2, "n_pixels": w2 * h2,
+        "index_sum": sum(dec),
+        "pos_sum": sum(i * v for i, v in enumerate(dec, 1)),
+    }
 
 
 @query(
@@ -750,14 +726,10 @@ def multimodal_gif_stats(m: Model) -> DataFrame:
     catches ordering bugs a plain sum cannot.  The codec's bit packing
     is pinned to the published minimal-GIF interop vector (clear, 0,
     EOI = ``44 01``) in tests.  One zero-shuffle Arrow map stage."""
-    from ..functions.partitioning import spread_if_undersplit
-
     media = m.documents.select("doc_id", "text").where(
         (F.col("doc_id") % 3 == 0) & (F.length("text") >= 1)
     )
-    return spread_if_undersplit(media, "doc_id").mapInPandas(
-        _gif_roundtrip_stats, GIF_STATS_SCHEMA
-    )
+    return _per_doc(media, _gif_row, GIF_STATS_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -791,35 +763,22 @@ def _goertzel_power(samples, k: int, n: int) -> float:
     return s1 * s1 + s2 * s2 - coeff * s1 * s2
 
 
-def _wav_tone_detect(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+def _wav_tone_row(doc_id):
     n, amp = _TONE_N, _TONE_AMP
-    for pdf in batches:
-        out = {c: [] for c in ("doc_id", "n_samples", "detected_bin", "peak")}
-        for doc_id in pdf["doc_id"]:
-            k = 1 + int(doc_id) % _TONE_BINS
-            samples = [
-                int(math.floor(amp * math.sin(2 * math.pi * k * i / 64.0) + 0.5))
-                for i in range(n)
-            ]
-            wav = build_wav(8000, 1, struct.pack(f"<{n}h", *samples))
-            (dn,) = struct.unpack_from("<I", wav, 40)
-            dec = struct.unpack_from(f"<{dn // 2}h", wav, 44)
-            powers = [
-                _goertzel_power(dec, b, n) for b in range(1, _TONE_BINS + 1)
-            ]
-            best = max(range(_TONE_BINS), key=lambda b: powers[b]) + 1
-            out["doc_id"].append(int(doc_id))
-            out["n_samples"].append(len(dec))
-            out["detected_bin"].append(best)
-            out["peak"].append(max(abs(v) for v in dec))
-        yield pd.DataFrame(
-            {
-                "doc_id": pd.array(out["doc_id"], dtype="Int64"),
-                "n_samples": pd.array(out["n_samples"], dtype="Int64"),
-                "detected_bin": pd.array(out["detected_bin"], dtype="Int32"),
-                "peak": pd.array(out["peak"], dtype="Int32"),
-            }
-        )
+    k = 1 + int(doc_id) % _TONE_BINS
+    samples = [
+        int(math.floor(amp * math.sin(2 * math.pi * k * i / 64.0) + 0.5))
+        for i in range(n)
+    ]
+    wav = build_wav(8000, 1, struct.pack(f"<{n}h", *samples))
+    (dn,) = struct.unpack_from("<I", wav, 40)
+    dec = struct.unpack_from(f"<{dn // 2}h", wav, 44)
+    powers = [_goertzel_power(dec, b, n) for b in range(1, _TONE_BINS + 1)]
+    best = max(range(_TONE_BINS), key=lambda b: powers[b]) + 1
+    return {
+        "doc_id": int(doc_id), "n_samples": len(dec), "detected_bin": best,
+        "peak": max(abs(v) for v in dec),
+    }
 
 
 @query(
@@ -860,12 +819,8 @@ def multimodal_wav_tone_detect(m: Model) -> DataFrame:
     ``sin`` + floor(x+0.5) chain, pinning the integer sample math.
     All certified columns are integers — the float spectra never cross
     the engine boundary.  One zero-shuffle Arrow map stage."""
-    from ..functions.partitioning import spread_if_undersplit
-
     media = m.documents.select("doc_id").where(F.col("doc_id") % 3 == 2)
-    return spread_if_undersplit(media, "doc_id").mapInPandas(
-        _wav_tone_detect, TONE_SCHEMA
-    )
+    return _per_doc(media, _wav_tone_row, TONE_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -901,39 +856,21 @@ JPEG_STATS_SCHEMA = (
 )
 
 
-def _jpeg_roundtrip_stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    import numpy as np
-
+def _jpeg_row(doc_id, text):
     from .jpeg import decode_jpeg, encode_jpeg
 
+    data = text.encode("utf-8")
+    n = len(data)
+    if n == 0:
+        return None
     W = _JPEG_W
-    for pdf in batches:
-        out = {k: [] for k in ("doc_id", "width", "height", "n_pixels",
-                               "psnr_ok")}
-        for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-            data = text.encode("utf-8")
-            n = len(data)
-            if n == 0:
-                continue
-            h = (n + W - 1) // W
-            px = data + bytes(W * h - n)
-            jpg = encode_jpeg(W, h, px, 1)
-            w2, h2, _, decoded = decode_jpeg(jpg)
-            psnr = _psnr(px, decoded)
-            out["doc_id"].append(doc_id)
-            out["width"].append(w2)
-            out["height"].append(h2)
-            out["n_pixels"].append(w2 * h2)
-            out["psnr_ok"].append(bool(psnr >= _JPEG_PSNR_MIN))
-        yield pd.DataFrame(
-            {
-                "doc_id": pd.array(out["doc_id"], dtype="Int64"),
-                "width": pd.array(out["width"], dtype="Int32"),
-                "height": pd.array(out["height"], dtype="Int32"),
-                "n_pixels": pd.array(out["n_pixels"], dtype="Int64"),
-                "psnr_ok": out["psnr_ok"],
-            }
-        )
+    h = (n + W - 1) // W
+    px = data + bytes(W * h - n)
+    w2, h2, _, decoded = decode_jpeg(encode_jpeg(W, h, px, 1))
+    return {
+        "doc_id": doc_id, "width": w2, "height": h2, "n_pixels": w2 * h2,
+        "psnr_ok": bool(_psnr(px, decoded) >= _JPEG_PSNR_MIN),
+    }
 
 
 @query(
@@ -963,14 +900,10 @@ def multimodal_jpeg_roundtrip(m: Model) -> DataFrame:
     uniform-block roundtrip under unit quantization, single-frequency
     cosine survival, near-lossless 58 dB at q=1 — are pinned in
     tests/test_llm.py.  One zero-shuffle Arrow map stage."""
-    from ..functions.partitioning import spread_if_undersplit
-
     media = m.documents.select("doc_id", "text").where(
         (F.col("doc_id") % 3 == 0) & (F.length("text") > 0)
     )
-    return spread_if_undersplit(media, "doc_id").mapInPandas(
-        _jpeg_roundtrip_stats, JPEG_STATS_SCHEMA
-    )
+    return _per_doc(media, _jpeg_row, JPEG_STATS_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -1076,41 +1009,22 @@ MP4_SCHEMA = (
 )
 
 
-def _mp4_roundtrip(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        out = {k: [] for k in ("doc_id", "n_bytes", "timescale",
-                               "duration_ms", "n_tracks", "track_w",
-                               "track_h", "mdat_bytes")}
-        for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-            payload = text.encode("utf-8")
-            ts = 1000 + int(doc_id) % 9000
-            dur = len(payload) * 40            # 40 ticks per byte
-            w, h = 320 + int(doc_id) % 320, 240 + int(doc_id) % 240
-            n_tracks = int(doc_id) % 2 + 1
-            tracks = [(i + 1, w, h) for i in range(n_tracks)]
-            mp4 = build_mp4(ts, dur, tracks, payload)
-            # REAL decode: walk the produced boxes
-            ts2, dur2, tracks2, mdat = parse_mp4(mp4)
-            out["doc_id"].append(doc_id)
-            out["n_bytes"].append(len(mp4))
-            out["timescale"].append(ts2)
-            out["duration_ms"].append(dur2 * 1000 // ts2)
-            out["n_tracks"].append(len(tracks2))
-            out["track_w"].append(tracks2[0][1])
-            out["track_h"].append(tracks2[0][2])
-            out["mdat_bytes"].append(mdat)
-        yield pd.DataFrame(
-            {
-                "doc_id": pd.array(out["doc_id"], dtype="Int64"),
-                "n_bytes": pd.array(out["n_bytes"], dtype="Int64"),
-                "timescale": pd.array(out["timescale"], dtype="Int32"),
-                "duration_ms": pd.array(out["duration_ms"], dtype="Int64"),
-                "n_tracks": pd.array(out["n_tracks"], dtype="Int32"),
-                "track_w": pd.array(out["track_w"], dtype="Int32"),
-                "track_h": pd.array(out["track_h"], dtype="Int32"),
-                "mdat_bytes": pd.array(out["mdat_bytes"], dtype="Int64"),
-            }
-        )
+def _mp4_row(doc_id, text):
+    payload = text.encode("utf-8")
+    ts = 1000 + int(doc_id) % 9000
+    dur = len(payload) * 40            # 40 ticks per byte
+    w, h = 320 + int(doc_id) % 320, 240 + int(doc_id) % 240
+    n_tracks = int(doc_id) % 2 + 1
+    tracks = [(i + 1, w, h) for i in range(n_tracks)]
+    mp4 = build_mp4(ts, dur, tracks, payload)
+    # REAL decode: walk the produced boxes
+    ts2, dur2, tracks2, mdat = parse_mp4(mp4)
+    return {
+        "doc_id": doc_id, "n_bytes": len(mp4), "timescale": ts2,
+        "duration_ms": dur2 * 1000 // ts2, "n_tracks": len(tracks2),
+        "track_w": tracks2[0][1], "track_h": tracks2[0][2],
+        "mdat_bytes": mdat,
+    }
 
 
 @query(
@@ -1142,12 +1056,8 @@ def multimodal_mp4_boxes(m: Model) -> DataFrame:
     formulas, so a box-layout or offset bug hash-mismatches.  H.264
     frame decode stays honestly stubbed — the codec layer genuinely
     needs ffmpeg; the container layer does not."""
-    from ..functions.partitioning import spread_if_undersplit
-
     media = m.documents.select("doc_id", "text").where(F.col("doc_id") % 3 == 2)
-    return spread_if_undersplit(media, "doc_id").mapInPandas(
-        _mp4_roundtrip, MP4_SCHEMA
-    )
+    return _per_doc(media, _mp4_row, MP4_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -1176,75 +1086,57 @@ MJPEG_SCHEMA = (
 )
 
 
-def _mjpeg_roundtrip(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    import numpy as np
+def _frames(data: bytes, stride: int) -> list:
+    """The ``_MJPEG_W`` x ``_MJPEG_H`` source planes of a video doc,
+    ceil(bytes / plane) of them: frame i starts ``i * stride`` bytes
+    into the zero-padded payload."""
+    fsz = _MJPEG_W * _MJPEG_H
+    n_frames = (len(data) + fsz - 1) // fsz
+    need = (n_frames - 1) * stride + fsz
+    padded = data + bytes(max(0, need - len(data)))
+    return [padded[i * stride : i * stride + fsz] for i in range(n_frames)]
 
+
+def _mjpeg_row(doc_id, text):
     from .avi import build_avi_mjpeg, parse_avi
     from .jpeg import decode_jpeg, encode_jpeg
 
+    data = text.encode("utf-8")
+    if not data:
+        return None
     W, H = _MJPEG_W, _MJPEG_H
-    fsz = W * H
-    for pdf in batches:
-        out = {k: [] for k in (
-            "doc_id", "width", "height", "n_frames", "n_sampled",
-            "duration_us", "container_ok", "frames_ok",
-        )}
-        for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-            data = text.encode("utf-8")
-            if not data:
-                continue
-            n_frames = (len(data) + fsz - 1) // fsz
-            padded = data + bytes(n_frames * fsz - len(data))
-            originals = [
-                padded[i * fsz : (i + 1) * fsz] for i in range(n_frames)
-            ]
-            avi = build_avi_mjpeg(
-                W, H, [encode_jpeg(W, H, px, 1) for px in originals],
-                fps=_MJPEG_FPS,
-            )
-            info = parse_avi(avi)
-            container_ok = (
-                info["width"] == W
-                and info["height"] == H
-                and info["total_frames"] == n_frames
-                and info["n_index_entries"] == n_frames
-                and info["handler"] == "MJPG"
-                and info["fps"] == _MJPEG_FPS
-            )
-            frames_ok = True
-            n_sampled = 0
-            for i in range(0, n_frames, _MJPEG_SAMPLE):
-                w2, h2, _, decoded = decode_jpeg(info["frames"][i])
-                n_sampled += 1
-                if (w2, h2) != (W, H) or (
-                    _psnr(originals[i], decoded) < _MJPEG_PSNR_MIN
-                ):
-                    frames_ok = False
-            # Emit the CONTAINER-PARSED values (not the input-derived
-            # constants) so a container regression breaks the hash gate
-            # on these columns too, like the stills query's w2/h2.
-            out["doc_id"].append(doc_id)
-            out["width"].append(info["width"])
-            out["height"].append(info["height"])
-            out["n_frames"].append(info["total_frames"])
-            out["n_sampled"].append(n_sampled)
-            out["duration_us"].append(
-                info["total_frames"] * info["us_per_frame"]
-            )
-            out["container_ok"].append(bool(container_ok))
-            out["frames_ok"].append(bool(frames_ok))
-        yield pd.DataFrame(
-            {
-                "doc_id": pd.array(out["doc_id"], dtype="Int64"),
-                "width": pd.array(out["width"], dtype="Int32"),
-                "height": pd.array(out["height"], dtype="Int32"),
-                "n_frames": pd.array(out["n_frames"], dtype="Int64"),
-                "n_sampled": pd.array(out["n_sampled"], dtype="Int64"),
-                "duration_us": pd.array(out["duration_us"], dtype="Int64"),
-                "container_ok": out["container_ok"],
-                "frames_ok": out["frames_ok"],
-            }
-        )
+    originals = _frames(data, W * H)
+    n_frames = len(originals)
+    avi = build_avi_mjpeg(
+        W, H, [encode_jpeg(W, H, px, 1) for px in originals], fps=_MJPEG_FPS,
+    )
+    info = parse_avi(avi)
+    container_ok = (
+        info["width"] == W
+        and info["height"] == H
+        and info["total_frames"] == n_frames
+        and info["n_index_entries"] == n_frames
+        and info["handler"] == "MJPG"
+        and info["fps"] == _MJPEG_FPS
+    )
+    frames_ok = True
+    n_sampled = 0
+    for i in range(0, n_frames, _MJPEG_SAMPLE):
+        w2, h2, _, decoded = decode_jpeg(info["frames"][i])
+        n_sampled += 1
+        if (w2, h2) != (W, H) or (
+            _psnr(originals[i], decoded) < _MJPEG_PSNR_MIN
+        ):
+            frames_ok = False
+    # Emit the CONTAINER-PARSED values (not the input-derived constants)
+    # so a container regression breaks the hash gate on these columns
+    # too, like the stills query's w2/h2.
+    return {
+        "doc_id": doc_id, "width": info["width"], "height": info["height"],
+        "n_frames": info["total_frames"], "n_sampled": n_sampled,
+        "duration_us": info["total_frames"] * info["us_per_frame"],
+        "container_ok": bool(container_ok), "frames_ok": bool(frames_ok),
+    }
 
 
 @query(
@@ -1280,14 +1172,10 @@ def multimodal_mjpeg_video(m: Model) -> DataFrame:
     right dims above the {30} dB PSNR floor — RNG-free, so stable).
     One zero-shuffle Arrow map stage; per-doc cost is proportional to
     payload bytes, embarrassingly parallel at 100 TB."""
-    from ..functions.partitioning import spread_if_undersplit
-
     media = m.documents.select("doc_id", "text").where(
         (F.col("doc_id") % 3 == 2) & (F.length("text") > 0)
     )
-    return spread_if_undersplit(media, "doc_id").mapInPandas(
-        _mjpeg_roundtrip, MJPEG_SCHEMA
-    )
+    return _per_doc(media, _mjpeg_row, MJPEG_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -1313,77 +1201,55 @@ PFRAME_SCHEMA = (
 )
 
 
-def _pframe_roundtrip(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    from .avi import _AVIIF_KEYFRAME, build_avi_pframes, decode_avi_pframes
+def _gop_checks(info, planes, originals, handler: str, gop: int) -> dict:
+    """The inter-frame certificate shared by the MJPD and MJPM decodes:
+    container geometry with the exact I/P cadence in the index, every
+    I-frame above the PSNR floor, and every P-frame byte-exact vs its
+    source (lossless residual over the shared reference — any break in
+    the reference chain flips it)."""
+    from .avi import _AVIIF_KEYFRAME
 
-    W, H = _MJPEG_W, _MJPEG_H
-    fsz = W * H
-    for pdf in batches:
-        out = {k: [] for k in (
-            "doc_id", "width", "height", "n_frames", "n_key", "n_delta",
-            "duration_us", "container_ok", "keyframes_ok", "pframes_exact",
-        )}
-        for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-            data = text.encode("utf-8")
-            if not data:
-                continue
-            n_frames = (len(data) + fsz - 1) // fsz
-            padded = data + bytes(n_frames * fsz - len(data))
-            originals = [
-                padded[i * fsz : (i + 1) * fsz] for i in range(n_frames)
-            ]
-            avi = build_avi_pframes(
-                W, H, originals, fps=_MJPEG_FPS, gop=_PF_GOP, quality=1
-            )
-            info, planes = decode_avi_pframes(avi)
-            keyed = [bool(f & _AVIIF_KEYFRAME) for f in info["index_flags"]]
-            container_ok = (
-                info["width"] == W
-                and info["height"] == H
-                and info["total_frames"] == n_frames
-                and info["n_index_entries"] == n_frames
-                and info["handler"] == "MJPD"
-                and keyed == [i % _PF_GOP == 0 for i in range(n_frames)]
-            )
-            keyframes_ok = all(
-                _psnr(originals[i], planes[i]) >= _MJPEG_PSNR_MIN
-                for i in range(n_frames)
-                if keyed[i]
-            )
-            # the inter-frame invariant: every P-frame reconstructs its
-            # SOURCE bytes exactly (lossless residual over the shared
-            # reference) — any break in the reference chain flips this
-            pframes_exact = all(
-                planes[i] == originals[i]
-                for i in range(n_frames)
-                if not keyed[i]
-            )
-            out["doc_id"].append(doc_id)
-            out["width"].append(info["width"])
-            out["height"].append(info["height"])
-            out["n_frames"].append(info["total_frames"])
-            out["n_key"].append(sum(keyed))
-            out["n_delta"].append(info["total_frames"] - sum(keyed))
-            out["duration_us"].append(
-                info["total_frames"] * info["us_per_frame"]
-            )
-            out["container_ok"].append(bool(container_ok))
-            out["keyframes_ok"].append(bool(keyframes_ok))
-            out["pframes_exact"].append(bool(pframes_exact))
-        yield pd.DataFrame(
-            {
-                "doc_id": pd.array(out["doc_id"], dtype="Int64"),
-                "width": pd.array(out["width"], dtype="Int32"),
-                "height": pd.array(out["height"], dtype="Int32"),
-                "n_frames": pd.array(out["n_frames"], dtype="Int64"),
-                "n_key": pd.array(out["n_key"], dtype="Int64"),
-                "n_delta": pd.array(out["n_delta"], dtype="Int64"),
-                "duration_us": pd.array(out["duration_us"], dtype="Int64"),
-                "container_ok": out["container_ok"],
-                "keyframes_ok": out["keyframes_ok"],
-                "pframes_exact": out["pframes_exact"],
-            }
-        )
+    n_frames = len(originals)
+    keyed = [bool(f & _AVIIF_KEYFRAME) for f in info["index_flags"]]
+    return {
+        "width": info["width"], "height": info["height"],
+        "n_frames": info["total_frames"], "n_key": sum(keyed),
+        "n_delta": info["total_frames"] - sum(keyed),
+        "duration_us": info["total_frames"] * info["us_per_frame"],
+        "container_ok": bool(
+            info["width"] == _MJPEG_W
+            and info["height"] == _MJPEG_H
+            and info["total_frames"] == n_frames
+            and info["n_index_entries"] == n_frames
+            and info["handler"] == handler
+            and keyed == [i % gop == 0 for i in range(n_frames)]
+        ),
+        "keyframes_ok": all(
+            _psnr(originals[i], planes[i]) >= _MJPEG_PSNR_MIN
+            for i in range(n_frames) if keyed[i]
+        ),
+        "pframes_exact": all(
+            planes[i] == originals[i]
+            for i in range(n_frames) if not keyed[i]
+        ),
+    }
+
+
+def _pframe_row(doc_id, text):
+    from .avi import build_avi_pframes, decode_avi_pframes
+
+    data = text.encode("utf-8")
+    if not data:
+        return None
+    originals = _frames(data, _MJPEG_W * _MJPEG_H)
+    avi = build_avi_pframes(
+        _MJPEG_W, _MJPEG_H, originals, fps=_MJPEG_FPS, gop=_PF_GOP, quality=1
+    )
+    info, planes = decode_avi_pframes(avi)
+    return {
+        "doc_id": doc_id,
+        **_gop_checks(info, planes, originals, "MJPD", _PF_GOP),
+    }
 
 
 @query(
@@ -1422,14 +1288,10 @@ def multimodal_pframe_video(m: Model) -> DataFrame:
     P-frame byte-exact vs its source (closed-loop lossless residual).
     One zero-shuffle Arrow map stage; sequential only WITHIN a video
     (inherent to inter-frame coding), parallel across videos."""
-    from ..functions.partitioning import spread_if_undersplit
-
     media = m.documents.select("doc_id", "text").where(
         (F.col("doc_id") % 3 == 2) & (F.length("text") > 0)
     )
-    return spread_if_undersplit(media, "doc_id").mapInPandas(
-        _pframe_roundtrip, PFRAME_SCHEMA
-    )
+    return _per_doc(media, _pframe_row, PFRAME_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -1455,7 +1317,7 @@ MC_VIDEO_SCHEMA = (
 )
 
 
-def _mc_roundtrip(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+def _mc_row(doc_id, text):
     from .avi import (
         _AVIIF_KEYFRAME,
         _MC_RANGE,
@@ -1464,93 +1326,34 @@ def _mc_roundtrip(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         decode_avi_mc,
     )
 
+    data = text.encode("utf-8")
+    if not data:
+        return None
     W, H = _MJPEG_W, _MJPEG_H
-    fsz = W * H
     n_blocks = len(_mc_blocks(W, H))
-    for pdf in batches:
-        out = {k: [] for k in (
-            "doc_id", "width", "height", "n_frames", "n_key", "n_delta",
-            "n_blocks", "duration_us", "container_ok", "keyframes_ok",
-            "pframes_exact", "mv_table_ok",
-        )}
-        for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-            data = text.encode("utf-8")
-            if not data:
-                continue
-            n_frames = (len(data) + fsz - 1) // fsz
-            # scrolling planes: frame i starts one ROW further into the
-            # buffer — adjacent frames are vertical translations of
-            # each other plus one fresh bottom row
-            need = (n_frames - 1) * W + fsz
-            padded = data + bytes(max(0, need - len(data)))
-            originals = [
-                padded[i * W : i * W + fsz] for i in range(n_frames)
-            ]
-            avi = build_avi_mc(
-                W, H, originals, fps=_MJPEG_FPS, gop=_MC_GOP, quality=1
+    # scrolling planes: frame i starts one ROW further into the buffer —
+    # adjacent frames are vertical translations of each other plus one
+    # fresh bottom row
+    originals = _frames(data, W)
+    avi = build_avi_mc(W, H, originals, fps=_MJPEG_FPS, gop=_MC_GOP, quality=1)
+    info, planes, mv_frames = decode_avi_mc(avi)
+    keyed = [bool(f & _AVIIF_KEYFRAME) for f in info["index_flags"]]
+    # the MC-specific invariant: every P-frame carries exactly one
+    # in-window vector per macroblock (keyframes none)
+    mv_table_ok = all(
+        (len(mvs) == 0) if keyed[i] else (
+            len(mvs) == n_blocks
+            and all(
+                abs(dx) <= _MC_RANGE and abs(dy) <= _MC_RANGE
+                for dx, dy in mvs
             )
-            info, planes, mv_frames = decode_avi_mc(avi)
-            keyed = [bool(f & _AVIIF_KEYFRAME) for f in info["index_flags"]]
-            container_ok = (
-                info["width"] == W
-                and info["height"] == H
-                and info["total_frames"] == n_frames
-                and info["n_index_entries"] == n_frames
-                and info["handler"] == "MJPM"
-                and keyed == [i % _MC_GOP == 0 for i in range(n_frames)]
-            )
-            keyframes_ok = all(
-                _psnr(originals[i], planes[i]) >= _MJPEG_PSNR_MIN
-                for i in range(n_frames)
-                if keyed[i]
-            )
-            pframes_exact = all(
-                planes[i] == originals[i]
-                for i in range(n_frames)
-                if not keyed[i]
-            )
-            # the MC-specific invariant: every P-frame carries exactly
-            # one in-window vector per macroblock (keyframes none)
-            mv_table_ok = all(
-                (len(mvs) == 0) if keyed[i] else (
-                    len(mvs) == n_blocks
-                    and all(
-                        abs(dx) <= _MC_RANGE and abs(dy) <= _MC_RANGE
-                        for dx, dy in mvs
-                    )
-                )
-                for i, mvs in enumerate(mv_frames)
-            )
-            out["doc_id"].append(doc_id)
-            out["width"].append(info["width"])
-            out["height"].append(info["height"])
-            out["n_frames"].append(info["total_frames"])
-            out["n_key"].append(sum(keyed))
-            out["n_delta"].append(info["total_frames"] - sum(keyed))
-            out["n_blocks"].append(n_blocks)
-            out["duration_us"].append(
-                info["total_frames"] * info["us_per_frame"]
-            )
-            out["container_ok"].append(bool(container_ok))
-            out["keyframes_ok"].append(bool(keyframes_ok))
-            out["pframes_exact"].append(bool(pframes_exact))
-            out["mv_table_ok"].append(bool(mv_table_ok))
-        yield pd.DataFrame(
-            {
-                "doc_id": pd.array(out["doc_id"], dtype="Int64"),
-                "width": pd.array(out["width"], dtype="Int32"),
-                "height": pd.array(out["height"], dtype="Int32"),
-                "n_frames": pd.array(out["n_frames"], dtype="Int64"),
-                "n_key": pd.array(out["n_key"], dtype="Int64"),
-                "n_delta": pd.array(out["n_delta"], dtype="Int64"),
-                "n_blocks": pd.array(out["n_blocks"], dtype="Int32"),
-                "duration_us": pd.array(out["duration_us"], dtype="Int64"),
-                "container_ok": out["container_ok"],
-                "keyframes_ok": out["keyframes_ok"],
-                "pframes_exact": out["pframes_exact"],
-                "mv_table_ok": out["mv_table_ok"],
-            }
         )
+        for i, mvs in enumerate(mv_frames)
+    )
+    return {
+        "doc_id": doc_id, "n_blocks": n_blocks, "mv_table_ok": mv_table_ok,
+        **_gop_checks(info, planes, originals, "MJPM", _MC_GOP),
+    }
 
 
 @query(
@@ -1591,14 +1394,10 @@ def multimodal_mc_video(m: Model) -> DataFrame:
     residual), and a well-formed in-window vector table on every
     P-frame.  One zero-shuffle Arrow map stage, payload-linear;
     sequential only within a video, parallel across videos."""
-    from ..functions.partitioning import spread_if_undersplit
-
     media = m.documents.select("doc_id", "text").where(
         (F.col("doc_id") % 3 == 2) & (F.length("text") > 0)
     )
-    return spread_if_undersplit(media, "doc_id").mapInPandas(
-        _mc_roundtrip, MC_VIDEO_SCHEMA
-    )
+    return _per_doc(media, _mc_row, MC_VIDEO_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -1631,7 +1430,32 @@ ADPCM_SCHEMA = (
 )
 
 
-def _adpcm_roundtrip(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+def _pcm_samples(data: bytes, ns: int):
+    """The ``ns`` signed byte-pair samples of a payload (the derivation
+    ``multimodal_wav_pcm_stats`` certifies), as int64."""
+    import numpy as np
+
+    pairs = np.frombuffer(data[: 2 * ns], dtype=np.uint8).reshape(-1, 2)
+    return (
+        pairs[:, 0].astype(np.int64)
+        + 256 * pairs[:, 1].astype(np.int64)
+        - _PCM_BIAS
+    )
+
+
+def _snr_ok(ref, dec, floor_db: float) -> bool:
+    """``dec`` tracks ``ref`` at ``floor_db`` or better (exact is ok)."""
+    import numpy as np
+
+    err = (dec - ref).astype(np.float64)
+    sig = float(np.sum(ref.astype(np.float64) ** 2))
+    noise = float(np.sum(err**2))
+    return noise == 0.0 or (
+        sig > 0.0 and 10.0 * math.log10(sig / noise) >= floor_db
+    )
+
+
+def _adpcm_row(doc_id, text):
     import numpy as np
 
     from .adpcm import (
@@ -1642,61 +1466,34 @@ def _adpcm_roundtrip(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         parse_wav_adpcm,
     )
 
-    for pdf in batches:
-        out = {k: [] for k in (
-            "doc_id", "n_samples", "samples_per_block", "n_blocks",
-            "compressed_bytes", "pcm_bytes", "container_ok",
-            "closed_loop_ok", "snr_ok",
-        )}
-        for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-            data = text.encode("utf-8")
-            ns = len(data) // 2
-            if ns == 0:
-                continue
-            pairs = np.frombuffer(data[: 2 * ns], dtype=np.uint8).reshape(-1, 2)
-            samples = (
-                pairs[:, 0].astype(np.int64)
-                + 256 * pairs[:, 1].astype(np.int64)
-                - _PCM_BIAS
-            )
-            _, recon = adpcm_encode(samples)
-            wav = build_wav_adpcm(_ADPCM_RATE, samples)
-            info, decoded = parse_wav_adpcm(wav)
-            nb = (ns + SAMPLES_PER_BLOCK - 1) // SAMPLES_PER_BLOCK
-            container_ok = (
-                info["tag"] == 0x0011
-                and info["bits"] == 4
-                and info["channels"] == 1
-                and info["sample_rate"] == _ADPCM_RATE
-                and info["samples_per_block"] == SAMPLES_PER_BLOCK
-                and info["n_samples"] == ns
-                and info["n_blocks"] == nb
-                and info["compressed_bytes"] == nb * BLOCK_ALIGN
-            )
-            closed_loop_ok = len(decoded) == ns and bool(
-                np.array_equal(decoded, recon)
-            )
-            err = (decoded - samples).astype(np.float64)
-            sig = float(np.sum(samples.astype(np.float64) ** 2))
-            noise = float(np.sum(err**2))
-            snr_ok = (
-                ns < _ADPCM_SNR_MIN_NS
-                or noise == 0.0
-                or (
-                    sig > 0.0
-                    and 10.0 * math.log10(sig / noise) >= _ADPCM_SNR_DB
-                )
-            )
-            out["doc_id"].append(doc_id)
-            out["n_samples"].append(ns)
-            out["samples_per_block"].append(SAMPLES_PER_BLOCK)
-            out["n_blocks"].append(nb)
-            out["compressed_bytes"].append(nb * BLOCK_ALIGN)
-            out["pcm_bytes"].append(2 * ns)
-            out["container_ok"].append(container_ok)
-            out["closed_loop_ok"].append(closed_loop_ok)
-            out["snr_ok"].append(snr_ok)
-        yield pd.DataFrame(out)
+    data = text.encode("utf-8")
+    ns = len(data) // 2
+    if ns == 0:
+        return None
+    samples = _pcm_samples(data, ns)
+    _, recon = adpcm_encode(samples)
+    info, decoded = parse_wav_adpcm(build_wav_adpcm(_ADPCM_RATE, samples))
+    nb = (ns + SAMPLES_PER_BLOCK - 1) // SAMPLES_PER_BLOCK
+    container_ok = (
+        info["tag"] == 0x0011
+        and info["bits"] == 4
+        and info["channels"] == 1
+        and info["sample_rate"] == _ADPCM_RATE
+        and info["samples_per_block"] == SAMPLES_PER_BLOCK
+        and info["n_samples"] == ns
+        and info["n_blocks"] == nb
+        and info["compressed_bytes"] == nb * BLOCK_ALIGN
+    )
+    return {
+        "doc_id": doc_id, "n_samples": ns,
+        "samples_per_block": SAMPLES_PER_BLOCK, "n_blocks": nb,
+        "compressed_bytes": nb * BLOCK_ALIGN, "pcm_bytes": 2 * ns,
+        "container_ok": container_ok,
+        "closed_loop_ok": len(decoded) == ns
+        and bool(np.array_equal(decoded, recon)),
+        "snr_ok": ns < _ADPCM_SNR_MIN_NS
+        or _snr_ok(samples, decoded, _ADPCM_SNR_DB),
+    }
 
 
 @query(
@@ -1734,16 +1531,12 @@ def multimodal_adpcm_audio(m: Model) -> DataFrame:
     source clears the floor.  One zero-shuffle Arrow map stage,
     payload-linear; blocks are independently decodable (splittable at
     100 TB — one task per block range), parallel across docs here."""
-    from ..functions.partitioning import spread_if_undersplit
-
     media = m.documents.select("doc_id", "text").where(
         # octet_length: BYTE-based, agreeing with the udf's
         # len(text.encode('utf-8'))//2 sample count on any input.
         (F.col("doc_id") % 3 == 1) & (F.octet_length("text") >= 2)
     )
-    return spread_if_undersplit(media, "doc_id").mapInPandas(
-        _adpcm_roundtrip, ADPCM_SCHEMA
-    )
+    return _per_doc(media, _adpcm_row, ADPCM_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -1773,7 +1566,7 @@ MULAW_SCHEMA = (
 )
 
 
-def _mulaw_roundtrip(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+def _mulaw_row(doc_id, text):
     import numpy as np
 
     from .g711 import (
@@ -1785,80 +1578,53 @@ def _mulaw_roundtrip(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         parse_wav_g711,
     )
 
-    def snr_ok(ref: np.ndarray, dec: np.ndarray, floor_db: float) -> bool:
-        err = (dec - ref).astype(np.float64)
-        sig = float(np.sum(ref.astype(np.float64) ** 2))
-        noise = float(np.sum(err**2))
-        return noise == 0.0 or (
-            sig > 0.0 and 10.0 * math.log10(sig / noise) >= floor_db
-        )
-
-    for pdf in batches:
-        out = {k: [] for k in (
-            "doc_id", "n_samples", "n_resampled", "pcm_bytes",
-            "mulaw_bytes", "container_ok", "mulaw_ok", "alaw_ok",
-            "transcode_ok", "resample_ok",
-        )}
-        for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-            data = text.encode("utf-8")
-            ns = len(data) // 2
-            if ns == 0:
-                continue
-            pairs = np.frombuffer(data[: 2 * ns], dtype=np.uint8).reshape(-1, 2)
-            samples = (
-                pairs[:, 0].astype(np.int64)
-                + 256 * pairs[:, 1].astype(np.int64)
-                - _PCM_BIAS
-            )
-            # container roundtrip (tag 7, 8 bits, fact-chunk truncation)
-            info, dec = parse_wav_g711(
-                build_wav_g711(_G711_RATE, samples, "mulaw")
-            )
-            container_ok = (
-                info["tag"] == 7
-                and info["bits"] == 8
-                and info["channels"] == 1
-                and info["sample_rate"] == _G711_RATE
-                and info["block_align"] == 1
-                and info["n_samples"] == ns
-                and info["compressed_bytes"] == ns
-            )
-            # mu-law: container decode == direct decode, VALUE
-            # idempotence (re-coding the reconstruction is lossless),
-            # SNR floor
-            mu_codes = mulaw_encode(samples)
-            mu_dec = mulaw_decode(mu_codes)
-            mulaw_ok = (
-                np.array_equal(dec, mu_dec)
-                and np.array_equal(mulaw_decode(mulaw_encode(mu_dec)), mu_dec)
-                and snr_ok(samples, mu_dec, _G711_SNR_DB)
-            )
-            # A-law: BYTE idempotence (exact over all codes) + SNR
-            a_codes = alaw_encode(samples)
-            a_dec = alaw_decode(a_codes)
-            alaw_ok = (
-                np.array_equal(alaw_encode(a_dec), a_codes)
-                and snr_ok(samples, a_dec, _G711_SNR_DB)
-            )
-            # mu -> A transcode tracks the source through both coders
-            t_dec = alaw_decode(alaw_encode(mu_dec))
-            transcode_ok = snr_ok(samples, t_dec, _G711_TRANSCODE_SNR_DB)
-            # 2:1 decimation in the compressed domain == in the sample
-            # domain (byte independence made operational)
-            resample_ok = np.array_equal(
-                mulaw_decode(mu_codes[::2]), mu_dec[::2]
-            )
-            out["doc_id"].append(doc_id)
-            out["n_samples"].append(ns)
-            out["n_resampled"].append((ns + 1) // 2)
-            out["pcm_bytes"].append(2 * ns)
-            out["mulaw_bytes"].append(ns)
-            out["container_ok"].append(container_ok)
-            out["mulaw_ok"].append(mulaw_ok)
-            out["alaw_ok"].append(alaw_ok)
-            out["transcode_ok"].append(transcode_ok)
-            out["resample_ok"].append(resample_ok)
-        yield pd.DataFrame(out)
+    data = text.encode("utf-8")
+    ns = len(data) // 2
+    if ns == 0:
+        return None
+    samples = _pcm_samples(data, ns)
+    # container roundtrip (tag 7, 8 bits, fact-chunk truncation)
+    info, dec = parse_wav_g711(build_wav_g711(_G711_RATE, samples, "mulaw"))
+    container_ok = (
+        info["tag"] == 7
+        and info["bits"] == 8
+        and info["channels"] == 1
+        and info["sample_rate"] == _G711_RATE
+        and info["block_align"] == 1
+        and info["n_samples"] == ns
+        and info["compressed_bytes"] == ns
+    )
+    # mu-law: container decode == direct decode, VALUE idempotence
+    # (re-coding the reconstruction is lossless), SNR floor
+    mu_codes = mulaw_encode(samples)
+    mu_dec = mulaw_decode(mu_codes)
+    mulaw_ok = (
+        np.array_equal(dec, mu_dec)
+        and np.array_equal(mulaw_decode(mulaw_encode(mu_dec)), mu_dec)
+        and _snr_ok(samples, mu_dec, _G711_SNR_DB)
+    )
+    # A-law: BYTE idempotence (exact over all codes) + SNR
+    a_codes = alaw_encode(samples)
+    a_dec = alaw_decode(a_codes)
+    alaw_ok = (
+        np.array_equal(alaw_encode(a_dec), a_codes)
+        and _snr_ok(samples, a_dec, _G711_SNR_DB)
+    )
+    return {
+        "doc_id": doc_id, "n_samples": ns, "n_resampled": (ns + 1) // 2,
+        "pcm_bytes": 2 * ns, "mulaw_bytes": ns,
+        "container_ok": container_ok, "mulaw_ok": mulaw_ok,
+        "alaw_ok": alaw_ok,
+        # mu -> A transcode tracks the source through both coders
+        "transcode_ok": _snr_ok(
+            samples, alaw_decode(alaw_encode(mu_dec)), _G711_TRANSCODE_SNR_DB
+        ),
+        # 2:1 decimation in the compressed domain == in the sample
+        # domain (byte independence made operational)
+        "resample_ok": np.array_equal(
+            mulaw_decode(mu_codes[::2]), mu_dec[::2]
+        ),
+    }
 
 
 @query(
@@ -1895,11 +1661,7 @@ def multimodal_mulaw_audio(m: Model) -> DataFrame:
     decimation commutes between the compressed and decoded domains.
     One zero-shuffle Arrow map stage, payload-linear; every G.711 byte
     decodes independently (splittable at any offset at 100 TB)."""
-    from ..functions.partitioning import spread_if_undersplit
-
     media = m.documents.select("doc_id", "text").where(
         (F.col("doc_id") % 3 == 1) & (F.octet_length("text") >= 2)
     )
-    return spread_if_undersplit(media, "doc_id").mapInPandas(
-        _mulaw_roundtrip, MULAW_SCHEMA
-    )
+    return _per_doc(media, _mulaw_row, MULAW_SCHEMA)

@@ -325,7 +325,7 @@ def index_ingest_batch(
     index twin of ``dedup.signature_ingest_batch``): the batch's
     postings, dictionary partials, and statistics each overwrite ONLY
     their own ``batch_id=N`` partition via dynamic partition overwrite,
-    so a foreachBatch replay after a partial failure rewrites the same
+    so a micro-batch replay after a partial failure rewrites the same
     partitions instead of double-appending.  At-least-once reprocessing
     + idempotent per-partition output = exactly-once index state.
     Serving (:func:`bm25_topk_from_index`) is already additive across
@@ -335,10 +335,11 @@ def index_ingest_batch(
     Replay contract (round-5 advice):
     idempotence assumes a replayed batch_id carries the SAME document
     composition as the failed attempt — exactly what Structured
-    Streaming's checkpointed source offsets guarantee for foreachBatch
-    replays.  A replay with a DIFFERENT composition (a manually
-    re-built batch) can leave the original attempt's (batch_id, bucket)
-    partitions for buckets the new composition no longer touches;
+    Streaming's checkpointed source offsets guarantee for micro-batch
+    replays (``streaming.jobs.drain_batches``).  A replay with a
+    DIFFERENT composition (a manually re-built batch) can leave the
+    original attempt's (batch_id, bucket) partitions for buckets the
+    new composition no longer touches;
     recover from that by deleting the ``batch_id=N`` subtree before
     re-ingesting."""
     postings, dictionary, st, forward, shared = _index_relations(
@@ -364,31 +365,6 @@ def index_ingest_batch(
         # un-released per-batch blocks accumulate in the block manager
         for df in shared:
             df.unpersist()
-
-
-def index_ingest_stream(
-    docs_stream: DataFrame,
-    index_dir: str,
-    checkpoint_dir: str,
-    n_buckets: int = _INDEX_BUCKETS,
-):
-    """Continuous search-index ingest: every arriving micro-batch of
-    documents lands in the persisted inverted index through the
-    idempotent batch cycle.  AvailableNow drains a backlog
-    deterministically (tests); ProcessingTime makes it the continuous
-    production loop — nothing else changes."""
-
-    def on_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        index_ingest_batch(batch_df, index_dir, batch_id, n_buckets)
-
-    return (
-        docs_stream.writeStream.foreachBatch(on_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
 
 
 def _term_buckets(
@@ -1144,12 +1120,38 @@ def _index_artifact_dir(m: Model) -> str:
     from ..functions import workdir
     from ..functions.memo import model_cached
 
-    def build() -> str:
-        out = workdir.scratch(m.spark, "bm25_index_")
-        materialize_inverted_index(m.documents, out)
-        return out
+    return model_cached(m, "bm25_index_dir", lambda: workdir.built(
+        m.spark, "bm25_index_",
+        lambda out: materialize_inverted_index(m.documents, out),
+    ))
 
-    return model_cached(m, "bm25_index_dir", build)
+
+def _bm25_served_from(m: Model, idx: str, cache_terms, cache_handles):
+    """BM25 top-k served from the inverted index at ``idx`` — the one
+    body of ``docs_bm25_served`` and ``docs_bm25_stream_served``.  The
+    probe terms re-derive from the POSTINGS relation and are memoized
+    through ``cache_terms(build)``; the query-independent serving state
+    through ``cache_handles(build)`` — each caller's memo, keyed like
+    its index.  Documents are touched only to decorate the k rows."""
+
+    def _terms() -> list[str]:
+        occ = (
+            m.spark.read.parquet(f"{idx}/postings")
+            .groupBy("word")
+            .agg(F.sum("tf").alias("n_occ"))
+        )
+        rows = occ.orderBy(F.desc("n_occ"), "word").limit(_QTERM_HI).collect()
+        return [r["word"] for r in rows[_QTERM_LO - 1 : _QTERM_HI]]
+
+    terms = cache_terms(_terms)
+    handles = cache_handles(lambda: bm25_serving_handles(m.spark, idx, terms))
+    served = bm25_topk_from_index(m.spark, idx, terms, handles=handles)
+    d = m.documents.select("doc_id", "source")
+    return (
+        F.broadcast(served)
+        .join(d, "doc_id")
+        .select("doc_id", "source", "n_terms", "score", "rank")
+    )
 
 
 def docs_bm25_served(m: Model) -> DataFrame:
@@ -1164,36 +1166,17 @@ def docs_bm25_served(m: Model) -> DataFrame:
     production serving tier derives its term workload once per index
     build), so they memoize beside the index — the measured query path
     is the pruned reads + scoring, not the term re-derivation."""
-    idx = _index_artifact_dir(m)
-
-    def _terms() -> list[str]:
-        occ = (
-            m.spark.read.parquet(f"{idx}/postings")
-            .groupBy("word")
-            .agg(F.sum("tf").alias("n_occ"))
-        )
-        rows = occ.orderBy(F.desc("n_occ"), "word").limit(_QTERM_HI).collect()
-        return [r["word"] for r in rows[_QTERM_LO - 1 : _QTERM_HI]]
-
     from ..functions.memo import model_cached
 
-    terms = model_cached(m, "bm25_served_terms", _terms)
     # Query-independent serving state (term buckets, pre-analyzed
     # postings handle, dictionary/statistics local relations) memoizes
     # beside the index it derives from — the serving-tier posture; the
     # warm query path is ONE pruned-postings job + the k-row decoration
     # (round-10 verdict task 1: was 4 extra jobs + 2 re-listings).
-    handles = model_cached(
-        m,
-        "bm25_served_handles",
-        lambda: bm25_serving_handles(m.spark, idx, terms),
-    )
-    served = bm25_topk_from_index(m.spark, idx, terms, handles=handles)
-    d = m.documents.select("doc_id", "source")
-    return (
-        F.broadcast(served)
-        .join(d, "doc_id")
-        .select("doc_id", "source", "n_terms", "score", "rank")
+    return _bm25_served_from(
+        m, _index_artifact_dir(m),
+        lambda build: model_cached(m, "bm25_served_terms", build),
+        lambda build: model_cached(m, "bm25_served_handles", build),
     )
 
 
@@ -1269,89 +1252,56 @@ query(
 )(hybrid_rrf_served)
 
 
-def _assert_documents_is_fixture_backed(m: Model) -> None:
-    """The streaming ingest reads the on-disk sf_dir parquet (streams
-    cannot read temp views), so serving from its index is only sound
-    when the registered ``documents`` view IS that fixture.  Enforce it
-    (round-6 ADVICE): compare the view's analyzed-plan semanticHash
-    against a fresh read of the fixture path — analysis-only, no job.
-    A swapped view raises instead of silently serving stale data."""
-    from ..catalog import assert_view_matches_fixture
-
-    assert_view_matches_fixture(m, "documents")
-
-
 def _stream_index_artifact_dir(m: Model) -> str:
     """Build the inverted index by draining the documents fixture
-    through the EXACTLY-ONCE streaming ingest (foreachBatch +
+    through the EXACTLY-ONCE streaming ingest (``drain_batches`` +
     per-batch_id dynamic partition overwrite), once per fixture dir,
     and memoize the path — the continuous-crawl production shape.  The
     memo keys on sf_dir alone BECAUSE the build reads the on-disk
-    fixture; :func:`_assert_documents_is_fixture_backed` (called by
-    every consumer) guarantees the registered view mirrors it, so a
+    fixture (streams cannot read temp views); every consumer first
+    calls ``catalog.assert_view_matches_fixture``, so a
     fingerprint-keyed rebuild could never legitimately see different
     data (round-6 ADVICE: the old content-keyed memo re-built from the
     OLD files after a view swap — now it raises instead)."""
     from ..functions import workdir
     from ..functions.memo import sf_cached
-    from ..streaming.jobs import documents_stream
+    from ..streaming.jobs import documents_stream, drain_batches
 
-    def build() -> str:
-        out = workdir.scratch(m.spark, "bm25_stream_index_")
-        with workdir.temp(m.spark, "bm25_stream_ckpt_") as ckpt:
-            index_ingest_stream(
-                documents_stream(m.spark, m.sf_dir).select("doc_id", "text"),
-                out,
-                ckpt,
-            ).awaitTermination()
-        return out
+    def fill(out: str) -> None:
+        drain_batches(
+            documents_stream(m.spark, m.sf_dir).select("doc_id", "text"),
+            lambda df, batch_id: index_ingest_batch(df, out, batch_id),
+        )
 
-    return sf_cached(m.sf_dir, "bm25_stream_index_dir", build)
+    return sf_cached(
+        m.sf_dir, "bm25_stream_index_dir",
+        lambda: workdir.built(m.spark, "bm25_stream_index_", fill),
+    )
 
 
 def docs_bm25_stream_served(m: Model) -> DataFrame:
     """BM25 top-{20} served from an index built by the EXACTLY-ONCE
     STREAMING ingest — the complete continuous-crawl production loop
     certified end-to-end against the batch oracle: documents arrive as
-    a stream, foreachBatch lands each micro-batch idempotently in the
+    a stream, each micro-batch lands idempotently in the
     partitioned index (additive dictionary/statistics partials), and
     the serving path prunes to the query terms' buckets.  Output is
     bit-identical to ``docs_bm25_topk`` (same oracle) — the additive
     index serves exactly like a full rebuild, which is the whole
     design claim of the ingest path."""
-    _assert_documents_is_fixture_backed(m)
-    idx = _stream_index_artifact_dir(m)
-
-    def _terms() -> list[str]:
-        occ = (
-            m.spark.read.parquet(f"{idx}/postings")
-            .groupBy("word")
-            .agg(F.sum("tf").alias("n_occ"))
-        )
-        rows = occ.orderBy(F.desc("n_occ"), "word").limit(_QTERM_HI).collect()
-        return [r["word"] for r in rows[_QTERM_LO - 1 : _QTERM_HI]]
-
+    from ..catalog import assert_view_matches_fixture
     from ..functions.memo import model_cached, sf_cached
 
-    # derived from the on-disk index, so keyed like it (sf_dir alone)
-    terms = sf_cached(m.sf_dir, "bm25_stream_served_terms", _terms)
-    # the stream-built index is immutable once its drain completes, so
-    # the serving handles memoize beside it (same posture as
-    # docs_bm25_served — see bm25_serving_handles).  model_cached (not
-    # sf_cached): the handles hold a session-bound postings DataFrame,
-    # and the model fingerprint includes the application id, so a
-    # restarted session rebuilds instead of serving a dead handle.
-    handles = model_cached(
-        m,
-        "bm25_stream_served_handles",
-        lambda: bm25_serving_handles(m.spark, idx, terms),
-    )
-    served = bm25_topk_from_index(m.spark, idx, terms, handles=handles)
-    d = m.documents.select("doc_id", "source")
-    return (
-        F.broadcast(served)
-        .join(d, "doc_id")
-        .select("doc_id", "source", "n_terms", "score", "rank")
+    assert_view_matches_fixture(m, "documents")
+    # The terms derive from the on-disk index, so they are keyed like
+    # it (sf_dir alone).  The handles are model_cached, not sf_cached:
+    # they hold a session-bound postings DataFrame, and the model
+    # fingerprint includes the application id, so a restarted session
+    # rebuilds instead of serving a dead handle.
+    return _bm25_served_from(
+        m, _stream_index_artifact_dir(m),
+        lambda build: sf_cached(m.sf_dir, "bm25_stream_served_terms", build),
+        lambda build: model_cached(m, "bm25_stream_served_handles", build),
     )
 
 

@@ -6,7 +6,7 @@ liveness guard (analyze/HBaseHealthAnalyzeService.java:181-224), then
 writes one probe row per region keyed start_key‖salt
 (analyze/HBaseHealthAnalyzeService.java:137-175).  We emit the
 eligibility relation and the probe-write plan; the actual write is the
-actuation layer (a connector ``foreachBatch`` in production).
+actuation layer (a connector micro-batch sink in production).
 
 Scale: both queries are a groupBy over the region catalog plus a
 broadcast of the tiny live-server dim — no large shuffle.

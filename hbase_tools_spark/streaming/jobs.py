@@ -199,6 +199,40 @@ LAST_DRAIN_PROGRESS: list[dict] = []
 _MEM_SINK_MAX_SOURCE_BYTES = 32 << 20
 
 
+def _available_now(spark: SparkSession, writer):
+    """Start ``writer`` as an AvailableNow drain, wait for it and return
+    the finished query.  The checkpoint is fresh per run — reusing a
+    committed one would make availableNow a no-op — and is removed when
+    the drain ends, whether it finished or raised."""
+    with workdir.temp(spark, "ckpt_") as ckpt:
+        q = (
+            writer.option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+    return q
+
+
+def drain_batches(stream_df: DataFrame, write_batch):
+    """The one ingest driver: drain ``stream_df`` with AvailableNow and
+    call ``write_batch(batch_df, batch_id)`` for every non-empty
+    micro-batch, then return the finished query.  The stream-built
+    stores (inverted index, IVF index, signature store) land their
+    batches through it with an idempotent per-``batch_id`` writer, so a
+    replayed batch overwrites instead of double-appending; a
+    ProcessingTime trigger would make the same loop the continuous
+    production ingest."""
+
+    def on_batch(batch_df: DataFrame, batch_id: int) -> None:
+        if not batch_df.isEmpty():
+            write_batch(batch_df, batch_id)
+
+    return _available_now(
+        stream_df.sparkSession, stream_df.writeStream.foreachBatch(on_batch)
+    )
+
+
 def run_to_table(
     stream_df: DataFrame,
     name: str,
@@ -246,36 +280,26 @@ def run_to_table(
     # saves one full micro-batch round-trip per drain (~10% measured).
     spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
     try:
-        # Fresh checkpoint per run — reusing a committed one would make
-        # availableNow a no-op and leave the memory sink empty.
-        with workdir.temp(spark, "ckpt_") as ckpt:
-            if spill:
-                write_mode = (
-                    "overwrite" if output_mode == "complete" else "append"
-                )
+        if spill:
+            write_mode = "overwrite" if output_mode == "complete" else "append"
 
-                def _sink(batch_df: DataFrame, _batch_id: int) -> None:
-                    batch_df.write.mode(write_mode).parquet(out_dir)
+            def _sink(batch_df: DataFrame, _batch_id: int) -> None:
+                batch_df.write.mode(write_mode).parquet(out_dir)
 
-                writer = stream_df.writeStream.foreachBatch(_sink).outputMode(
-                    output_mode
-                )
-            else:
-                writer = (
-                    stream_df.writeStream.format("memory")
-                    .queryName(name)
-                    .outputMode(output_mode)
-                )
-            q = (
-                writer.option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
+            writer = stream_df.writeStream.foreachBatch(_sink).outputMode(
+                output_mode
             )
-            q.awaitTermination()
-            try:
-                LAST_DRAIN_PROGRESS[:] = list(q.recentProgress)
-            except Exception:
-                LAST_DRAIN_PROGRESS[:] = []
+        else:
+            writer = (
+                stream_df.writeStream.format("memory")
+                .queryName(name)
+                .outputMode(output_mode)
+            )
+        q = _available_now(spark, writer)
+        try:
+            LAST_DRAIN_PROGRESS[:] = list(q.recentProgress)
+        except Exception:
+            LAST_DRAIN_PROGRESS[:] = []
     except BaseException:
         if out_dir is not None:
             shutil.rmtree(out_dir, ignore_errors=True)

@@ -296,23 +296,37 @@ def _advance_funnel(key, pdfs, state: GroupState):
         )
 
 
-def funnel_stages(events: DataFrame, buckets: int = 64) -> DataFrame:
-    """Stateful per-user funnel over a streaming (user_id, event_type,
-    tus) relation pre-filtered to the funnel event types.  State keys
-    on a deterministic user-hash bucket (see module docstring for the
-    bucketing contract); ``buckets`` scales with the feed."""
+def _per_user_bucket(
+    events: DataFrame, buckets: int, advance, output_schema: str,
+    state_schema: str,
+) -> DataFrame:
+    """The user-keyed stateful shape of the funnel and attribution
+    drains: state keys on a deterministic user-hash bucket (see the
+    module docstring for the bucketing contract), and ``advance`` folds
+    each touched bucket's batch into its per-user state."""
     return (
         events.withColumn(
             "bucket", F.pmod(F.xxhash64("user_id"), F.lit(buckets))
         )
         .groupBy("bucket")
         .applyInPandasWithState(
-            _advance_funnel,
-            outputStructType=FUNNEL_OUTPUT_SCHEMA,
-            stateStructType=FUNNEL_STATE_SCHEMA,
+            advance,
+            outputStructType=output_schema,
+            stateStructType=state_schema,
             outputMode="append",
             timeoutConf=GroupStateTimeout.NoTimeout,
         )
+    )
+
+
+def funnel_stages(events: DataFrame, buckets: int = 64) -> DataFrame:
+    """Stateful per-user funnel over a streaming (user_id, event_type,
+    tus) relation pre-filtered to the funnel event types.  State keys
+    on a deterministic user-hash bucket (see module docstring for the
+    bucketing contract); ``buckets`` scales with the feed."""
+    return _per_user_bucket(
+        events, buckets, _advance_funnel,
+        FUNNEL_OUTPUT_SCHEMA, FUNNEL_STATE_SCHEMA,
     )
 
 
@@ -512,18 +526,9 @@ def attribution_stream(events: DataFrame, buckets: int = 64) -> DataFrame:
     (user_id, event_id, event_type, tus) relation.  State keys on a
     deterministic user-hash bucket (see module docstring);
     ``buckets`` scales with the feed."""
-    return (
-        events.withColumn(
-            "bucket", F.pmod(F.xxhash64("user_id"), F.lit(buckets))
-        )
-        .groupBy("bucket")
-        .applyInPandasWithState(
-            _advance_attribution,
-            outputStructType=ATTR_OUTPUT_SCHEMA,
-            stateStructType=ATTR_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+    return _per_user_bucket(
+        events, buckets, _advance_attribution,
+        ATTR_OUTPUT_SCHEMA, ATTR_STATE_SCHEMA,
     )
 
 

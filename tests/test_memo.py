@@ -5,6 +5,7 @@ postings after a fixture swap)."""
 
 from __future__ import annotations
 
+import pytest
 from conftest import SF_DIR
 
 
@@ -136,23 +137,70 @@ def test_stream_served_guards_against_view_swap(spark):
     advice: the old content-keyed memo rebuilt from the old files)."""
     import pytest
 
-    from hbase_tools_spark.catalog import Model, load_model
-    from hbase_tools_spark.llm.search import (
-        _assert_documents_is_fixture_backed,
+    from hbase_tools_spark.catalog import (
+        Model,
+        assert_view_matches_fixture,
+        load_model,
     )
 
     m = Model(spark, SF_DIR)
     try:
         load_model(spark, SF_DIR)
-        _assert_documents_is_fixture_backed(m)  # fixture-backed: fine
+        assert_view_matches_fixture(m, "documents")  # fixture-backed: fine
         _docs(spark, [(0, "alpha beta", "en", "s0", 10)]).createOrReplaceTempView(
             "documents"
         )
         with pytest.raises(ValueError, match="does not match the on-disk"):
-            _assert_documents_is_fixture_backed(m)
+            assert_view_matches_fixture(m, "documents")
     finally:
         spark.conf.set("spark.hbase_tools.model_dir", "")
         load_model(spark, SF_DIR)
+
+
+@pytest.mark.parametrize(
+    "name, module, target",
+    [
+        ("docs_bm25_served", "search", "materialize_inverted_index"),
+        ("minhash_stream_served", "dedup", "signature_ingest_batch"),
+    ],
+    ids=["batch_artifact", "stream_store"],
+)
+def test_failed_artifact_build_leaves_no_dir_or_memo_entry(
+    spark, ducksql, monkeypatch, name, module, target
+):
+    """A served artifact whose build raises (a batch materializer, or a
+    stream store's batch writer inside the ingest drain) propagates the
+    error, leaves the scratch root with no more entries than before and
+    adds no memo entry; once the fault is gone, the next call builds
+    and serves the oracle's rows."""
+    import importlib
+    import os
+
+    from conftest import assert_query_matches_oracle
+    from hbase_tools_spark.catalog import load_model
+    from hbase_tools_spark.functions import memo, workdir
+    from hbase_tools_spark.registry import QUERIES
+    from hbase_tools_spark.streaming.jobs import documents_stream
+
+    mod = importlib.import_module(f"hbase_tools_spark.llm.{module}")
+
+    def broken(_df, out_dir, *_args, **_kwargs):
+        open(os.path.join(out_dir, "partial"), "w").close()
+        raise RuntimeError("injected artifact build failure")
+
+    # an empty memo, restored afterwards, so the artifact builds here
+    monkeypatch.setattr(memo, "_CACHE", {})
+    m = load_model(spark, SF_DIR)
+    documents_stream(spark, SF_DIR)  # stage the feed before counting
+    root = workdir.root(spark)
+    before = len(os.listdir(root))
+    with monkeypatch.context() as mp:
+        mp.setattr(mod, target, broken)
+        with pytest.raises(Exception, match="injected artifact build failure"):
+            QUERIES[name].fn(m)
+    assert len(os.listdir(root)) <= before
+    assert memo._CACHE == {}
+    assert_query_matches_oracle(spark, ducksql, name)
 
 
 def test_stage_persist_lifecycle(spark):

@@ -300,6 +300,36 @@ def test_scratch_dirs_come_from_the_one_work_root():
     assert out.split() == [os.path.abspath(workdir.__file__)]
 
 
+def test_stream_queries_start_only_in_streaming():
+    """Only ``streaming/`` starts stream queries: no other package
+    module names ``writeStream``, ``foreachBatch`` or
+    ``awaitTermination`` (the stores drain through
+    ``streaming.jobs.drain_batches``)."""
+    import os
+    import subprocess
+
+    from hbase_tools_spark.functions import workdir
+
+    pkg = os.path.dirname(os.path.dirname(os.path.abspath(workdir.__file__)))
+    out = subprocess.run(
+        ["grep", "-rlE", "--include=*.py",
+         "writeStream|foreachBatch|awaitTermination", pkg],
+        capture_output=True, text=True,
+    ).stdout
+    streaming = os.path.join(pkg, "streaming") + os.sep
+    assert [f for f in out.split() if not f.startswith(streaming)] == []
+
+
+def test_codec_queries_share_one_per_document_map():
+    """The real-codec queries of ``llm/multimodal.py`` go through one
+    per-document map, so the module calls ``spread_if_undersplit(``
+    exactly once."""
+    from hbase_tools_spark.llm import multimodal
+
+    with open(multimodal.__file__) as f:
+        assert f.read().count("spread_if_undersplit(") == 1
+
+
 def test_stream_stage_lives_under_the_work_root(spark):
     """The stream stage dir lies under ``workdir.root``, not under a
     hard-coded ``/tmp`` path."""

@@ -268,16 +268,15 @@ def test_rbo_matches_python_recompute_from_legs(spark):
 
 
 def test_index_ingest_stream_serves_like_full_rebuild(spark, tmp_path):
-    """Documents streamed in three micro-batches through the
-    foreachBatch index loop must serve BM25 bit-identically to a full
-    one-shot rebuild, and a replayed batch must leave the index
-    unchanged (dynamic-partition-overwrite idempotence)."""
+    """Documents streamed in three micro-batches through the shared
+    ingest driver into ``index_ingest_batch`` must serve BM25
+    bit-identically to a full one-shot rebuild, and a replayed batch
+    must leave the index unchanged (dynamic-partition-overwrite
+    idempotence)."""
     import os
 
-    from hbase_tools_spark.llm.search import (
-        index_ingest_batch,
-        index_ingest_stream,
-    )
+    from hbase_tools_spark.llm.search import index_ingest_batch
+    from hbase_tools_spark.streaming.jobs import drain_batches
 
     m = load_model(spark, SF_DIR)
     src = str(tmp_path / "docs_in")
@@ -295,8 +294,9 @@ def test_index_ingest_stream_serves_like_full_rebuild(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(src + "/*.parquet")
     )
-    q = index_ingest_stream(stream, idx, str(tmp_path / "ckpt"))
-    q.awaitTermination()
+    q = drain_batches(
+        stream, lambda df, batch_id: index_ingest_batch(df, idx, batch_id)
+    )
     assert len(q.recentProgress) >= 3
 
     full_idx = str(tmp_path / "full_idx")
