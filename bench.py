@@ -132,12 +132,10 @@ def main() -> None:
     # that — so the bench measures engine work with AQE off; flip
     # SPARK_GRAFT_AQE=true to measure the adaptive posture.
     aqe = os.environ.get("SPARK_GRAFT_AQE", "false")
-    # Post-shuffle group counts at sf0.1 are tiny (per-server/bucket/
-    # band); 4 fixed shuffle partitions is the measured knee at
-    # local[32] (8 is ~15-20% slower on both the sub-second and the
-    # heavy LLM subsets, 2 regresses; coalescing is AQE's job, and
-    # it's off here).  Map-side parallelism is governed by input
-    # partitions, not this.
+    # load_model sets the shuffle partitions from the model's on-disk
+    # bytes (README, "Partition sizing": 1 at sf0.01, the cores at
+    # sf0.1), so this value only stands with SPARK_GRAFT_AUTOSHUFFLE=off.
+    # Map-side parallelism is governed by input partitions, not this.
     shuffle_parts = os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "4")
     # Constraint propagation spends optimizer time deriving isNotNull/
     # range constraints per plan; our plans carry their filters and

@@ -22,6 +22,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .functions.partitioning import cores, partitions_for
 from .model import BASE_TABLES, DERIVED_VIEWS, view_sql
 
 # Fixture parquet stores timestamps as INT64 TIMESTAMP(NANOS), which the
@@ -58,6 +59,10 @@ class Model:
 #: of shuffled-hash joins stay within task memory at any scale.
 _SHUFFLE_EXPANSION = 6
 _SHUFFLE_TARGET_BYTES = 64 << 20  # ~64 MB per post-shuffle partition
+#: Model bytes per core a shuffle is spread over below that memory
+#: bound: sf0.01 (1.9 MB) runs one task per shuffle, sf0.1 (17.5 MB)
+#: every core of a 4-core session (README, "Partition sizing").
+_SHUFFLE_CORE_BYTES = 4 << 20
 
 
 def _model_bytes(sf_dir: str) -> int | None:
@@ -83,36 +88,45 @@ def _model_bytes(sf_dir: str) -> int | None:
     return total
 
 
+def _shuffle_partitions(spark: SparkSession, model_bytes: int) -> int:
+    """Shuffle partitions of a model of ``model_bytes`` on disk: the
+    larger of a parallelism term, ``partitions_for(bytes, 4 MiB,
+    cores)``, and a memory term, ``partitions_for(bytes·expansion,
+    64 MB, 4096)``.  A fixture-scale model gets one partition, since
+    each shuffle task costs a fixed scheduling floor that dominates on
+    small inputs; sf0.1 gets the cores, where two partitions cost wall
+    time; once bytes·expansion / 64 MB passes the core count (45 MB on
+    4 cores) the memory term rules (a 10 GB model gets 960), so
+    shuffled-hash-join build sides stay bounded per task."""
+    return max(
+        partitions_for(model_bytes, _SHUFFLE_CORE_BYTES, cores(spark)),
+        partitions_for(
+            model_bytes * _SHUFFLE_EXPANSION, _SHUFFLE_TARGET_BYTES, 4096
+        ),
+    )
+
+
 def _autosize_shuffle_partitions(
     spark: SparkSession, model_bytes: int | None
 ) -> None:
-    """Scale ``spark.sql.shuffle.partitions`` with the DATA, not the
-    bench posture (round-10 verdict task 4: the sf10 certify sweep
-    OOMed at 8 g because partitions — and hence shuffled-hash-join
-    build sides — were a pinned session knob).  Only ever RAISES the
-    setting, and only when estimated post-shuffle bytes demand more
-    partitions than the session already has: local benches that pin a
-    small value for fixture-scale runs (bench.py's 4) keep it, because
-    fixture bytes never reach the threshold; a 100× certify run on the
-    same session config gets ceil(bytes·expansion / 64 MB) instead of
-    an OOM.  ``SPARK_GRAFT_AUTOSHUFFLE=off`` disables.  (The
+    """Set ``spark.sql.shuffle.partitions`` from the DATA, not the
+    session's posture: ``_shuffle_partitions``, in both directions, so
+    a fixture-scale model lowers whatever the session asked for and a
+    big one raises it instead of running out of memory (the sf10
+    certify sweep OOMed at 8 g while partitions — and hence
+    shuffled-hash-join build sides — were a pinned session knob).  The
     ``shuffle_hash`` hint sites in llm/dedup.py and llm/corpus.py
     assume exactly this rule: their build sides are bounded per
     partition BECAUSE partitions scale with input bytes; under AQE the
     planner may still fall back to sort-merge when a build side
-    estimate exceeds the local-map threshold.)  Unknown bytes leave the
-    session's setting alone."""
+    estimate exceeds the local-map threshold.
+    ``SPARK_GRAFT_AUTOSHUFFLE=off`` disables, and unknown bytes leave
+    the session's setting alone."""
     if model_bytes is None or os.environ.get("SPARK_GRAFT_AUTOSHUFFLE", "on") == "off":
         return
-    by_bytes = -(-model_bytes * _SHUFFLE_EXPANSION // _SHUFFLE_TARGET_BYTES)
-    try:
-        cur = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        if by_bytes > cur:
-            spark.conf.set(
-                "spark.sql.shuffle.partitions", str(min(int(by_bytes), 4096))
-            )
-    except Exception:
-        pass  # sizing is best-effort; the session's setting stands
+    spark.conf.set(
+        "spark.sql.shuffle.partitions", str(_shuffle_partitions(spark, model_bytes))
+    )
 
 
 #: Largest model (on-disk bytes of its base tables) that runs

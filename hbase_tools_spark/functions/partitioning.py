@@ -8,6 +8,12 @@ keys (common/KeyGenerator.java:27-49).  The Spark analogs:
   final agg on key; the map-side combine Catalyst already does, made
   explicit for aggregates that shuffle raw rows (collect_list etc.).
 
+Every partition count in the package — the session's shuffle
+partitions, the batch Python stages, the stateful drains and the scan
+spread — comes from one rule, ``partitions_for``: one partition per
+started byte budget of input, clamped to ``[1, cap]``.  Only the budget
+and the cap differ per kind of stage (README, "Partition sizing").
+
 All helpers are deterministic (hash-based salts, no randomness) so
 results are reproducible and oracle-testable.
 """
@@ -16,6 +22,47 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+
+def partitions_for(nbytes: int, budget: int, cap: int) -> int:
+    """The one partition rule: ``clamp(ceil(nbytes / budget), 1, cap)``."""
+    return max(1, min(cap, -(-nbytes // budget)))
+
+
+def cores(spark) -> int:
+    """The session's task slots: the cap of a Python stage, and the
+    count for one whose input size is unknown."""
+    return spark.sparkContext.defaultParallelism
+
+
+def relation_bytes(df: DataFrame) -> int | None:
+    """The optimizer's ``sizeInBytes`` of ``df``, or ``None`` when its
+    statistics are unavailable (e.g. RDD-backed).  Pure metadata: the
+    estimate comes from parquet footers, no job runs."""
+    try:
+        return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+    except Exception:
+        return None
+
+
+#: Input bytes (optimizer estimate) per partition of a batch Python
+#: stage (``mapInPandas``).  Each task pays a fixed Python-worker cost
+#: whatever its row count, so a small input wants one task, while a
+#: larger one still needs the cores for wall time: the documents
+#: projection the stages read is estimated at 28 KB at sf0.01 (1
+#: partition) and 255 KB at sf0.1 (4), where fewer tasks cost wall
+#: (README, "Partition sizing").
+_PYTHON_STAGE_BYTES = 64 << 10
+
+
+def python_stage_input(df: DataFrame, key_col: str) -> DataFrame:
+    """``df`` repartitioned by ``key_col`` for the batch Python stage
+    that consumes it: ``partitions_for(relation_bytes(df), 64 KiB,
+    cores)``, or every core when the size is unknown."""
+    size = relation_bytes(df)
+    n_cores = cores(df.sparkSession)
+    n = n_cores if size is None else partitions_for(size, _PYTHON_STAGE_BYTES, n_cores)
+    return df.repartition(n, key_col)
 
 
 def two_phase_agg(
@@ -59,11 +106,11 @@ def spread_if_undersplit(df: DataFrame, key_col: str) -> DataFrame:
     34 s median; the 64-partition re-measure removed it — this encodes
     that sizing rule in the plan instead of in docs).
 
-    Target partitions = max(defaultParallelism,
-    ceil(stats.sizeInBytes / spark.sql.files.maxPartitionBytes)) — the
-    same per-split byte budget the scan planner itself uses.  The probe
-    is pure metadata (``inputFiles()`` + optimizer stats from parquet
-    footers; no RDD materialization).  At real scale a table's split
+    Target partitions = max(cores, partitions_for(relation_bytes,
+    spark.sql.files.maxPartitionBytes, 4096)) — the same per-split byte
+    budget the scan planner itself uses.  The probe is pure metadata
+    (``inputFiles()`` + optimizer stats from parquet footers; no RDD
+    materialization).  At real scale a table's split
     count dwarfs the target and this is a no-op; on single-file local
     fixtures it spreads the map-side work (Arrow passes, collect_list
     partials, explodes) across cores instead of one task.  Only
@@ -71,19 +118,11 @@ def spread_if_undersplit(df: DataFrame, key_col: str) -> DataFrame:
     shuffle partitioning anyway.
     """
     spark = df.sparkSession
-    n_slots = spark.sparkContext.defaultParallelism
-    try:
-        size = int(
-            df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-        )
-        # JVM-side parse handles "128m"-style conf values
-        max_pb = int(
-            spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
-        )
-        by_bytes = -(-size // max(max_pb, 1))  # ceil
-    except Exception:  # stats unavailable (e.g. RDD-backed) — slots only
-        by_bytes = 0
-    n_target = max(n_slots, min(by_bytes, 4096))
+    size = relation_bytes(df)
+    # JVM-side parse handles "128m"-style conf values
+    max_pb = int(spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes())
+    by_bytes = 1 if size is None else partitions_for(size, max_pb, 4096)
+    n_target = max(cores(spark), by_bytes)
     if len(df.inputFiles()) < n_target:
         return df.repartition(n_target, key_col)
     return df

@@ -20,6 +20,7 @@ from pyspark.sql.window import Window
 from ..catalog import Model
 from ..functions.cache import stage_persist
 from ..functions.exprs import fround, fround_sql
+from ..functions.partitioning import python_stage_input
 from ..registry import query
 
 _SHINGLE = 5          # words per shingle
@@ -106,15 +107,9 @@ def _shingles_with_size(m: Model, width: int = _SHINGLE) -> DataFrame:
                 shs.extend(seen)
             yield pd.DataFrame({"doc_id": ids, "n": ns, "shingle": shs})
 
-    # Repartition before the CPU-bound shingle pass: the fixture is a
-    # single parquet file (1 input partition), which would serialize the
-    # whole pass on one core; a real corpus has file-level fan-out.
-    n_parts = m.spark.sparkContext.defaultParallelism
-    return (
-        m.documents.select("doc_id", "text")
-        .repartition(n_parts, "doc_id")
-        .mapInPandas(shingler, "doc_id long, n long, shingle string")
-    )
+    return python_stage_input(
+        m.documents.select("doc_id", "text"), "doc_id"
+    ).mapInPandas(shingler, "doc_id long, n long, shingle string")
 
 
 _JACCARD_PAIRS_SQL = f"""
@@ -260,12 +255,9 @@ def _signatures_for(docs: DataFrame) -> DataFrame:
                 sigs.append(((mul * hv[None, :] + add) % prime).min(axis=1))
             yield pd.DataFrame({"doc_id": ids, "sig": sigs})
 
-    n_parts = docs.sparkSession.sparkContext.defaultParallelism
-    return (
-        docs.select("doc_id", "text")
-        .repartition(n_parts, "doc_id")
-        .mapInPandas(signer, "doc_id long, sig array<long>")
-    )
+    return python_stage_input(
+        docs.select("doc_id", "text"), "doc_id"
+    ).mapInPandas(signer, "doc_id long, sig array<long>")
 
 
 # Hot-bucket cap: a bucket with more than this many docs is EXCLUDED

@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import Model
 from ..functions.exprs import fround, fround_sql
+from ..functions.partitioning import python_stage_input
 from ..registry import query
 
 _STOPWORDS = ("the", "a")
@@ -219,12 +220,9 @@ def simhash_fingerprints(m: Model) -> DataFrame:
                 fps.append(fp)
             yield pd.DataFrame({"doc_id": ids, "simhash16": fps})
 
-    n_parts = m.spark.sparkContext.defaultParallelism
-    return (
-        m.documents.select("doc_id", "text")
-        .repartition(n_parts, "doc_id")
-        .mapInPandas(simhasher, "doc_id long, simhash16 long")
-    )
+    return python_stage_input(
+        m.documents.select("doc_id", "text"), "doc_id"
+    ).mapInPandas(simhasher, "doc_id long, simhash16 long")
 
 
 # --- Winnowing fingerprints (real rolling hash) -------------------------
@@ -286,7 +284,6 @@ def doc_winnow_fingerprints(m: Model) -> DataFrame:
     import numpy as np
     import pandas as pd
 
-    n_parts = m.spark.sparkContext.defaultParallelism
     token_cache: dict[str, int] = {}
 
     def winnow(batches):
@@ -325,11 +322,9 @@ def doc_winnow_fingerprints(m: Model) -> DataFrame:
                     {"doc_id": np.concatenate(ids), "fp": np.concatenate(fps)}
                 )
 
-    return (
-        m.documents.select("doc_id", "text")
-        .repartition(n_parts, "doc_id")
-        .mapInPandas(winnow, "doc_id long, fp long")
-    )
+    return python_stage_input(
+        m.documents.select("doc_id", "text"), "doc_id"
+    ).mapInPandas(winnow, "doc_id long, fp long")
 
 
 _QF_MIN_TOKENS = 20

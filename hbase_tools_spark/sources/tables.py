@@ -359,21 +359,25 @@ def table_lifecycle_roundtrip(m) -> DataFrame:
     spark = m.spark
 
     def run_lifecycle() -> list:
-        work = workdir.scratch(spark, "tbl_lifecycle_")
-        src, dst, newver = f"{work}/src", f"{work}/dst", f"{work}/newver"
-        m.meta_regions.write.parquet(src)
-        copy_table(spark, src, dst)  # SC7
-        copied = _lifecycle_readout(spark, dst, "copied")
-        m.meta_regions.where(F.col("region_id") % 2 == 0).write.parquet(newver)
-        backup = replace_table(spark, newver, dst)  # SC8
-        replaced = _lifecycle_readout(spark, dst, "replaced")
-        backup_r = _lifecycle_readout(spark, backup, "backup")
-        drop_table(spark, src)  # SC9
+        # The readouts are eager checkpoints and ``gone`` is a literal,
+        # so nothing reads the work dir after the block: it is removed
+        # whether the lifecycle finished or raised.
+        with workdir.temp(spark, "tbl_lifecycle_") as work:
+            src, dst, newver = f"{work}/src", f"{work}/dst", f"{work}/newver"
+            m.meta_regions.write.parquet(src)
+            copy_table(spark, src, dst)  # SC7
+            copied = _lifecycle_readout(spark, dst, "copied")
+            m.meta_regions.where(F.col("region_id") % 2 == 0).write.parquet(newver)
+            backup = replace_table(spark, newver, dst)  # SC8
+            replaced = _lifecycle_readout(spark, dst, "replaced")
+            backup_r = _lifecycle_readout(spark, backup, "backup")
+            drop_table(spark, src)  # SC9
+            dropped = not _exists(src)
         # a JVM-side row: a local-list createDataFrame is a PythonRDD,
         # and every warm read would run it through a Python worker
         gone = spark.range(1).selectExpr(
             "'dropped_src' AS stage",
-            f"CAST({0 if not _exists(src) else -1} AS BIGINT) AS n_rows",
+            f"CAST({0 if dropped else -1} AS BIGINT) AS n_rows",
             "CAST(0 AS BIGINT) AS row_digest",
             "CAST(0 AS BIGINT) AS n_tables",
         )

@@ -37,6 +37,7 @@ from pyspark.sql import functions as F
 from ..catalog import Model
 from ..functions import workdir
 from ..functions.exprs import dsum, epoch_bigint
+from ..functions.partitioning import cores, partitions_for
 from ..registry import query
 
 _GAP_MIN = 10  # session-window gap (minutes)
@@ -133,18 +134,17 @@ _STATE_PART_BYTES = 512 << 10  # 512 KiB of source per state partition
 
 def auto_state_partitions(spark: SparkSession, source_path: str) -> int:
     """State-partition count of a user-keyed stateful drain (funnel,
-    attribution, session): ``clamp(ceil(feed_bytes / 512 KiB), 1,
-    defaultParallelism)``; a feed of unknown size (``source_size`` 0)
-    gets ``defaultParallelism``.  The one sizing rule: callers pass it
-    to ``run_to_table`` unchanged.
+    attribution, session): ``partitions_for(feed_bytes, 512 KiB,
+    cores)``; a feed of unknown size (``source_size`` 0) gets every
+    core.  Callers pass it to ``run_to_table`` unchanged.
 
     Each state partition is one ``applyInPandasWithState`` task with
     about 0.25 CPU-s of Python framework cost whatever its row count,
     so a small feed wants few of them; a large one wants every core
     (the drain's Python-stage parallelism IS the state-partition count,
     frozen into the checkpoint at first run).  Measured per warm drain
-    on a 4-vCPU VM, ``local[4]``, host busy CPU-s (README, "Stateful
-    drain sizing"):
+    on a 4-vCPU VM, ``local[4]``, host busy CPU-s (README, "Partition
+    sizing"):
 
     * sf0.01 (events 221 075 B -> 1 partition), 1 vs 4 partitions:
       funnel 2.8-3.9 vs 4.3-5.9 CPU-s, attribution 2.1-2.7 vs 3.7-4.3
@@ -155,11 +155,10 @@ def auto_state_partitions(spark: SparkSession, source_path: str) -> int:
     Past that the count stays capped at the core count (on 10x events,
     19 MiB, the funnel drain fell 30.8 -> 13.2 -> 8.1 -> 5.2 s at
     2/4/8/16 partitions on local[16])."""
-    cores = spark.sparkContext.defaultParallelism
     size = source_size(spark, source_path)
     if size == 0:
-        return cores
-    return min(cores, -(-size // _STATE_PART_BYTES))  # ceil, >= 1
+        return cores(spark)
+    return partitions_for(size, _STATE_PART_BYTES, cores(spark))
 
 
 def events_state_partitions(m) -> int:

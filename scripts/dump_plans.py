@@ -34,8 +34,9 @@ def main() -> None:
     from hbase_tools_spark.catalog import load_model
     from hbase_tools_spark.registry import QUERIES
 
-    # Bench posture (bench.py): AQE off, 4 shuffle partitions, so the
-    # dumped plan is the one the bench actually executes.
+    # Bench posture (bench.py): AQE off, and load_model sizes the
+    # shuffle partitions from the model's bytes, so the dumped plan is
+    # the one the bench actually executes.
     spark = (
         SparkSession.builder.master(f"local[{args.cpus}]")
         .appName("dump-plans")

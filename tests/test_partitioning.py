@@ -54,9 +54,10 @@ def test_spread_if_undersplit_sizes_by_bytes(spark):
 def test_autosize_shuffle_partitions_scales_with_bytes(spark, tmp_path, monkeypatch):
     """load_model sizes spark.sql.shuffle.partitions from fixture BYTES
     (round-10 verdict task 4: the sf10 certify OOMed because the knob
-    was a pinned bench posture).  Rule: only ever RAISES, so a
-    fixture-scale session keeps its tuned value; a fixture big enough
-    to demand more partitions gets ceil(bytes*expansion / 64MB).  The
+    was a pinned bench posture).  Rule: the larger of ceil(bytes /
+    4 MiB) capped at the cores and ceil(bytes*expansion / 64MB) capped
+    at 4096, in both directions: a fixture-scale model lowers the
+    session's value, a big one raises it.  The
     same bytes pick the codegen posture: interpreted up to the measured
     break-even, compiled past it or when the size is unknown, set in
     both directions on every registration."""
@@ -76,11 +77,21 @@ def test_autosize_shuffle_partitions_scales_with_bytes(spark, tmp_path, monkeypa
     sizes[SF_DIR] = C._model_bytes(SF_DIR)
     assert all(b > 0 for b in sizes.values()), sizes
 
-    # fixture-scale: the largest generated fixture, sf0.1, is 17 MB;
-    # 17 MB * 6 / 64 MB < 4 -> the session's value stands
+    # fixture-scale: the session's value is LOWERED to the rule's; the
+    # largest generated fixture, sf0.1, is 17 MB: 17 MB / 4 MiB -> 5,
+    # capped at the cores; the smaller ones (under 4 MiB) -> 1
     prev = spark.conf.get("spark.sql.shuffle.partitions")
-    C._autosize_shuffle_partitions(spark, max(sizes.values()))
-    assert spark.conf.get("spark.sql.shuffle.partitions") == prev
+    slots = spark.sparkContext.defaultParallelism
+    try:
+        for n, b in sizes.items():
+            spark.conf.set("spark.sql.shuffle.partitions", "200")
+            C._autosize_shuffle_partitions(spark, b)
+            want = 1 if b <= 4 << 20 else min(slots, -(-b // (4 << 20)))
+            assert int(spark.conf.get("spark.sql.shuffle.partitions")) == want, n
+        if "sf0.1" in sizes:
+            assert -(-sizes["sf0.1"] // (4 << 20)) == 5
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
 
     # large fixture (sparse files so the test costs no real disk):
     # 10 GB * 6 / 64 MB = 960 partitions

@@ -330,6 +330,32 @@ def test_codec_queries_share_one_per_document_map():
         assert f.read().count("spread_if_undersplit(") == 1
 
 
+def test_partition_counts_come_from_the_one_rule():
+    """Only ``functions/partitioning.py`` reads the core count
+    (``defaultParallelism``) or calls ``repartition(``, so no
+    ``repartition(`` in front of a ``mapInPandas`` takes a core count:
+    every Python stage's input is split by a function there, and each
+    of those sizes its count with ``partitions_for``."""
+    import ast
+    import os
+    import subprocess
+
+    from hbase_tools_spark.functions import partitioning
+
+    pkg = os.path.dirname(os.path.dirname(os.path.abspath(partitioning.__file__)))
+    for pattern in ("defaultParallelism", r"repartition\("):
+        out = subprocess.run(
+            ["grep", "-rlE", "--include=*.py", pattern, pkg],
+            capture_output=True, text=True,
+        ).stdout
+        assert out.split() == [os.path.abspath(partitioning.__file__)], pattern
+    with open(partitioning.__file__) as f:
+        tree = ast.parse(f.read())
+    for node in tree.body:
+        if isinstance(node, ast.FunctionDef) and "repartition(" in ast.unparse(node):
+            assert "partitions_for(" in ast.unparse(node), node.name
+
+
 def test_stream_stage_lives_under_the_work_root(spark):
     """The stream stage dir lies under ``workdir.root``, not under a
     hard-coded ``/tmp`` path."""

@@ -117,3 +117,28 @@ def test_roundtrip_stores_rebuild_on_view_swap(spark):
     finally:
         spark.conf.set("spark.hbase_tools.model_dir", "")
         load_model(spark, SF_DIR)
+
+
+def test_failed_table_lifecycle_leaves_no_work_dir(spark, ducksql, monkeypatch):
+    """A lifecycle step that raises propagates the error, leaves no new
+    entry under the scratch root and adds no memo entry; once the fault
+    is gone, the next call serves the oracle's rows."""
+    from hbase_tools_spark.functions import memo, workdir
+    from hbase_tools_spark.registry import QUERIES
+    from tests.conftest import assert_query_matches_oracle
+
+    def broken(*_args, **_kwargs):
+        raise RuntimeError("injected copy failure")
+
+    # an empty memo, restored afterwards, so the lifecycle runs here
+    monkeypatch.setattr(memo, "_CACHE", {})
+    m = load_model(spark, SF_DIR)
+    root = workdir.root(spark)
+    before = set(os.listdir(root))
+    with monkeypatch.context() as mp:
+        mp.setattr(T, "copy_table", broken)
+        with pytest.raises(RuntimeError, match="injected copy failure"):
+            QUERIES["table_lifecycle_roundtrip"].fn(m)
+    assert set(os.listdir(root)) - before == set()
+    assert memo._CACHE == {}
+    assert_query_matches_oracle(spark, ducksql, "table_lifecycle_roundtrip")

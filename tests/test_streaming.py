@@ -941,3 +941,69 @@ def test_run_to_table_failed_drain_leaves_no_scratch_dir(spark, tmp_path, spill)
             source_bytes=J._MEM_SINK_MAX_SOURCE_BYTES + 1 if spill else 0,
         )
     assert len(os.listdir(root)) <= before
+
+
+def _stage_task_counts(spark, run) -> list[int]:
+    """Task counts of every stage that ran tasks while ``run()`` ran,
+    stream-execution threads included, read from the status tracker:
+    the jobs strictly between two marker jobs."""
+    import time
+    import uuid
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
+    def marker() -> int:
+        group = f"marker-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            spark.range(1).collect()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        deadline = time.monotonic() + 30  # the status store trails the job
+        while not (ids := tracker.getJobIdsForGroup(group)):
+            assert time.monotonic() < deadline, "marker job never recorded"
+            time.sleep(0.05)
+        return ids[0]
+
+    first = marker()
+    run()
+    last = marker()
+    counts = []
+    for job_id in range(first + 1, last):
+        job = tracker.getJobInfo(job_id)
+        for stage_id in job.stageIds if job else ():
+            stage = tracker.getStageInfo(stage_id)
+            if stage is not None and stage.numCompletedTasks > 0:
+                counts.append(stage.numTasks)
+    return counts
+
+
+def test_stream_index_build_runs_at_the_model_shuffle_width(spark, monkeypatch):
+    """``load_model`` owns ``spark.sql.shuffle.partitions``: in a session
+    that asks for 200, building the stream-served BM25 index (whose
+    micro-batch writer runs at the session's shuffle partitions) runs
+    no stage wider than the partition rule gives for the model."""
+    from hbase_tools_spark import catalog as C
+    from hbase_tools_spark.functions import memo
+    from hbase_tools_spark.llm import search
+
+    sf = os.path.join(os.path.dirname(SF_DIR), "sf0.01")
+    if not os.path.isdir(sf):
+        sf = SF_DIR
+    want = C._shuffle_partitions(spark, C._model_bytes(sf))
+    # an empty memo, restored afterwards, so the index builds here
+    monkeypatch.setattr(memo, "_CACHE", {})
+    spark.conf.set("spark.sql.shuffle.partitions", "200")
+    try:
+        spark.conf.set("spark.hbase_tools.model_dir", "")
+        m = C.load_model(spark, sf)
+        counts = _stage_task_counts(
+            spark, lambda: search._stream_index_artifact_dir(m)
+        )
+    finally:  # re-registering the test model resets the partitions too
+        spark.conf.set("spark.hbase_tools.model_dir", "")
+        C.load_model(spark, SF_DIR)
+    assert counts, "the index build ran no stage"
+    assert max(counts) <= want, (want, counts)
