@@ -46,14 +46,13 @@ def _steady_state_batch_ms(spark) -> float:
     windowed streaming aggregation — the continuous-stream per-batch
     cost the one-shot drains in stream_* cannot show."""
     import datetime
-    import shutil
     import statistics
-    import tempfile
 
     from pyspark.sql import functions as F
 
-    work = tempfile.mkdtemp(prefix="bench_steady_")
-    try:
+    from hbase_tools_spark.functions import workdir
+
+    with workdir.temp(spark, "bench_steady_") as work:
         src = os.path.join(work, "src")
         os.makedirs(src)
         schema = "user_id bigint, event_type string, ts timestamp"
@@ -93,8 +92,6 @@ def _steady_state_batch_ms(spark) -> float:
             p["batchDuration"] for p in q.recentProgress if p["numInputRows"] > 0
         ]
         return round(float(statistics.median(sorted(durs[1:]))), 1)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
 
 def _host_calibration() -> float:
@@ -119,83 +116,18 @@ def main() -> None:
     only = os.environ.get("SPARK_GRAFT_BENCH_QUERIES")  # comma-sep subset
     host_cal = _host_calibration()
 
-    from pyspark.sql import SparkSession
-
-    # AQE is the production posture (skew-join splitting, partition
-    # coalescing on real shuffles) but pure overhead at fixture scale:
-    # every shuffle stage pays a driver re-planning round, measured
-    # ~25-35% of wall on sub-second queries AND on the heavy LLM
-    # pipeline at sf0.1 (e.g. ngram_jaccard_pairs 1.8 s -> 0.8 s,
-    # split_plan_multipass 3.0 s -> 1.2 s with AQE off + 8 shuffle
-    # partitions at local[32]).  None of our plans RELY on AQE — every
-    # dimension join is explicitly broadcast and plan-shape tests pin
-    # that — so the bench measures engine work with AQE off; flip
-    # SPARK_GRAFT_AQE=true to measure the adaptive posture.
-    aqe = os.environ.get("SPARK_GRAFT_AQE", "false")
-    # load_model sets the shuffle partitions from the model's on-disk
-    # bytes (README, "Partition sizing": 1 at sf0.01, the cores at
-    # sf0.1), so this value only stands with SPARK_GRAFT_AUTOSHUFFLE=off.
-    # Map-side parallelism is governed by input partitions, not this.
-    shuffle_parts = os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "4")
-    # Constraint propagation spends optimizer time deriving isNotNull/
-    # range constraints per plan; our plans carry their filters and
-    # broadcast hints explicitly, so it buys nothing here and costs
-    # ~35 ms/query on the join-heavy families (measured A/B on 20
-    # queries: 10.6 s -> 9.9 s warm).  Purely an optimizer-time knob —
-    # results are identical (the differential gate runs either way);
-    # flip SPARK_GRAFT_CONSTRAINT_PROP=true to restore the default.
-    constraint_prop = os.environ.get("SPARK_GRAFT_CONSTRAINT_PROP", "false")
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("hbase-tools-spark-bench")
-        .config("spark.sql.shuffle.partitions", shuffle_parts)
-        .config("spark.sql.adaptive.enabled", aqe)
-        .config("spark.sql.adaptive.coalescePartitions.enabled", aqe)
-        .config("spark.sql.adaptive.skewJoin.enabled", aqe)
-        .config("spark.sql.constraintPropagation.enabled", constraint_prop)
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # 87 queries in one JVM: localCheckpoint blocks from earlier
-        # queries linger until a driver GC lets ContextCleaner drop
-        # them (default periodic GC is 30 MIN — far longer than this
-        # run), and the accumulated block-manager pressure was measured
-        # inflating a mid-list query 6x.  Tight periodic GC + an
-        # explicit per-query gc.collect() keep the working set flat.
-        .config("spark.cleaner.periodicGC.interval", "20s")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .config("spark.ui.showConsoleProgress", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-
     import __spark_entry__ as entrymod
-    from hbase_tools_spark.catalog import load_model
+    from hbase_tools_spark.catalog import load_model, warm
     from hbase_tools_spark.registry import QUERIES
+    from hbase_tools_spark.session import get_spark
 
-    load_model(spark, sf_dir)
+    # load_model sets the whole SQL posture (README, "Execution
+    # posture"); warm holds the model as a long-lived cluster does, so
+    # the timings measure the engine, not parquet decode and view
+    # re-analysis.  DuckDB gets the symmetric treatment (same best-of-N).
+    spark = get_spark("hbase-tools-spark-bench", cpus)
+    warm(load_model(spark, sf_dir))
     names = [n for n in QUERIES if not only or n in only.split(",")]
-
-    # Cache the base tables in memory — on a long-lived cluster the hot
-    # working set lives in the executors' storage/OS cache; timing cold
-    # parquet decode on every micro-query would benchmark the disk, not
-    # the engine. DuckDB gets the symmetric treatment (same best-of-N).
-    # Materialize base + derived model relations with plan truncation
-    # (localCheckpoint): the reference memoizes its meta-scan exactly
-    # this way (MetaTableHolder.needUpdate — SURVEY §4 maps it to
-    # df.cache()), and at 100 TB these are materialized snapshot
-    # tables, not per-query recomputes.  Truncating the lineage also
-    # removes per-query re-analysis of the deep view SQL, which
-    # otherwise dominates sub-second queries (~1 s planning vs ~40 ms
-    # execution, measured).
-    from hbase_tools_spark.model import DERIVED_VIEWS
-
-    for t in ["region", "nation", "customer", "supplier", "part",
-              "orders", "lineitem", "events", "documents", "embeddings"]:
-        spark.catalog.cacheTable(t)  # columnar cache keeps scans vectorized
-        spark.table(t).count()
-    for t in DERIVED_VIEWS:  # small; checkpoint truncates their view SQL
-        spark.table(t).localCheckpoint(eager=True).createOrReplaceTempView(t)
 
     qs = entrymod.queries()
     # Stability methodology (round-5): N runs per query on BOTH engines
@@ -251,10 +183,7 @@ def main() -> None:
         # queries.  Runs 2..N of the SAME query still hit CacheManager
         # warm (release happens only here, between queries); memoized
         # pretrained artifacts are not tracked and survive.
-        # SPARK_GRAFT_RELEASE=off restores the round-8 accumulate
-        # posture (A/B instrument for the lifecycle's sweep impact).
-        if os.environ.get("SPARK_GRAFT_RELEASE", "on") != "off":
-            release_stage_caches()
+        release_stage_caches()
 
     # Host window can shift over a ~1 h sweep — a second calibration
     # between the legs makes a mid-sweep slowdown visible in-artifact
@@ -275,11 +204,9 @@ def main() -> None:
         # killed the whole leg mid-loop).  Cap it below the headroom —
         # derived from detected RAM, not this box's topology (round-10
         # ADVICE: a hard-coded 48GB RAISES the limit on small hosts) —
-        # and give it ONE per-process spill dir (mkdtemp per connection
-        # leaked dirs across oracle-failure rebuilds), removed at exit.
-        import atexit
-        import shutil
-        import tempfile
+        # and give it ONE spill dir under the engine's work root (a dir
+        # per connection leaked across oracle-failure rebuilds).
+        from hbase_tools_spark.functions import workdir
 
         try:
             mem_bytes = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
@@ -291,8 +218,7 @@ def main() -> None:
             if mem_bytes
             else "48GB",
         )
-        duck_spill = tempfile.mkdtemp(prefix="duck_spill_")
-        atexit.register(shutil.rmtree, duck_spill, ignore_errors=True)
+        duck_spill = workdir.scratch(spark, "duck_spill_")
 
         def fresh_con():
             con = duckdb.connect()
@@ -382,8 +308,7 @@ def main() -> None:
                 times.append(time.perf_counter() - t0)
                 gc.collect()
             isolated_med[name] = round(statistics.median(times), 4)
-            if os.environ.get("SPARK_GRAFT_RELEASE", "on") != "off":
-                release_stage_caches()
+            release_stage_caches()
         # SYMMETRIC adjudication (round-10 ADVICE: a one-sided Spark
         # re-run scored against the sweep's duck median lets a
         # transient host window during the DuckDB leg decide weak-set

@@ -117,12 +117,9 @@ def _autosize_shuffle_partitions(
     shuffled-hash-join build sides — were a pinned session knob).  The
     ``shuffle_hash`` hint sites in llm/dedup.py and llm/corpus.py
     assume exactly this rule: their build sides are bounded per
-    partition BECAUSE partitions scale with input bytes; under AQE the
-    planner may still fall back to sort-merge when a build side
-    estimate exceeds the local-map threshold.
-    ``SPARK_GRAFT_AUTOSHUFFLE=off`` disables, and unknown bytes leave
-    the session's setting alone."""
-    if model_bytes is None or os.environ.get("SPARK_GRAFT_AUTOSHUFFLE", "on") == "off":
+    partition BECAUSE partitions scale with input bytes.  Unknown bytes
+    leave the session's setting alone."""
+    if model_bytes is None:
         return
     spark.conf.set(
         "spark.sql.shuffle.partitions", str(_shuffle_partitions(spark, model_bytes))
@@ -168,13 +165,30 @@ def _codegen_posture(model_bytes: int | None) -> str:
     return "compiled"
 
 
+#: SQL confs every model runs with, whatever its size (README,
+#: "Execution posture").  AQE off: no plan relies on runtime
+#: re-planning (every dimension join is an explicit broadcast, pinned by
+#: the plan-shape tests), and its per-stage driver round cost 25-35 %
+#: of wall on sub-second queries.  Constraint propagation off: plans
+#: carry their filters explicitly, and deriving constraints cost ~35 ms
+#: of optimizer time per join-heavy query.  nanosAsLong and UTC: see
+#: ``_TS_COLUMNS`` (DuckDB reads parquet timestamps as naive UTC).
+_SQL_POSTURE = {
+    "spark.sql.adaptive.enabled": "false",
+    "spark.sql.constraintPropagation.enabled": "false",
+    "spark.sql.legacy.parquet.nanosAsLong": "true",
+    "spark.sql.session.timeZone": "UTC",
+}
+
+
 def load_model(spark: SparkSession, sf_dir: str) -> Model:
     """Register base fixture tables + derived relations as temp views.
 
     Idempotent (CREATE OR REPLACE); cheap -- registration is metadata
-    only, nothing is scanned until an action runs.  Sizes shuffle
-    partitions and picks the codegen posture from the model's on-disk
-    bytes (``_autosize_shuffle_partitions``, ``_codegen_posture``).
+    only, nothing is scanned until an action runs.  Sets every SQL conf
+    of the execution posture: ``_SQL_POSTURE``, and the shuffle
+    partitions and codegen posture from the model's on-disk bytes
+    (``_autosize_shuffle_partitions``, ``_codegen_posture``).
     """
     # Registration is idempotent but not free (schema reads + one
     # catalog round-trip per view); skip it when this session already
@@ -183,13 +197,9 @@ def load_model(spark: SparkSession, sf_dir: str) -> Model:
         return Model(spark, sf_dir)
     model_bytes = _model_bytes(sf_dir)
     _autosize_shuffle_partitions(spark, model_bytes)
-    for key, value in _CODEGEN_POSTURES[_codegen_posture(model_bytes)].items():
+    confs = {**_SQL_POSTURE, **_CODEGEN_POSTURES[_codegen_posture(model_bytes)]}
+    for key, value in confs.items():
         spark.conf.set(key, value)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    # Pin UTC so NTZ<->instant conversions and unix_timestamp are
-    # deterministic regardless of the host session's timezone (DuckDB
-    # treats parquet timestamps as naive-UTC; we must agree).
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     for name in BASE_TABLES:
         path = os.path.join(sf_dir, f"{name}.parquet")
         df = spark.read.parquet(path)
@@ -209,6 +219,20 @@ def load_model(spark: SparkSession, sf_dir: str) -> Model:
         )
     spark.conf.set("spark.hbase_tools.model_dir", sf_dir)
     return Model(spark, sf_dir)
+
+
+def warm(m: Model) -> None:
+    """Hold the model as a long-lived deployment does: columnar-cache
+    the base tables and replace each derived view with an eager
+    ``localCheckpoint``.  The reference memoizes its meta scan the same
+    way (MetaTableHolder.needUpdate); truncating the view lineage also
+    spares every query the re-analysis of the deep view SQL (~1 s of
+    planning against ~40 ms of execution, measured at sf0.1)."""
+    for t in BASE_TABLES:
+        m.spark.catalog.cacheTable(t)
+        m.spark.table(t).count()
+    for t in DERIVED_VIEWS:
+        m.spark.table(t).localCheckpoint(eager=True).createOrReplaceTempView(t)
 
 
 def assert_view_matches_fixture(m: Model, view: str) -> None:

@@ -8,7 +8,8 @@ Plan shape at 100 TB:
     shingles and MinHash-LSH replaces the shingle join with a fixed
     number of band-hash buckets (16 hashes, 4 bands here);
   * verification (exact Jaccard) runs only on candidate pairs.
-AQE skew-join handles residual hot buckets.
+Residual hot buckets are not split: ``load_model`` turns AQE, and so
+its skew-join handling, off.
 """
 
 from __future__ import annotations
@@ -901,8 +902,9 @@ def docs_neardup_survivors(m: Model) -> DataFrame:
     that appear in some near-dup pair), so the corpus-side LEFT join
     keys on doc_id against a far smaller relation — at 100 TB that join
     broadcasts when the dup set is small and degrades to a co-
-    partitioned hash join when it is not (AQE decides from the measured
-    size); the corpus itself is scanned exactly once."""
+    partitioned hash join when it is not (the optimizer decides from
+    the estimated size; AQE is off); the corpus itself is scanned
+    exactly once."""
     cc = connected_components(ngram_jaccard_pairs(m))
     return (
         m.documents.select("doc_id", "lang", "source")

@@ -234,7 +234,7 @@ def embedding_neardup_pairs(m: Model) -> DataFrame:
     cap a 10× corpus grew candidates 111× through the fixed sign code;
     with it the join is ∝ N·cap).  The width relation is at most
     2^{8} rows, so the eligibility filter broadcasts at any corpus
-    size; residual intra-bucket skew is AQE's job."""
+    size; residual intra-bucket skew is not split (AQE is off)."""
     emb = m.embeddings
 
     bucket = _sign_bucket

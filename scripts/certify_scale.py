@@ -63,9 +63,7 @@ def main() -> None:
     # docs_window_dedup's oracle passes on a fresh connection, fails
     # on one that just spilled through docs_span_removed's).  The
     # certificate must measure each oracle, not connection history.
-    import atexit
-    import shutil
-    import tempfile
+    from hbase_tools_spark.functions import workdir
 
     try:
         mem = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
@@ -81,8 +79,7 @@ def main() -> None:
         "SPARK_GRAFT_DUCK_MEM",
         f"{max(1, int(mem * 0.75 / 2**30))}GB" if mem else "48GB",
     )
-    spill = tempfile.mkdtemp(prefix="duck_spill_certify_")
-    atexit.register(shutil.rmtree, spill, ignore_errors=True)
+    spill = workdir.scratch(spark, "duck_spill_certify_")
 
     def fresh_con():
         c = duckdb.connect()

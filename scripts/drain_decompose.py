@@ -53,14 +53,13 @@ def main() -> None:
 
     sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-    from pyspark.sql import SparkSession
-
     import hbase_tools_spark.operators  # noqa: F401
     import hbase_tools_spark.llm  # noqa: F401
     import hbase_tools_spark.streaming  # noqa: F401
     from hbase_tools_spark.catalog import load_model
     from hbase_tools_spark.registry import QUERIES
     from hbase_tools_spark.functions.cache import release_stage_caches
+    from hbase_tools_spark.session import get_spark
     from hbase_tools_spark.streaming import jobs as J
 
     names = args.queries.split(",")
@@ -68,29 +67,14 @@ def main() -> None:
     if unknown:
         raise SystemExit(f"not in the registry: {', '.join(unknown)}")
 
-    # The BENCH session posture (bench.py), so the phase table explains
-    # the bench artifact's drain numbers rather than a different config.
-    spark = (
-        SparkSession.builder.master(f"local[{args.cpus}]")
-        .appName("drain-decompose")
-        .config("spark.sql.shuffle.partitions", "4")
-        .config("spark.sql.adaptive.enabled", "false")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "false")
-        .config("spark.sql.adaptive.skewJoin.enabled", "false")
-        .config("spark.sql.constraintPropagation.enabled", "false")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.cleaner.periodicGC.interval", "20s")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        # recentProgress is a ring buffer (default 100); a drain with
-        # more micro-batches would silently lose early batches and
-        # misattribute their time to startup_teardown_sec (round-10
-        # ADVICE) — raise the cap and assert below.
-        .config("spark.sql.streaming.numRecentProgressUpdates", "10000")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    # The session and posture bench.py runs, so the phase table
+    # explains the bench artifact's drain numbers.
+    spark = get_spark("drain-decompose", args.cpus)
+    # recentProgress is a ring buffer (default 100); a drain with more
+    # micro-batches would silently lose early batches and misattribute
+    # their time to startup_teardown_sec (round-10 ADVICE) — raise the
+    # cap and assert below.
+    spark.conf.set("spark.sql.streaming.numRecentProgressUpdates", "10000")
     m = load_model(spark, args.sf_dir)
 
     def one_drain(name: str) -> dict:

@@ -26,30 +26,16 @@ def main() -> None:
 
     sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-    from pyspark.sql import SparkSession
-
     import hbase_tools_spark.operators  # noqa: F401
     import hbase_tools_spark.llm  # noqa: F401
     import hbase_tools_spark.streaming  # noqa: F401
     from hbase_tools_spark.catalog import load_model
     from hbase_tools_spark.registry import QUERIES
+    from hbase_tools_spark.session import get_spark
 
-    # Bench posture (bench.py): AQE off, and load_model sizes the
-    # shuffle partitions from the model's bytes, so the dumped plan is
-    # the one the bench actually executes.
-    spark = (
-        SparkSession.builder.master(f"local[{args.cpus}]")
-        .appName("dump-plans")
-        .config("spark.sql.shuffle.partitions", "4")
-        .config("spark.sql.adaptive.enabled", "false")
-        .config("spark.sql.constraintPropagation.enabled", "false")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    # load_model sets the posture bench.py and perfbench run, so the
+    # dumped plan is the one they execute.
+    spark = get_spark("dump-plans", args.cpus)
     m = load_model(spark, args.sf_dir)
     os.makedirs(args.out_dir, exist_ok=True)
 

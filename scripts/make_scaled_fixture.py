@@ -45,19 +45,13 @@ def main() -> None:
     ap.add_argument("--events-factor", type=int, default=0)
     args = ap.parse_args()
 
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
-
-    spark = (
-        SparkSession.builder.master("local[*]")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
 
     from hbase_tools_spark.catalog import load_model
     from hbase_tools_spark.model import BASE_TABLES
+    from hbase_tools_spark.session import get_spark
+
+    spark = get_spark("make-scaled-fixture")
 
     # abspath BOTH ends: a relative --src would otherwise be stored
     # verbatim in the symlinks and resolve against the OUTPUT dir

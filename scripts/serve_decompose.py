@@ -82,7 +82,7 @@ def main() -> None:
     import hbase_tools_spark.operators  # noqa: F401
     import hbase_tools_spark.llm  # noqa: F401
     import hbase_tools_spark.streaming  # noqa: F401
-    from hbase_tools_spark.catalog import load_model
+    from hbase_tools_spark.catalog import load_model, warm
     from hbase_tools_spark.registry import QUERIES
     from hbase_tools_spark.functions.cache import release_stage_caches
 
@@ -93,19 +93,14 @@ def main() -> None:
 
     evdir = tempfile.mkdtemp(prefix="serve_evlog_")
 
-    # The BENCH session posture (bench.py) + event logging, so the
-    # phase table explains the bench artifact's numbers.
+    # The one builder outside session.get_spark: the event log is a
+    # static conf.  load_model sets the SQL posture and warm holds the
+    # model as bench.py does, so the phase table explains its numbers.
     spark = (
         SparkSession.builder.master(f"local[{args.cpus}]")
         .appName("serve-decompose")
-        .config("spark.sql.shuffle.partitions", "4")
-        .config("spark.sql.adaptive.enabled", "false")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "false")
-        .config("spark.sql.adaptive.skewJoin.enabled", "false")
-        .config("spark.sql.constraintPropagation.enabled", "false")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.cleaner.periodicGC.interval", "20s")
-        .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
         .config("spark.eventLog.enabled", "true")
         .config("spark.eventLog.dir", evdir)
@@ -115,18 +110,7 @@ def main() -> None:
     )
     spark.sparkContext.setLogLevel("ERROR")
     m = load_model(spark, args.sf_dir)
-
-    # Mirror the bench's warm-table posture: cached base tables +
-    # checkpoint-truncated derived views (bench.py lines 193-200).
-    from hbase_tools_spark.model import DERIVED_VIEWS
-
-    for t in ["region", "nation", "customer", "supplier", "part",
-              "orders", "lineitem", "events", "documents", "embeddings"]:
-        spark.catalog.cacheTable(t)
-        spark.table(t).count()
-    for t in DERIVED_VIEWS:
-        spark.table(t).localCheckpoint(eager=True).createOrReplaceTempView(t)
-    m = load_model(spark, args.sf_dir)
+    warm(m)
 
     # (query, run) -> [wall_t0_ms, wall_t1_ms, wall_sec]
     windows: dict[tuple[str, int], tuple[float, float, float]] = {}

@@ -60,7 +60,8 @@ def test_autosize_shuffle_partitions_scales_with_bytes(spark, tmp_path, monkeypa
     session's value, a big one raises it.  The
     same bytes pick the codegen posture: interpreted up to the measured
     break-even, compiled past it or when the size is unknown, set in
-    both directions on every registration."""
+    both directions on every registration.  AQE and constraint
+    propagation are turned off on every registration at any size."""
     import os
 
     from hbase_tools_spark import catalog as C
@@ -107,14 +108,6 @@ def test_autosize_shuffle_partitions_scales_with_bytes(spark, tmp_path, monkeypa
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
 
-    # kill switch restores the pinned-knob behavior
-    os.environ["SPARK_GRAFT_AUTOSHUFFLE"] = "off"
-    try:
-        C._autosize_shuffle_partitions(spark, big_bytes)
-        assert spark.conf.get("spark.sql.shuffle.partitions") == prev
-    finally:
-        del os.environ["SPARK_GRAFT_AUTOSHUFFLE"]
-
     # unknown size (a URI, or a walk that fails): the session's
     # partitions stand, the posture is compiled, registration goes on
     assert C._model_bytes("hdfs://namenode/warehouse/sf1") is None
@@ -152,15 +145,26 @@ def test_autosize_shuffle_partitions_scales_with_bytes(spark, tmp_path, monkeypa
             (d / f"{t}.parquet").symlink_to(os.path.join(SF_DIR, f"{t}.parquet"))
         return str(d)
 
+    # AQE and constraint propagation are off after every registration,
+    # whatever the session asked for; both keys are runtime confs
+    fixed = ("spark.sql.adaptive.enabled", "spark.sql.constraintPropagation.enabled")
+    for key in fixed:
+        assert spark.conf.isModifiable(key), key
+        spark.conf.set(key, "true")
+
     # a small model then a large one in the same session: compiled again
     small, large = alias("small"), alias("large")
     try:
         monkeypatch.setattr(C, "_model_bytes", lambda d: 1 << 20)
         C.load_model(spark, small)
+        assert {k: spark.conf.get(k) for k in fixed} == dict.fromkeys(fixed, "false")
         assert posture_now() == C._CODEGEN_POSTURES["interpreted"]
         assert plan_root() == "ProjectExec"
         monkeypatch.setattr(C, "_model_bytes", lambda d: big_bytes)
+        for key in fixed:
+            spark.conf.set(key, "true")
         C.load_model(spark, large)
+        assert {k: spark.conf.get(k) for k in fixed} == dict.fromkeys(fixed, "false")
         assert posture_now() == C._CODEGEN_POSTURES["compiled"]
         assert plan_root() == "WholeStageCodegenExec"
     finally:

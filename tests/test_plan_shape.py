@@ -268,6 +268,49 @@ def test_codegen_confs_set_only_in_catalog():
     assert files == ["catalog.py"], f"codegen confs set outside catalog.py: {files}"
 
 
+def test_one_session_recipe():
+    """Sessions are built in one place and the SQL posture is set in
+    one place.  Across the package, ``bench.py`` and ``scripts/``,
+    ``SparkSession.builder`` appears only in ``session.py`` and in
+    ``scripts/serve_decompose.py`` (its event log is a static conf);
+    within the package, the AQE, constraint-propagation and
+    shuffle-partition keys appear only in ``catalog.py``.  One exception
+    is pinned by name: ``streaming/jobs.run_to_table`` sets the shuffle
+    partitions for the length of one drain and restores them, because
+    Spark fixes a stream's state-store partition count from that key at
+    its first start."""
+    import os
+    import subprocess
+
+    import hbase_tools_spark as pkg
+
+    pkg_dir = os.path.dirname(os.path.abspath(pkg.__file__))
+    repo = os.path.dirname(pkg_dir)
+
+    def grep(pattern, *paths):
+        out = subprocess.run(
+            ["grep", "-rlF", "--include=*.py", pattern, *paths],
+            capture_output=True, text=True,
+        ).stdout
+        return sorted(os.path.relpath(p, repo) for p in out.split())
+
+    builders = grep(
+        "SparkSession.builder",
+        pkg_dir, os.path.join(repo, "bench.py"), os.path.join(repo, "scripts"),
+    )
+    assert builders == [
+        "hbase_tools_spark/session.py", "scripts/serve_decompose.py"
+    ], f"SparkSession built outside session.get_spark: {builders}"
+    catalog = ["hbase_tools_spark/catalog.py"]
+    for key, allowed in (
+        ("spark.sql.adaptive.", catalog),
+        ("spark.sql.constraintPropagation.", catalog),
+        ("spark.sql.shuffle.partitions", catalog + ["hbase_tools_spark/streaming/jobs.py"]),
+    ):
+        files = grep(key, pkg_dir)
+        assert files == allowed, f"{key} set in {files}"
+
+
 @pytest.mark.parametrize(
     "name", ["table_lifecycle_roundtrip", "server_prefix_resolve", "salted_keys"]
 )
