@@ -22,7 +22,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .functions.partitioning import cores, partitions_for
+from .functions.partitioning import cores, partitions_for, relation_bytes
 from .model import BASE_TABLES, DERIVED_VIEWS, view_sql
 
 # Fixture parquet stores timestamps as INT64 TIMESTAMP(NANOS), which the
@@ -63,29 +63,6 @@ _SHUFFLE_TARGET_BYTES = 64 << 20  # ~64 MB per post-shuffle partition
 #: bound: sf0.01 (1.9 MB) runs one task per shuffle, sf0.1 (17.5 MB)
 #: every core of a 4-core session (README, "Partition sizing").
 _SHUFFLE_CORE_BYTES = 4 << 20
-
-
-def _model_bytes(sf_dir: str) -> int | None:
-    """On-disk bytes of the model's base tables (files or parquet
-    directories), or ``None`` when unknown: ``sf_dir`` is not a local
-    directory (an HDFS/S3/ABFS URI) or the walk failed.  Sizing is
-    best-effort and never fails registration."""
-    if not os.path.isdir(sf_dir):
-        return None
-    total = 0
-    try:
-        for name in BASE_TABLES:
-            path = os.path.join(sf_dir, f"{name}.parquet")
-            if os.path.isfile(path):
-                total += os.path.getsize(path)
-            elif os.path.isdir(path):
-                for root, _, files in os.walk(path):
-                    total += sum(
-                        os.path.getsize(os.path.join(root, f)) for f in files
-                    )
-    except OSError:
-        return None
-    return total
 
 
 def _shuffle_partitions(spark: SparkSession, model_bytes: int) -> int:
@@ -187,19 +164,19 @@ def load_model(spark: SparkSession, sf_dir: str) -> Model:
     Idempotent (CREATE OR REPLACE); cheap -- registration is metadata
     only, nothing is scanned until an action runs.  Sets every SQL conf
     of the execution posture: ``_SQL_POSTURE``, and the shuffle
-    partitions and codegen posture from the model's on-disk bytes
-    (``_autosize_shuffle_partitions``, ``_codegen_posture``).
+    partitions and codegen posture from the model's bytes, the sum of
+    ``relation_bytes`` over the base views just registered (their bytes
+    on disk; ``None`` if any is unknown), via
+    ``_autosize_shuffle_partitions`` and ``_codegen_posture``.
     """
     # Registration is idempotent but not free (schema reads + one
     # catalog round-trip per view); skip it when this session already
     # has this sf_dir registered — also keeps any cached tables warm.
     if spark.conf.get("spark.hbase_tools.model_dir", "") == sf_dir:
         return Model(spark, sf_dir)
-    model_bytes = _model_bytes(sf_dir)
-    _autosize_shuffle_partitions(spark, model_bytes)
-    confs = {**_SQL_POSTURE, **_CODEGEN_POSTURES[_codegen_posture(model_bytes)]}
-    for key, value in confs.items():
+    for key, value in _SQL_POSTURE.items():
         spark.conf.set(key, value)
+    sizes = []
     for name in BASE_TABLES:
         path = os.path.join(sf_dir, f"{name}.parquet")
         df = spark.read.parquet(path)
@@ -213,6 +190,11 @@ def load_model(spark: SparkSession, sf_dir: str) -> Model:
             elif dtype == "timestamp_ntz":  # µs NTZ (sf0.1 fixtures)
                 df = df.withColumn(ts_col, F.col(ts_col).cast("timestamp"))
         df.createOrReplaceTempView(name)
+        sizes.append(relation_bytes(df))
+    model_bytes = None if None in sizes else sum(sizes)
+    _autosize_shuffle_partitions(spark, model_bytes)
+    for key, value in _CODEGEN_POSTURES[_codegen_posture(model_bytes)].items():
+        spark.conf.set(key, value)
     for name in DERIVED_VIEWS:
         spark.sql(
             f"CREATE OR REPLACE TEMPORARY VIEW {name} AS\n{view_sql(name, 'spark')}"

@@ -36,22 +36,32 @@ def cores(spark) -> int:
 
 
 def relation_bytes(df: DataFrame) -> int | None:
-    """The optimizer's ``sizeInBytes`` of ``df``, or ``None`` when its
-    statistics are unavailable (e.g. RDD-backed).  Pure metadata: the
-    estimate comes from parquet footers, no job runs."""
+    """The one input-size probe of the package: ``sizeInBytes`` of
+    ``df``'s analyzed plan, optimized without the cache substitution
+    (``None`` when its statistics are unavailable).  For a scan that is
+    the bytes on disk scaled by the projection's width, and caching
+    does not change it: ``queryExecution().optimizedPlan()`` would read
+    a cached table's in-memory size instead (2.6x the scan's for
+    ``documents`` at sf0.01), and the analyzed plan's own statistics
+    skip column pruning, so a join reads as the product of its
+    children's full widths (18.8 GB for ``docs_span_removed``'s left
+    join at sf0.1, 318 517 B once optimized).  Pure metadata: the
+    estimate comes from the file listing, no job runs."""
     try:
-        return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+        optimizer = df.sparkSession._jsparkSession.sessionState().optimizer()
+        plan = optimizer.execute(df._jdf.queryExecution().analyzed().clone())
+        return int(plan.stats().sizeInBytes())
     except Exception:
         return None
 
 
-#: Input bytes (optimizer estimate) per partition of a batch Python
+#: Input bytes (``relation_bytes``) per partition of a batch Python
 #: stage (``mapInPandas``).  Each task pays a fixed Python-worker cost
 #: whatever its row count, so a small input wants one task, while a
 #: larger one still needs the cores for wall time: the documents
-#: projection the stages read is estimated at 28 KB at sf0.01 (1
-#: partition) and 255 KB at sf0.1 (4), where fewer tasks cost wall
-#: (README, "Partition sizing").
+#: projection the stages read is 28 KB at sf0.01 (1 partition) and
+#: 255 KB at sf0.1 (4), where fewer tasks cost wall (README,
+#: "Partition sizing").
 _PYTHON_STAGE_BYTES = 64 << 10
 
 
@@ -108,14 +118,16 @@ def spread_if_undersplit(df: DataFrame, key_col: str) -> DataFrame:
 
     Target partitions = max(cores, partitions_for(relation_bytes,
     spark.sql.files.maxPartitionBytes, 4096)) — the same per-split byte
-    budget the scan planner itself uses.  The probe is pure metadata
-    (``inputFiles()`` + optimizer stats from parquet footers; no RDD
-    materialization).  At real scale a table's split
-    count dwarfs the target and this is a no-op; on single-file local
-    fixtures it spreads the map-side work (Arrow passes, collect_list
-    partials, explodes) across cores instead of one task.  Only
-    meaningful directly above a scan — downstream relations inherit
-    shuffle partitioning anyway.
+    budget the scan planner itself uses.  The split count is the
+    relation's partition count (``rdd().getNumPartitions()``: planning
+    only, no job), which for a scan is its input splits whether or not
+    the table is cached; ``inputFiles()`` lists no file for a cached
+    one, which would spread it at any scale.  At real scale a table's
+    split count dwarfs the target and this is a no-op; on single-file
+    local fixtures it spreads the map-side work (Arrow passes,
+    collect_list partials, explodes) across cores instead of one task.
+    Only meaningful directly above a scan — downstream relations
+    inherit shuffle partitioning anyway.
     """
     spark = df.sparkSession
     size = relation_bytes(df)
@@ -123,6 +135,6 @@ def spread_if_undersplit(df: DataFrame, key_col: str) -> DataFrame:
     max_pb = int(spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes())
     by_bytes = 1 if size is None else partitions_for(size, max_pb, 4096)
     n_target = max(cores(spark), by_bytes)
-    if len(df.inputFiles()) < n_target:
+    if df._jdf.rdd().getNumPartitions() < n_target:
         return df.repartition(n_target, key_col)
     return df

@@ -21,7 +21,7 @@ from pyspark.sql.window import Window
 from ..catalog import Model
 from ..functions.cache import stage_persist
 from ..functions.exprs import fround, fround_sql
-from ..functions.partitioning import python_stage_input
+from ..functions.partitioning import python_stage_input, relation_bytes
 from ..registry import query
 
 _SHINGLE = 5          # words per shingle
@@ -29,39 +29,29 @@ _MINHASHES = 16       # minhash functions
 _BANDS = 4            # LSH bands (4 rows each)
 _JACCARD_T = 0.5      # similarity threshold
 
-#: on-disk documents.parquet bytes above which a shingle-scale
-#: shuffle_hash hint is dropped (round 11 / r10 verdict task 4): the
-#: 100x fixture (58 MB docs parquet, ~100x uncompressed expansion into
-#: the exploded shingle relation) made the hinted jaccard self-join's
-#: per-task build map exceed the 8 g default heap's task share; at or
-#: below this threshold the hinted plan is measured faster and safe.
+#: documents bytes (``relation_bytes``: the bytes on disk) above which
+#: a shingle-scale shuffle_hash hint is dropped (round 11 / r10 verdict
+#: task 4): the 100x fixture (58 MB docs parquet, ~100x uncompressed
+#: expansion into the exploded shingle relation) made the hinted
+#: jaccard self-join's per-task build map exceed the 8 g default heap's
+#: task share; at or below this threshold the hinted plan is measured
+#: faster and safe.
 _SHJ_DOCS_BYTES = 16 << 20
 
 
 def _corpus_shj(df: DataFrame, m: Model) -> DataFrame:
-    """Apply the ``shuffle_hash`` hint only while the fixture's
-    documents relation is small enough that a SHINGLE-SCALE build
-    side's per-task hash map stays within executor task memory;
-    beyond the threshold return the relation unhinted — the planner's
-    sort-merge join SPILLS where the forced SHJ build OOMs ("not
-    enough memory to build hash map" at the 100x fixture, 8 g default
-    heap; guide §3: hash-join only a side that fits).  The guard
-    reads only fixture file sizes (no Spark action)."""
-    import os
-
-    try:
-        path = os.path.join(m.sf_dir, "documents.parquet")
-        if os.path.isfile(path):
-            size = os.path.getsize(path)
-        else:
-            size = sum(
-                os.path.getsize(os.path.join(r, f))
-                for r, _, fs in os.walk(path)
-                for f in fs
-            )
-    except OSError:
-        return df  # unknown size: take the spill-safe plan
-    return df.hint("shuffle_hash") if size <= _SHJ_DOCS_BYTES else df
+    """Apply the ``shuffle_hash`` hint only while the model's documents
+    relation is small enough that a SHINGLE-SCALE build side's per-task
+    hash map stays within executor task memory; beyond the threshold,
+    or when the size is unknown, return the relation unhinted — the
+    planner's sort-merge join SPILLS where the forced SHJ build OOMs
+    ("not enough memory to build hash map" at the 100x fixture, 8 g
+    default heap; guide §3: hash-join only a side that fits).  The
+    guard reads ``relation_bytes(m.documents)`` (no Spark action)."""
+    size = relation_bytes(m.documents)
+    if size is None or size > _SHJ_DOCS_BYTES:
+        return df
+    return df.hint("shuffle_hash")
 
 
 # Shared shingle CTE (DuckDB dialect); Spark side built with

@@ -37,7 +37,7 @@ from pyspark.sql import functions as F
 from ..catalog import Model
 from ..functions import workdir
 from ..functions.exprs import dsum, epoch_bigint
-from ..functions.partitioning import cores, partitions_for
+from ..functions.partitioning import cores, partitions_for, relation_bytes
 from ..registry import query
 
 _GAP_MIN = 10  # session-window gap (minutes)
@@ -132,11 +132,12 @@ def embeddings_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 _STATE_PART_BYTES = 512 << 10  # 512 KiB of source per state partition
 
 
-def auto_state_partitions(spark: SparkSession, source_path: str) -> int:
+def auto_state_partitions(spark: SparkSession, feed_bytes: int | None) -> int:
     """State-partition count of a user-keyed stateful drain (funnel,
     attribution, session): ``partitions_for(feed_bytes, 512 KiB,
-    cores)``; a feed of unknown size (``source_size`` 0) gets every
-    core.  Callers pass it to ``run_to_table`` unchanged.
+    cores)``, where the drains pass ``relation_bytes(m.events)``; a
+    feed of unknown size (``None``) gets every core.  Callers pass it
+    to ``run_to_table`` unchanged.
 
     Each state partition is one ``applyInPandasWithState`` task with
     about 0.25 CPU-s of Python framework cost whatever its row count,
@@ -155,23 +156,9 @@ def auto_state_partitions(spark: SparkSession, source_path: str) -> int:
     Past that the count stays capped at the core count (on 10x events,
     19 MiB, the funnel drain fell 30.8 -> 13.2 -> 8.1 -> 5.2 s at
     2/4/8/16 partitions on local[16])."""
-    size = source_size(spark, source_path)
-    if size == 0:
+    if feed_bytes is None:
         return cores(spark)
-    return partitions_for(size, _STATE_PART_BYTES, cores(spark))
-
-
-def events_state_partitions(m) -> int:
-    """``auto_state_partitions`` over the model's events feed."""
-    return auto_state_partitions(
-        m.spark, os.path.join(m.sf_dir, "events.parquet")
-    )
-
-
-def events_source_bytes(m) -> int:
-    """``source_size`` of the model's events feed — the result-scale
-    hint the user-cardinality drains pass to ``run_to_table``."""
-    return source_size(m.spark, os.path.join(m.sf_dir, "events.parquet"))
+    return partitions_for(feed_bytes, _STATE_PART_BYTES, cores(spark))
 
 
 # Progress trail of the most recent drain (instrumentation only):
@@ -238,13 +225,13 @@ def run_to_table(
     output_mode: str,
     state_partitions: int = 2,
     extra_confs: dict[str, str] | None = None,
-    source_bytes: int = 0,
+    source_bytes: int | None = None,
 ) -> DataFrame:
     """Drain a streaming DataFrame with AvailableNow into a memory sink
     and return the materialized result as a batch DataFrame.
 
     ``source_bytes`` (callers with corpus-proportional RESULTS pass
-    their feed's size, see ``source_size``): past
+    their feed's ``relation_bytes``; unknown is ``None``): past
     ``_MEM_SINK_MAX_SOURCE_BYTES`` the drain sinks to parquet via
     ``foreachBatch`` — identical rows (complete mode overwrites with
     the batch's full result, append/update append exactly the rows the
@@ -262,7 +249,7 @@ def run_to_table(
     drain and restored after — the state-store provider is per-query,
     chosen at first start."""
     spark = stream_df.sparkSession
-    spill = source_bytes > _MEM_SINK_MAX_SOURCE_BYTES
+    spill = source_bytes is not None and source_bytes > _MEM_SINK_MAX_SOURCE_BYTES
     out_dir = workdir.scratch(spark, f"sink_{name}_") if spill else None
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     prev_nodata = spark.conf.get(
@@ -315,32 +302,6 @@ def run_to_table(
         # reads back empty instead of failing schema inference.
         return spark.read.schema(stream_df.schema).parquet(out_dir)
     return spark.table(name)
-
-
-_SOURCE_SIZE_CACHE: dict[str, int] = {}  # path -> bytes; fixtures are
-# immutable for the life of the process (the _STAGED /
-# functions.memo.sf_cached assumption) — the Hadoop-FS content-summary
-# probe costs several py4j round trips and every user-keyed drain made
-# two of them per build, five builds per bench query.  Only successful
-# probes are kept, so a failed one is retried on the next call.
-
-
-def source_size(spark: SparkSession, source_path: str) -> int:
-    """Bytes of a drain's source feed (Hadoop-FS content summary — the
-    same probe ``auto_state_partitions`` uses); 0 when unknowable.
-    Memoized per path (see _SOURCE_SIZE_CACHE)."""
-    cached = _SOURCE_SIZE_CACHE.get(source_path)
-    if cached is not None:
-        return cached
-    jvm = spark.sparkContext._jvm
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    p = jvm.org.apache.hadoop.fs.Path(source_path)
-    try:
-        size = int(p.getFileSystem(conf).getContentSummary(p).getLength())
-    except Exception:
-        return 0
-    _SOURCE_SIZE_CACHE[source_path] = size
-    return size
 
 
 # ---------------------------------------------------------------------------
@@ -465,12 +426,13 @@ def stream_session_stats(m: Model) -> DataFrame:
             "total_value",
         )
     )
+    size = relation_bytes(m.events)
     return run_to_table(
         agg, "stream_session_stats", "complete",
-        state_partitions=events_state_partitions(m),
+        state_partitions=auto_state_partitions(m.spark, size),
         # session output is corpus-scale (one row per session): past
         # fixture scale the result must not live on the driver heap
-        source_bytes=events_source_bytes(m),
+        source_bytes=size,
     )
 
 

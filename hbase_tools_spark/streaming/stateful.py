@@ -52,6 +52,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ..catalog import Model
+from ..functions.partitioning import relation_bytes
 from ..registry import query
 
 OUTPUT_SCHEMA = "server string, first_ts bigint, event string"
@@ -366,12 +367,7 @@ def stream_funnel_stage(m: Model) -> DataFrame:
     drain equals the batch funnel semantics, so the result is
     oracle-checkable.  Multi-batch/late-arrival behavior is pinned in
     tests/test_streaming.py."""
-    from .jobs import (
-        events_source_bytes,
-        events_state_partitions,
-        events_stream,
-        run_to_table,
-    )
+    from .jobs import auto_state_partitions, events_stream, run_to_table
 
     ev = (
         events_stream(m.spark, m.sf_dir)
@@ -380,14 +376,15 @@ def stream_funnel_stage(m: Model) -> DataFrame:
     )
     # bucket count scales with the state partitions so per-bucket
     # state stays bounded as the feed grows
-    parts = events_state_partitions(m)
+    size = relation_bytes(m.events)
+    parts = auto_state_partitions(m.spark, size)
     return run_to_table(
         funnel_stages(ev, buckets=_BUCKETS_PER_PARTITION * parts),
         "stream_funnel_stage", "append",
         state_partitions=parts,
         # per-user snapshots: corpus-scale result, keep it off-driver
         # past fixture scale (see run_to_table)
-        source_bytes=events_source_bytes(m),
+        source_bytes=size,
     )
 
 
@@ -574,12 +571,7 @@ def stream_attribution(m: Model) -> DataFrame:
     multi-batch behavior is pinned in tests/test_streaming.py.  State
     is O(1) per user by construction — the design target the funnel
     state needed pruning to reach."""
-    from .jobs import (
-        events_source_bytes,
-        events_state_partitions,
-        events_stream,
-        run_to_table,
-    )
+    from .jobs import auto_state_partitions, events_stream, run_to_table
 
     ev = (
         events_stream(m.spark, m.sf_dir)
@@ -591,12 +583,13 @@ def stream_attribution(m: Model) -> DataFrame:
             F.unix_micros("ts").alias("tus"),
         )
     )
-    parts = events_state_partitions(m)
+    size = relation_bytes(m.events)
+    parts = auto_state_partitions(m.spark, size)
     drained = run_to_table(
         attribution_stream(ev, buckets=_BUCKETS_PER_PARTITION * parts),
         "stream_attribution", "append",
         state_partitions=parts,
-        source_bytes=events_source_bytes(m),
+        source_bytes=size,
     )
     return drained.groupBy("attributed_to").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_purchases")

@@ -33,6 +33,7 @@ import argparse
 import glob
 import json
 import os
+import shutil
 import statistics
 import sys
 import tempfile
@@ -91,75 +92,45 @@ def main() -> None:
     if unknown:
         raise SystemExit(f"not in the registry: {', '.join(unknown)}")
 
+    # The event-log dir must exist before the session starts, so it
+    # cannot be a workdir scratch dir; it is removed once parsed.
     evdir = tempfile.mkdtemp(prefix="serve_evlog_")
+    try:
+        # The one builder outside session.get_spark: the event log is a
+        # static conf.  load_model sets the SQL posture and warm holds the
+        # model as bench.py does, so the phase table explains its numbers.
+        spark = (
+            SparkSession.builder.master(f"local[{args.cpus}]")
+            .appName("serve-decompose")
+            .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+            .config("spark.cleaner.periodicGC.interval", "20s")
+            .config("spark.ui.enabled", "false")
+            .config("spark.eventLog.enabled", "true")
+            .config("spark.eventLog.dir", evdir)
+            .config("spark.eventLog.compress", "false")  # parse as plain JSON lines
+            .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
+            .getOrCreate()
+        )
+        spark.sparkContext.setLogLevel("ERROR")
+        m = load_model(spark, args.sf_dir)
+        warm(m)
 
-    # The one builder outside session.get_spark: the event log is a
-    # static conf.  load_model sets the SQL posture and warm holds the
-    # model as bench.py does, so the phase table explains its numbers.
-    spark = (
-        SparkSession.builder.master(f"local[{args.cpus}]")
-        .appName("serve-decompose")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.cleaner.periodicGC.interval", "20s")
-        .config("spark.ui.enabled", "false")
-        .config("spark.eventLog.enabled", "true")
-        .config("spark.eventLog.dir", evdir)
-        .config("spark.eventLog.compress", "false")  # parse as plain JSON lines
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-    m = load_model(spark, args.sf_dir)
-    warm(m)
+        # (query, run) -> [wall_t0_ms, wall_t1_ms, wall_sec]
+        windows: dict[tuple[str, int], tuple[float, float, float]] = {}
+        for name in names:
+            for r in range(args.runs):
+                t0 = time.time()
+                p0 = time.perf_counter()
+                QUERIES[name].fn(m).toPandas()
+                wall = time.perf_counter() - p0
+                windows[(name, r)] = (t0 * 1000, (t0 + wall) * 1000, wall)
+            release_stage_caches()
 
-    # (query, run) -> [wall_t0_ms, wall_t1_ms, wall_sec]
-    windows: dict[tuple[str, int], tuple[float, float, float]] = {}
-    for name in names:
-        for r in range(args.runs):
-            t0 = time.time()
-            p0 = time.perf_counter()
-            QUERIES[name].fn(m).toPandas()
-            wall = time.perf_counter() - p0
-            windows[(name, r)] = (t0 * 1000, (t0 + wall) * 1000, wall)
-        release_stage_caches()
-
-    app_id = spark.sparkContext.applicationId
-    spark.stop()  # closes/flushes the event log
-
-    # Parse the event log: jobs with submission/completion + callsite.
-    jobs: list[dict] = []
-    pending: dict[int, dict] = {}
-    # Spark 4 writes a rolling event-log DIRECTORY
-    # (eventlog_v2_<appId>/events_N_<appId>); accept both layouts.
-    paths = [
-        p
-        for p in glob.glob(f"{evdir}/*{app_id}*")
-        + glob.glob(f"{evdir}/*{app_id}*/*")
-        if os.path.isfile(p) and "appstatus" not in os.path.basename(p)
-    ]
-    for path in paths:
-        with open(path) as f:
-            for line in f:
-                try:
-                    ev = json.loads(line)
-                except json.JSONDecodeError:
-                    continue
-                et = ev.get("Event")
-                if et == "SparkListenerJobStart":
-                    pending[ev["Job ID"]] = {
-                        "sub": ev["Submission Time"],
-                        "site": (ev.get("Properties") or {}).get(
-                            "callSite.short", ""
-                        ),
-                        "desc": (ev.get("Properties") or {}).get(
-                            "spark.job.description", ""
-                        ),
-                    }
-                elif et == "SparkListenerJobEnd":
-                    j = pending.pop(ev["Job ID"], None)
-                    if j is not None:
-                        j["end"] = ev["Completion Time"]
-                        jobs.append(j)
+        app_id = spark.sparkContext.applicationId
+        spark.stop()  # closes/flushes the event log
+        jobs = _read_jobs(evdir, app_id)
+    finally:
+        shutil.rmtree(evdir, ignore_errors=True)
 
     results: dict[str, dict] = {}
     for name in names:
@@ -203,6 +174,44 @@ def main() -> None:
             json.dump(out, f, indent=1)
     print(json.dumps({k: v["wall_sec"] for k, v in results.items()}))
 
+
+def _read_jobs(evdir: str, app_id: str) -> list[dict]:
+    """Jobs of the event log under ``evdir``, with submission and
+    completion time and callsite."""
+    jobs: list[dict] = []
+    pending: dict[int, dict] = {}
+    # Spark 4 writes a rolling event-log DIRECTORY
+    # (eventlog_v2_<appId>/events_N_<appId>); accept both layouts.
+    paths = [
+        p
+        for p in glob.glob(f"{evdir}/*{app_id}*")
+        + glob.glob(f"{evdir}/*{app_id}*/*")
+        if os.path.isfile(p) and "appstatus" not in os.path.basename(p)
+    ]
+    for path in paths:
+        with open(path) as f:
+            for line in f:
+                try:
+                    ev = json.loads(line)
+                except json.JSONDecodeError:
+                    continue
+                et = ev.get("Event")
+                if et == "SparkListenerJobStart":
+                    pending[ev["Job ID"]] = {
+                        "sub": ev["Submission Time"],
+                        "site": (ev.get("Properties") or {}).get(
+                            "callSite.short", ""
+                        ),
+                        "desc": (ev.get("Properties") or {}).get(
+                            "spark.job.description", ""
+                        ),
+                    }
+                elif et == "SparkListenerJobEnd":
+                    j = pending.pop(ev["Job ID"], None)
+                    if j is not None:
+                        j["end"] = ev["Completion Time"]
+                        jobs.append(j)
+    return jobs
 
 if __name__ == "__main__":
     main()

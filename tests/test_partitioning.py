@@ -3,12 +3,28 @@ unsalted equivalents, and the partition-sizing contracts must hold."""
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import functions as F
 
 import hbase_tools_spark.operators  # noqa: F401
 from hbase_tools_spark.catalog import load_model
 from hbase_tools_spark.functions.partitioning import two_phase_agg
 from tests.conftest import SF_DIR
+
+
+def _disk_bytes(sf_dir: str) -> int:
+    """On-disk bytes of a model's base tables (files or parquet dirs)."""
+    from hbase_tools_spark.model import BASE_TABLES
+
+    total = 0
+    for t in BASE_TABLES:
+        path = os.path.join(sf_dir, f"{t}.parquet")
+        if os.path.isfile(path):
+            total += os.path.getsize(path)
+        for root, _, files in os.walk(path):
+            total += sum(os.path.getsize(os.path.join(root, f)) for f in files)
+    return total
 
 
 def test_two_phase_agg_equals_direct(spark):
@@ -62,8 +78,6 @@ def test_autosize_shuffle_partitions_scales_with_bytes(spark, tmp_path, monkeypa
     break-even, compiled past it or when the size is unknown, set in
     both directions on every registration.  AQE and constraint
     propagation are turned off on every registration at any size."""
-    import os
-
     from hbase_tools_spark import catalog as C
     from hbase_tools_spark.model import BASE_TABLES
 
@@ -74,8 +88,8 @@ def test_autosize_shuffle_partitions_scales_with_bytes(spark, tmp_path, monkeypa
         for n in ("sf0.001", "sf0.01", "sf0.1")
         if os.path.isdir(os.path.join(fixtures, n))
     }
-    sizes = {n: C._model_bytes(d) for n, d in sf.items()}
-    sizes[SF_DIR] = C._model_bytes(SF_DIR)
+    sizes = {n: _disk_bytes(d) for n, d in sf.items()}
+    sizes[SF_DIR] = _disk_bytes(SF_DIR)
     assert all(b > 0 for b in sizes.values()), sizes
 
     # fixture-scale: the session's value is LOWERED to the rule's; the
@@ -94,24 +108,16 @@ def test_autosize_shuffle_partitions_scales_with_bytes(spark, tmp_path, monkeypa
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
 
-    # large fixture (sparse files so the test costs no real disk):
-    # 10 GB * 6 / 64 MB = 960 partitions
-    big = tmp_path / "sfbig"
-    big.mkdir()
-    f = big / "lineitem.parquet"
-    with open(f, "wb") as fh:
-        fh.truncate(10 * 1024**3)
-    big_bytes = C._model_bytes(str(big))
+    # a 10 GB model: 10 GB * 6 / 64 MB = 960 partitions
+    big_bytes = 10 * 1024**3
     try:
         C._autosize_shuffle_partitions(spark, big_bytes)
         assert int(spark.conf.get("spark.sql.shuffle.partitions")) == 960
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
 
-    # unknown size (a URI, or a walk that fails): the session's
-    # partitions stand, the posture is compiled, registration goes on
-    assert C._model_bytes("hdfs://namenode/warehouse/sf1") is None
-    assert C._model_bytes(str(tmp_path / "missing")) is None
+    # unknown size: the session's partitions stand, the posture is
+    # compiled, registration goes on
     C._autosize_shuffle_partitions(spark, None)
     assert spark.conf.get("spark.sql.shuffle.partitions") == prev
     assert C._codegen_posture(None) == "compiled"
@@ -152,23 +158,66 @@ def test_autosize_shuffle_partitions_scales_with_bytes(spark, tmp_path, monkeypa
         assert spark.conf.isModifiable(key), key
         spark.conf.set(key, "true")
 
-    # a small model then a large one in the same session: compiled again
-    small, large = alias("small"), alias("large")
+    # a small model then a large one in the same session: compiled
+    # again; then one whose size is unknown: compiled, partitions kept
+    # (load_model sums relation_bytes over the ten base views)
+    small, large, unknown = alias("small"), alias("large"), alias("unknown")
     try:
-        monkeypatch.setattr(C, "_model_bytes", lambda d: 1 << 20)
+        monkeypatch.setattr(C, "relation_bytes", lambda df: 100 << 10)
         C.load_model(spark, small)
         assert {k: spark.conf.get(k) for k in fixed} == dict.fromkeys(fixed, "false")
         assert posture_now() == C._CODEGEN_POSTURES["interpreted"]
         assert plan_root() == "ProjectExec"
-        monkeypatch.setattr(C, "_model_bytes", lambda d: big_bytes)
+        monkeypatch.setattr(C, "relation_bytes", lambda df: big_bytes)
         for key in fixed:
             spark.conf.set(key, "true")
         C.load_model(spark, large)
         assert {k: spark.conf.get(k) for k in fixed} == dict.fromkeys(fixed, "false")
         assert posture_now() == C._CODEGEN_POSTURES["compiled"]
         assert plan_root() == "WholeStageCodegenExec"
+        monkeypatch.setattr(C, "relation_bytes", lambda df: 100 << 10)
+        C.load_model(spark, small)
+        assert posture_now() == C._CODEGEN_POSTURES["interpreted"]
+        monkeypatch.setattr(C, "relation_bytes", lambda df: None)
+        spark.conf.set("spark.sql.shuffle.partitions", "7")
+        C.load_model(spark, unknown)
+        assert posture_now() == C._CODEGEN_POSTURES["compiled"]
+        assert spark.conf.get("spark.sql.shuffle.partitions") == "7"
     finally:
         monkeypatch.undo()
         spark.conf.set("spark.sql.shuffle.partitions", prev)
         C.load_model(spark, SF_DIR)
     assert posture_now() == C._CODEGEN_POSTURES[C._codegen_posture(sizes[SF_DIR])]
+
+
+def test_sizing_reads_the_scan_bytes_cached_or_not(spark):
+    """``relation_bytes`` is the analyzed plan's size: for a scan, its
+    bytes on disk, whether or not the table is cached.  The ten base
+    views sum to the model's on-disk bytes, and caching ``documents``
+    and ``events`` changes neither a Python stage's split nor the
+    drains' feed size (the optimized plan's size, read before, grew
+    to the in-memory relation's once a table was cached)."""
+    from hbase_tools_spark.functions.partitioning import (
+        python_stage_input,
+        relation_bytes,
+    )
+    from hbase_tools_spark.model import BASE_TABLES
+
+    m = load_model(spark, SF_DIR)
+    views = sum(relation_bytes(m.table(t)) for t in BASE_TABLES)
+    assert views == _disk_bytes(SF_DIR)
+
+    def sizing():
+        docs = m.documents.select("doc_id", "text")
+        split = python_stage_input(docs, "doc_id").rdd.getNumPartitions()
+        return split, relation_bytes(m.events)
+
+    uncached = sizing()
+    try:
+        for t in ("documents", "events"):
+            spark.catalog.cacheTable(t)
+            spark.table(t).count()
+        assert sizing() == uncached
+    finally:
+        for t in ("documents", "events"):
+            spark.catalog.uncacheTable(t)

@@ -207,35 +207,35 @@ def test_bm25_topk_is_take_ordered_not_global_sort(spark):
     assert "lang" not in read and "n_chars" not in read
 
 
-def test_jaccard_shj_hint_is_size_guarded(spark, tmp_path):
+def test_jaccard_shj_hint_is_size_guarded(spark, monkeypatch):
     """The jaccard self-join's shuffle_hash hint must apply at fixture
     scale (both sides hashed — the measured-faster local plan) and
     DROP above the documents-bytes threshold, where a forced SHJ
     build map OOMs and the sort-merge fallback spills (measured at
-    the 100x fixture, 8 g default heap — round 11).  No unguarded
-    ``hint("shuffle_hash")`` call may remain anywhere in the package."""
+    the 100x fixture, 8 g default heap — round 11), or when the size
+    is unknown.  No unguarded ``hint("shuffle_hash")`` call may remain
+    anywhere in the package."""
     import os
     import subprocess
 
-    from hbase_tools_spark.catalog import Model
+    from hbase_tools_spark.catalog import load_model
     from hbase_tools_spark.llm import dedup as D
 
-    sf_dir = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.01")
-    m = Model(spark, sf_dir)
+    m = load_model(spark, SF_DIR)
     df = spark.range(1)
-    hinted = D._corpus_shj(df, m)
-    assert "UnresolvedHint shuffle_hash" in (
-        hinted._jdf.queryExecution().logical().toString()
-    ), "fixture-scale corpus lost the shuffle_hash hint"
 
-    big = tmp_path / "sfbig"
-    (big / "documents.parquet").mkdir(parents=True)
-    with open(big / "documents.parquet" / "part-0.parquet", "wb") as fh:
-        fh.truncate(D._SHJ_DOCS_BYTES + 1)
-    unhinted = D._corpus_shj(df, Model(spark, str(big)))
-    assert "UnresolvedHint" not in (
-        unhinted._jdf.queryExecution().logical().toString()
-    ), "over-threshold corpus kept the forced SHJ hint"
+    def logical(guarded):
+        return guarded._jdf.queryExecution().logical().toString()
+
+    assert "UnresolvedHint shuffle_hash" in logical(D._corpus_shj(df, m)), (
+        "fixture-scale corpus lost the shuffle_hash hint"
+    )
+    for size in (D._SHJ_DOCS_BYTES + 1, None):
+        monkeypatch.setattr(D, "relation_bytes", lambda _df, n=size: n)
+        assert "UnresolvedHint" not in logical(D._corpus_shj(df, m)), (
+            f"a {size}-byte corpus kept the forced SHJ hint"
+        )
+    monkeypatch.undo()
 
     pkg = os.path.join(os.path.dirname(D.__file__), "..")
     out = subprocess.run(
@@ -378,7 +378,10 @@ def test_partition_counts_come_from_the_one_rule():
     (``defaultParallelism``) or calls ``repartition(``, so no
     ``repartition(`` in front of a ``mapInPandas`` takes a core count:
     every Python stage's input is split by a function there, and each
-    of those sizes its count with ``partitions_for``."""
+    of those sizes its count with ``partitions_for``.  The bytes it is
+    fed come from one probe there too, ``relation_bytes``: no other
+    module reads plan statistics, a Hadoop content summary or the
+    filesystem's file sizes."""
     import ast
     import os
     import subprocess
@@ -386,12 +389,18 @@ def test_partition_counts_come_from_the_one_rule():
     from hbase_tools_spark.functions import partitioning
 
     pkg = os.path.dirname(os.path.dirname(os.path.abspath(partitioning.__file__)))
-    for pattern in ("defaultParallelism", r"repartition\("):
-        out = subprocess.run(
+    here = [os.path.abspath(partitioning.__file__)]
+
+    def files_with(pattern):
+        return subprocess.run(
             ["grep", "-rlE", "--include=*.py", pattern, pkg],
             capture_output=True, text=True,
-        ).stdout
-        assert out.split() == [os.path.abspath(partitioning.__file__)], pattern
+        ).stdout.split()
+
+    for pattern in ("defaultParallelism", r"repartition\(", "sizeInBytes"):
+        assert files_with(pattern) == here, pattern
+    for pattern in ("getContentSummary", r"os\.walk", "getsize"):
+        assert files_with(pattern) in ([], here), pattern
     with open(partitioning.__file__) as f:
         tree = ast.parse(f.read())
     for node in tree.body:

@@ -831,40 +831,21 @@ def test_attribution_late_purchase_is_organic():
     assert int(out["latency_us"][0]) == 100
 
 
-def test_source_size_retries_a_failed_probe(spark, tmp_path):
-    """A failed size probe must not be memoized: the first probe of a
-    missing feed reports 0, and once the file exists the next probe
-    returns its size (a cached 0 would pin drains to the memory sink
-    and the unknown-size partition count for the life of the process)."""
-    from hbase_tools_spark.streaming import jobs as J
-
-    feed = tmp_path / "events.parquet"
-    path = str(feed)
-    try:
-        assert J.source_size(spark, path) == 0
-        assert path not in J._SOURCE_SIZE_CACHE
-        feed.write_bytes(b"x" * 4096)
-        assert J.source_size(spark, path) == 4096
-        assert J._SOURCE_SIZE_CACHE[path] == 4096
-    finally:
-        J._SOURCE_SIZE_CACHE.pop(path, None)
-
-
-def test_auto_state_partitions_sizes_to_the_feed(spark, monkeypatch):
+def test_auto_state_partitions_sizes_to_the_feed(spark):
     """One partition per started 512 KiB of feed, clamped to
-    [1, defaultParallelism]; an unknown size (0) gets every core."""
+    [1, defaultParallelism]; an unknown size (``None``) gets every
+    core."""
     from hbase_tools_spark.streaming import jobs as J
 
     cores = spark.sparkContext.defaultParallelism
     assert cores >= 4
     for size, want in [
-        (0, cores),
+        (None, cores),
         (221_075, 1),  # sf0.01 events
         (2_045_762, 4),  # sf0.1 events
         (1 << 30, cores),
     ]:
-        monkeypatch.setattr(J, "source_size", lambda _s, _p, n=size: n)
-        assert J.auto_state_partitions(spark, "events.parquet") == want, size
+        assert J.auto_state_partitions(spark, size) == want, size
 
 
 @pytest.mark.parametrize(
@@ -874,11 +855,12 @@ def test_user_keyed_drains_pass_auto_state_partitions(spark, monkeypatch, name):
     """The user-keyed drains hand ``auto_state_partitions`` to
     ``run_to_table`` unchanged: no floor on top of the sizing rule."""
     from hbase_tools_spark.catalog import load_model
+    from hbase_tools_spark.functions.partitioning import relation_bytes
     from hbase_tools_spark.registry import QUERIES
     from hbase_tools_spark.streaming import jobs as J
 
     m = load_model(spark, SF_DIR)
-    want = J.auto_state_partitions(spark, os.path.join(SF_DIR, "events.parquet"))
+    want = J.auto_state_partitions(spark, relation_bytes(m.events))
     seen = []
 
     def capture(stream_df, _name, _mode, state_partitions=2, **_kw):
@@ -987,18 +969,21 @@ def test_stream_index_build_runs_at_the_model_shuffle_width(spark, monkeypatch):
     no stage wider than the partition rule gives for the model."""
     from hbase_tools_spark import catalog as C
     from hbase_tools_spark.functions import memo
+    from hbase_tools_spark.functions.partitioning import relation_bytes
     from hbase_tools_spark.llm import search
+    from hbase_tools_spark.model import BASE_TABLES
 
     sf = os.path.join(os.path.dirname(SF_DIR), "sf0.01")
     if not os.path.isdir(sf):
         sf = SF_DIR
-    want = C._shuffle_partitions(spark, C._model_bytes(sf))
     # an empty memo, restored afterwards, so the index builds here
     monkeypatch.setattr(memo, "_CACHE", {})
     spark.conf.set("spark.sql.shuffle.partitions", "200")
     try:
         spark.conf.set("spark.hbase_tools.model_dir", "")
         m = C.load_model(spark, sf)
+        model_bytes = sum(relation_bytes(m.table(t)) for t in BASE_TABLES)
+        want = C._shuffle_partitions(spark, model_bytes)
         counts = _stage_task_counts(
             spark, lambda: search._stream_index_artifact_dir(m)
         )
