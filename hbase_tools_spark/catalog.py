@@ -17,7 +17,7 @@ one-file change here.
 from __future__ import annotations
 
 import os
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -42,7 +42,6 @@ class Model:
 
     spark: SparkSession
     sf_dir: str
-    _cache: dict[str, DataFrame] = field(default_factory=dict)
 
     def table(self, name: str) -> DataFrame:
         return self.spark.table(name)
@@ -222,9 +221,9 @@ def assert_view_matches_fixture(m: Model, view: str) -> None:
     the ON-DISK fixture (streaming ingests cannot read temp views): the
     registered view must BE that fixture, or the artifact silently
     diverges from what queries see.  Compares analyzed-plan semantic
-    hashes — analysis-only, no job — and raises on mismatch (the
-    round-6 ADVICE staleness class, generalized in round 7 for the
-    vector-side ingest).  Only valid for views load_model registers as
+    hashes and raises on mismatch; re-reading the fixture costs one
+    parquet schema-inference job, so the stream stores call it once per
+    build, not per request.  Only valid for views load_model registers as
     plain parquet reads (no timestamp normalization), e.g. documents
     and embeddings."""
     disk = m.spark.read.parquet(os.path.join(m.sf_dir, f"{view}.parquet"))

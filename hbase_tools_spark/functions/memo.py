@@ -19,15 +19,16 @@ Two classes of cached values:
   in-plan (a DataFrame build, never a driver loop) and IS measured on
   the first build.
 
-Keying: ``sf_cached`` keys on (sf_dir, key) and assumes the fixture
-files are immutable for the life of the process (true for
-/root/testdata).  ``model_cached`` additionally fingerprints the
-ANALYZED PLAN of the dependency views (semanticHash), so a test that
-re-registers ``documents`` with different content under the same
-sf_dir gets a rebuild, not a stale artifact — the staleness class the
-round-5 advice flagged for the served BM25 index.  Entries for a
-superseded fingerprint are evicted eagerly so their checkpoint blocks
-become collectable.
+Keying: ``model_cached`` is the one memo key.  It keys on (sf_dir,
+key) plus the Spark application id and the ANALYZED PLAN of the views
+the value derives from (semanticHash), so a test that re-registers
+``documents`` with different content under the same sf_dir gets a
+rebuild, not a stale artifact, and a restarted session never sees a
+dead handle.  An artifact built from the on-disk fixture (a stream
+store) checks in its build that the view is that fixture; the view's
+hash is in the key, so a swapped view is a new key whose build refuses
+it.  Once a new fingerprint's build succeeds, the superseded entries
+of its key are evicted so their checkpoint blocks become collectable.
 """
 
 from __future__ import annotations
@@ -45,16 +46,6 @@ _TOUCHES = 0
 
 def touches() -> int:
     return _TOUCHES
-
-
-def sf_cached(sf_dir: str, key: str, builder: Callable[[], Any]) -> Any:
-    """Return the memoized value for (sf_dir, key), building it once."""
-    global _TOUCHES
-    _TOUCHES += 1
-    k = (sf_dir, key)
-    if k not in _CACHE:
-        _CACHE[k] = builder()
-    return _CACHE[k]
 
 
 def _dep_fingerprint(spark, deps: tuple[str, ...]) -> str:
@@ -85,20 +76,19 @@ def model_cached(
 ) -> Any:
     """Memoize ``builder()`` per (sf_dir, key, content-of-deps).
 
-    ``m`` is a catalog.Model.  Use for anything derived from the
-    registered views (pretrained artifacts, checkpointed relations);
-    use plain ``sf_cached`` only for values derived from the immutable
-    fixture files themselves."""
+    ``m`` is a catalog.Model; ``deps`` are the views the value derives
+    from.  A build that raises leaves the memo as it was."""
     global _TOUCHES
     _TOUCHES += 1
     fp = _dep_fingerprint(m.spark, deps)
     k = (m.sf_dir, key, fp)
     if k not in _CACHE:
+        value = builder()
         # evict superseded fingerprints so localCheckpoint blocks held
         # by old entries become collectable
         for old in [c for c in _CACHE if c[:2] == (m.sf_dir, key)]:
             del _CACHE[old]
-        _CACHE[k] = builder()
+        _CACHE[k] = value
     return _CACHE[k]
 
 

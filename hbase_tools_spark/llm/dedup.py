@@ -1786,13 +1786,14 @@ def signature_ingest_batch(
     )
 
 
-def _stream_signature_store_dir(m: Model) -> str:
+def _stream_signature_store(m: Model) -> DataFrame:
     """Drain the documents fixture through the exactly-once signature
-    ingest once per fixture dir and memoize the store path (sf_dir
-    keyed because the stream reads the on-disk fixture; consumers
-    assert the registered view mirrors it)."""
+    ingest once per documents view and memoize the store's
+    (doc_id, sig) read handle.  The build first checks that the view is
+    the on-disk fixture the stream reads."""
+    from ..catalog import assert_view_matches_fixture
     from ..functions import workdir
-    from ..functions.memo import sf_cached
+    from ..functions.memo import model_cached
     from ..streaming.jobs import documents_stream, drain_batches
 
     def fill(out: str) -> None:
@@ -1801,10 +1802,12 @@ def _stream_signature_store_dir(m: Model) -> str:
             lambda df, batch_id: signature_ingest_batch(df, out, batch_id),
         )
 
-    return sf_cached(
-        m.sf_dir, "sig_stream_store_dir",
-        lambda: workdir.built(m.spark, "sig_stream_store_", fill),
-    )
+    def build() -> DataFrame:
+        assert_view_matches_fixture(m, "documents")
+        store = workdir.built(m.spark, "sig_stream_store_", fill)
+        return m.spark.read.parquet(store).select("doc_id", "sig")
+
+    return model_cached(m, "sig_stream_store", build)
 
 
 from ..registry import QUERIES as _Q  # noqa: E402 — reuse the direct oracle
@@ -1819,13 +1822,7 @@ def minhash_stream_served(m: Model) -> DataFrame:
     ``minhash_band_pairs`` (same oracle).  At 100 TB the signer never
     re-touches old documents — this query certifies that the STORE
     itself reproduces the direct pair relation."""
-    from ..catalog import assert_view_matches_fixture
-
-    assert_view_matches_fixture(m, "documents")
-    sig = m.spark.read.parquet(_stream_signature_store_dir(m)).select(
-        "doc_id", "sig"
-    )
-    return pairs_from_signatures(sig)
+    return pairs_from_signatures(_stream_signature_store(m))
 
 
 query(

@@ -1109,14 +1109,10 @@ def _term_buckets_for_ids(
 
 
 def _index_artifact_dir(m: Model) -> str:
-    """Materialize the inverted index ONCE per (process, fixture dir)
-    into a scratch location and memoize the path — in production the
-    index exists before any query runs, so the serving query's measured
-    cost is pruned reads + scoring, never the index build.  Keyed on
-    the CONTENT of the registered ``documents`` view (model_cached
-    fingerprints the analyzed plan), so a test that re-registers the
-    view under the same sf_dir rebuilds instead of serving stale
-    postings (round-5 advice)."""
+    """Materialize the inverted index ONCE per documents view into a
+    scratch location and memoize the path — in production the index
+    exists before any query runs, so the serving query's measured cost
+    is pruned reads + scoring, never the index build."""
     from ..functions import workdir
     from ..functions.memo import model_cached
 
@@ -1131,8 +1127,8 @@ def _bm25_served_from(m: Model, idx: str, cache_terms, cache_handles):
     body of ``docs_bm25_served`` and ``docs_bm25_stream_served``.  The
     probe terms re-derive from the POSTINGS relation and are memoized
     through ``cache_terms(build)``; the query-independent serving state
-    through ``cache_handles(build)`` — each caller's memo, keyed like
-    its index.  Documents are touched only to decorate the k rows."""
+    through ``cache_handles(build)`` — each caller's memo key.
+    Documents are touched only to decorate the k rows."""
 
     def _terms() -> list[str]:
         occ = (
@@ -1202,7 +1198,7 @@ def hybrid_rrf_served(m: Model) -> DataFrame:
     content (the serving-tier posture shared with ``docs_bm25_served``
     and the ANN scoreboards); the measured path is the pruned postings
     reads + BM25 scoring + fusion."""
-    from ..functions.memo import model_cached, sf_cached
+    from ..functions.memo import model_cached
 
     idx = _index_artifact_dir(m)
     fwd, buckets = model_cached(
@@ -1212,8 +1208,8 @@ def hybrid_rrf_served(m: Model) -> DataFrame:
     # once materialized (built whole, never appended), so the file
     # listing/schema snapshot cannot go stale; re-listing the three
     # parquet dirs cost ~0.3 s of every plan build.
-    reads = sf_cached(
-        idx,
+    reads = model_cached(
+        m,
         "hybrid_index_reads",
         lambda: (
             m.spark.read.parquet(f"{idx}/postings"),
@@ -1255,16 +1251,13 @@ query(
 def _stream_index_artifact_dir(m: Model) -> str:
     """Build the inverted index by draining the documents fixture
     through the EXACTLY-ONCE streaming ingest (``drain_batches`` +
-    per-batch_id dynamic partition overwrite), once per fixture dir,
+    per-batch_id dynamic partition overwrite), once per documents view,
     and memoize the path — the continuous-crawl production shape.  The
-    memo keys on sf_dir alone BECAUSE the build reads the on-disk
-    fixture (streams cannot read temp views); every consumer first
-    calls ``catalog.assert_view_matches_fixture``, so a
-    fingerprint-keyed rebuild could never legitimately see different
-    data (round-6 ADVICE: the old content-keyed memo re-built from the
-    OLD files after a view swap — now it raises instead)."""
+    stream reads the on-disk fixture (streams cannot read temp views),
+    so the build first checks that the view is that fixture."""
+    from ..catalog import assert_view_matches_fixture
     from ..functions import workdir
-    from ..functions.memo import sf_cached
+    from ..functions.memo import model_cached
     from ..streaming.jobs import documents_stream, drain_batches
 
     def fill(out: str) -> None:
@@ -1273,10 +1266,11 @@ def _stream_index_artifact_dir(m: Model) -> str:
             lambda df, batch_id: index_ingest_batch(df, out, batch_id),
         )
 
-    return sf_cached(
-        m.sf_dir, "bm25_stream_index_dir",
-        lambda: workdir.built(m.spark, "bm25_stream_index_", fill),
-    )
+    def build() -> str:
+        assert_view_matches_fixture(m, "documents")
+        return workdir.built(m.spark, "bm25_stream_index_", fill)
+
+    return model_cached(m, "bm25_stream_index_dir", build)
 
 
 def docs_bm25_stream_served(m: Model) -> DataFrame:
@@ -1289,18 +1283,11 @@ def docs_bm25_stream_served(m: Model) -> DataFrame:
     bit-identical to ``docs_bm25_topk`` (same oracle) — the additive
     index serves exactly like a full rebuild, which is the whole
     design claim of the ingest path."""
-    from ..catalog import assert_view_matches_fixture
-    from ..functions.memo import model_cached, sf_cached
+    from ..functions.memo import model_cached
 
-    assert_view_matches_fixture(m, "documents")
-    # The terms derive from the on-disk index, so they are keyed like
-    # it (sf_dir alone).  The handles are model_cached, not sf_cached:
-    # they hold a session-bound postings DataFrame, and the model
-    # fingerprint includes the application id, so a restarted session
-    # rebuilds instead of serving a dead handle.
     return _bm25_served_from(
         m, _stream_index_artifact_dir(m),
-        lambda build: sf_cached(m.sf_dir, "bm25_stream_served_terms", build),
+        lambda build: model_cached(m, "bm25_stream_served_terms", build),
         lambda build: model_cached(m, "bm25_stream_served_handles", build),
     )
 

@@ -1386,13 +1386,26 @@ def test_ivf_stream_ingest_additive_and_replay_idempotent(spark, tmp_path):
 
 def test_ivf_stream_served_guards_view_swap(spark):
     """The streamed ANN index is built from the ON-DISK fixture, so its
-    serving path must refuse a swapped embeddings view."""
+    serving path must refuse a swapped embeddings view.  The refusal
+    keeps the store built for the fixture view: once the view is
+    restored, the next request adds no memo entry and builds no new
+    index dir."""
+    import os
+
     import pytest
 
     from hbase_tools_spark.catalog import load_model
+    from hbase_tools_spark.functions import memo, workdir
     from hbase_tools_spark.llm.similarity import embedding_ivf_stream_served
 
+    def state():
+        root = workdir.root(spark)
+        dirs = {d for d in os.listdir(root) if d.startswith("ivf_stream_index_")}
+        return set(memo._CACHE), dirs
+
     m = load_model(spark, SF_DIR)
+    embedding_ivf_stream_served(m)  # the store for the fixture view
+    before = state()
     try:
         spark.createDataFrame(
             [(0, [0.1] * 8, 1)],
@@ -1403,6 +1416,8 @@ def test_ivf_stream_served_guards_view_swap(spark):
     finally:
         spark.conf.set("spark.hbase_tools.model_dir", "")
         load_model(spark, SF_DIR)
+    embedding_ivf_stream_served(m)
+    assert state() == before
 
 
 def test_signature_stream_store_additive_and_replay_idempotent(spark, tmp_path):

@@ -50,6 +50,38 @@ def test_model_cached_rebuilds_on_view_swap(spark):
         load_model(spark, SF_DIR)
 
 
+def test_failed_build_keeps_the_superseded_entry(spark):
+    """A build that raises for a new fingerprint leaves the old
+    fingerprint's entry in place: restoring the old view serves it
+    without a rebuild."""
+    from hbase_tools_spark.catalog import Model, load_model
+    from hbase_tools_spark.functions.memo import model_cached
+
+    m = Model(spark, "/tmp/memo_failed_build_fixture")
+    calls = []
+
+    def build():
+        calls.append(spark.table("documents").count())
+        if calls[-1] != 1:
+            raise RuntimeError("refused view")
+        return "built"
+
+    a = _docs(spark, [(0, "alpha beta", "en", "s0", 10)])
+    b = _docs(spark, [(1, "gamma", "en", "s0", 5), (2, "delta", "en", "s0", 5)])
+    try:
+        a.createOrReplaceTempView("documents")
+        assert model_cached(m, "probe", build) == "built"
+        b.createOrReplaceTempView("documents")
+        with pytest.raises(RuntimeError, match="refused view"):
+            model_cached(m, "probe", build)
+        a.createOrReplaceTempView("documents")
+        assert model_cached(m, "probe", build) == "built"
+        assert len(calls) == 2
+    finally:
+        spark.conf.set("spark.hbase_tools.model_dir", "")
+        load_model(spark, SF_DIR)
+
+
 def test_bm25_served_not_stale_after_fixture_swap(spark):
     """The round-5 advice scenario end-to-end: docs_bm25_served must
     re-derive its index when the documents view is re-registered with
@@ -158,6 +190,57 @@ def test_stream_served_guards_against_view_swap(spark):
 
 
 @pytest.mark.parametrize(
+    "name, jobs",
+    [
+        ("minhash_stream_served", 1),
+        ("docs_bm25_stream_served", 2),
+        ("embedding_ivf_stream_served", 1),
+    ],
+)
+def test_warm_stream_served_request_runs_no_schema_inference(spark, name, jobs):
+    """The stream stores check the fixture once per build, so a warm
+    request runs only its serving jobs: no parquet schema-inference job
+    for the view guard or for re-reading the store."""
+    import time
+    import uuid
+
+    import hbase_tools_spark.llm  # noqa: F401 — registers the queries
+    from hbase_tools_spark.catalog import load_model
+    from hbase_tools_spark.registry import QUERIES
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    m = load_model(spark, SF_DIR)
+    QUERIES[name].fn(m).collect()  # cold: builds the store if need be
+
+    def in_group(run) -> str:
+        group = uuid.uuid4().hex
+        sc.setJobGroup(group, group)
+        try:
+            run()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        return group
+
+    group = in_group(lambda: QUERIES[name].fn(m).collect())
+    # the status store records jobs in order: once a later marker job
+    # shows up, every job of the request has too
+    marker = in_group(lambda: spark.range(1).collect())
+    deadline = time.monotonic() + 30
+    while not tracker.getJobIdsForGroup(marker):
+        assert time.monotonic() < deadline, "marker job never recorded"
+        time.sleep(0.05)
+    stages = [
+        tracker.getStageInfo(s).name
+        for j in tracker.getJobIdsForGroup(group)
+        for s in tracker.getJobInfo(j).stageIds
+    ]
+    assert not [s for s in stages if s.startswith("parquet at")], stages
+    assert len(tracker.getJobIdsForGroup(group)) == jobs, stages
+
+
+@pytest.mark.parametrize(
     "name, module, target",
     [
         ("docs_bm25_served", "search", "materialize_inverted_index"),
@@ -246,6 +329,7 @@ def test_memo_keys_are_declared_index_state():
     probe constants) — never query-dependent results.  This test pins
     the key set: adding a memo entry without classifying it here fails
     the suite, forcing the invariant to be reviewed at the new site."""
+    import glob
     import os
     import re
 
@@ -257,7 +341,7 @@ def test_memo_keys_are_declared_index_state():
         "bm25_index_dir": "persisted inverted index",
         "bm25_stream_index_dir": "stream-ingested inverted index",
         "ivf_stream_index_dir": "stream-ingested IVF index",
-        "sig_stream_store_dir": "stream-ingested minhash signature store",
+        "sig_stream_store": "stream-ingested signature store read handle",
         "ppl_lm_artifact_dir": "persisted ccnet LM artifact",
         "lr_weights_dir": "persisted LR quality-model weights",
         "topology_store": "persisted topology snapshot store",
@@ -291,8 +375,17 @@ def test_memo_keys_are_declared_index_state():
     }
 
     pkg = os.path.dirname(hbase_tools_spark.__file__)
+    repo = os.path.dirname(pkg)
+    # model_cached is the one memo key: no second keying scheme
+    program = (
+        glob.glob(f"{pkg}/**/*.py", recursive=True)
+        + glob.glob(f"{repo}/scripts/**/*.py", recursive=True)
+        + [f"{repo}/bench.py"]
+    )
+    for path in program:
+        assert "sf_cached" not in open(path).read(), path
     pat = re.compile(
-        r"(?:sf_cached|model_cached|checkpointed)\(\s*"
+        r"(?:model_cached|checkpointed)\(\s*"
         r"(?:[A-Za-z_][\w.]*\s*,)?\s*\"([a-z_0-9]+)\"",
         re.S,
     )
