@@ -19,169 +19,6 @@ from hbase_tools_spark.registry import QUERIES
 
 SF0001 = "/root/testdata/sf0.001"
 
-# ---------------------------------------------------------------------------
-# Mechanical certification ledger (round-5 verdict task 1: "no
-# registered query's newest certificate may predate its implementation
-# — track edit-round per query so this invariant is mechanical").
-#
-# _CERT_ROUND[q] = the round of q's NEWEST green row across
-# CORRECTNESS_r01–r10.json (absent = never driver-certified).
-# _EDIT_ROUND[q] = the round q's implementation last changed in a way
-# that could affect its output or plan (absent = unchanged since its
-# newest certificate).  Every round, add edited queries here at the
-# current round number; the queue below then re-certifies them first.
-#
-# The driver checks ~50 queries per round in the order queries() emits
-# them, so the order IS the certification schedule:
-#   tier 0 — never certified (debuts), heaviest-evidence first,
-#   tier 1 — certificate older than the implementation (stale),
-#   tier 2 — everything else, oldest certificate first (freshness).
-# ---------------------------------------------------------------------------
-
-_CERT_ROUND = {
-    "analyzer_distribution_hist": 9, "analyzer_filecount_hist": 9,
-    "analyzer_locality_hist": 9, "analyzer_size_hist": 9,
-    "analyzer_table_size": 10, "analyzer_weight_stats": 10,
-    "ann_recall_at_k": 9, "bigram_pmi_top": 9, "bloom_contamination": 10,
-    "bpe_encode_tokens": 10, "bpe_merge_steps": 10, "busiest_emptiest":
-    10, "compaction_plan": 10, "corpus_dataset_card": 10,
-    "corpus_mixture_weights": 8, "corpus_novelty_curve": 10,
-    "corpus_rollup_stats": 8, "corpus_stats_by_lang": 9,
-    "corpus_temperature_mixture": 10, "corpus_version_diff": 9,
-    "distribution_candidates": 10, "distribution_weight": 10,
-    "doc_fingerprints": 8, "doc_winnow_fingerprints": 8,
-    "docs_bm25_served": 10, "docs_bm25_stream_served": 8,
-    "docs_bm25_topk": 9, "docs_budget_selection": 10,
-    "docs_ccnet_perplexity": 10, "docs_ccnet_perplexity_served": 10,
-    "docs_char_entropy": 8, "docs_chunk_spans": 8,
-    "docs_curriculum_order": 9, "docs_dedup_canonical": 8,
-    "docs_dsir_weights": 10, "docs_dup_spans": 10, "docs_epoch_shuffle":
-    9, "docs_exact_dedup": 8, "docs_gopher_rules": 10,
-    "docs_kneser_ney_perplexity": 10, "docs_length_percentile_filter": 10,
-    "docs_length_quantile_sketch": 9, "docs_line_dedup": 10,
-    "docs_lr_quality_served": 10, "docs_lr_quality_train": 9,
-    "docs_neardup_survivors": 8, "docs_pack_bins": 8, "docs_pii_scrub":
-    10, "docs_prefix_dedup": 8, "docs_quality_filter": 9,
-    "docs_repetition_ratio": 8, "docs_span_removed": 8,
-    "docs_split_assign": 8, "docs_stratified_sample": 8,
-    "docs_table_profile": 9, "docs_table_profile_sketch": 10,
-    "docs_weighted_sample": 10, "docs_window_dedup": 8,
-    "embedding_int8_topk": 8, "embedding_ivf_kmeans_topk": 10,
-    "embedding_ivf_stream_served": 10, "embedding_ivf_topk": 8,
-    "embedding_ivfpq_topk": 10, "embedding_label_outliers": 10,
-    "embedding_lsh_topk": 8, "embedding_neardup_pairs": 8,
-    "embedding_pq_topk": 10, "embedding_topk": 8, "events_anomaly_zscore":
-    8, "events_asof_assignment": 9, "events_attribution": 10,
-    "events_attribution_first": 10, "events_attribution_position": 10,
-    "events_cms_heavy_hitters": 9, "events_funnel": 8,
-    "events_heavy_hitters": 8, "events_hll_cardinality": 9,
-    "events_kmv_overlap": 9, "events_markov_attribution": 7,
-    "events_props_rollup": 7, "events_retention_cohorts": 8,
-    "events_salted_rollup": 7, "events_session_paths": 10,
-    "events_sessionize": 8, "events_transition_matrix": 10,
-    "events_user_cardinality": 7, "flush_plan": 7,
-    "health_check_eligible": 7, "health_probe_plan": 7,
-    "hybrid_rrf_search": 7, "hybrid_rrf_served": 9, "kv_admin_roundtrip":
-    7, "kv_model_roundtrip": 10, "lang_id_heuristic": 8, "lsh_band_sweep":
-    8, "lsh_bucket_stats": 7, "merge_plan": 7, "merge_plan_multipass": 9,
-    "mergeable_region_count": 7, "merged_span_recovery": 7,
-    "metrics_semi_join": 7, "minhash_band_pairs": 8,
-    "minhash_similarity_estimates": 8, "minhash_stream_served": 7,
-    "moved_regions_audit": 7, "multimodal_adpcm_audio": 10,
-    "multimodal_decode_headers": 7, "multimodal_features": 7,
-    "multimodal_frame_sample": 7, "multimodal_gif_stats": 9,
-    "multimodal_jpeg_roundtrip": 9, "multimodal_mc_video": 9,
-    "multimodal_mjpeg_video": 9, "multimodal_mp4_boxes": 9,
-    "multimodal_mulaw_audio": 10, "multimodal_pframe_video": 8,
-    "multimodal_png_stats": 9, "multimodal_resize": 7,
-    "multimodal_wav_pcm_stats": 9, "multimodal_wav_tone_detect": 9,
-    "mutation_replay_counts": 9, "neardup_clusters": 9,
-    "neardup_clusters_converged": 8, "neardup_edit_distance": 10,
-    "neardup_pagerank": 10, "neardup_source_matrix": 10,
-    "neardup_triangles": 10, "ngram_contamination": 10,
-    "ngram_jaccard_pairs": 8, "novelty_by_source": 8,
-    "oov_rate_by_source": 8, "pricing_summary": 9, "range_lookup": 7,
-    "region_bounds": 7, "region_edge_rows": 7, "region_health_join": 7,
-    "regions_by_server": 7, "report_biggest_regions": 7,
-    "report_biggest_rollup": 7, "report_compaction_queues": 7,
-    "report_complex_rollup": 7, "report_heap_pressure": 7,
-    "report_locality": 7, "report_partial_top15": 7, "report_rit_stuck":
-    7, "report_rs_distribution": 7, "report_snapshots_stale": 7,
-    "report_snapshots_toomany": 7, "retrieval_ndcg": 10,
-    "retrieval_rank_overlap": 10, "salted_keys": 7,
-    "semantic_dedup_survivors": 9, "semantic_only_dup_pairs": 8,
-    "server_prefix_resolve": 7, "simhash_fingerprints": 8,
-    "snapshot_merge_guard": 7, "source_unigram_divergence": 8,
-    "split_leakage": 9, "split_plan": 7, "split_plan_multipass": 9,
-    "split_points": 8, "stream_attribution": 10,
-    "stream_cms_heavy_hitters": 9, "stream_dedup_keys": 9,
-    "stream_dedup_keys_rocksdb": 8, "stream_enriched_server_load": 9,
-    "stream_funnel_stage": 10, "stream_hll_cardinality": 9,
-    "stream_length_quantile_sketch": 9, "stream_membership_in": 9,
-    "stream_session_stats": 9, "stream_sliding_counts": 9,
-    "stream_tumbling_counts": 9, "table_lifecycle_roundtrip": 7,
-    "table_mask_selection": 8, "text_stats": 8, "tfidf_top_terms": 8,
-    "token_count_hist": 9, "token_zipf_fit": 8, "tokenizer_fertility": 10,
-    "topology_asof": 9, "topology_diff": 8, "topology_parse": 9,
-    "topology_retention": 9, "topology_store_roundtrip": 7,
-    "training_set_assembly": 8, "training_set_funnel": 10, "upsert_dedup":
-    9, "vocab_top_terms": 8, "word_embedding_neighbors": 8,
-}
-
-_EDIT_ROUND: dict[str, int] = {
-    # round-10 edits land here as they happen (cert < edit => re-certify).
-    # Standing persist-swap exemption assumptions (recorded per ADVICE r8):
-    # (a) every swapped subtree is DETERMINISTIC (no sampling /
-    # monotonically_increasing_id upstream), and (b) the sf fixtures are
-    # IMMUTABLE within a session (CacheManager may serve a cached subtree
-    # to any later canonically-equal plan).  A future nondeterministic
-    # upstream at a persist site voids the exemption and must re-certify
-    # through this ledger.  Round-9 entries (hybrid_rrf_served,
-    # neardup_clusters) were re-certified green in r9 and cleared.
-    # (round-10 entries — adpcm byte filter, bpe vocab stage-persist —
-    # were re-certified green in r10 and cleared at round-11 start.)
-    # Round-11 optimization edits (results oracle-identical — verified
-    # at sf0.01 during the round — but plans changed: serving-handle
-    # memoization, literal dictionaries, expression-string builders,
-    # inline-explode projections):
-    "docs_bm25_served": 11,
-    "docs_bm25_stream_served": 11,
-    "hybrid_rrf_served": 11,
-    "docs_ccnet_perplexity_served": 11,
-    "embedding_ivf_stream_served": 11,
-    "kv_model_roundtrip": 11,
-    "kv_admin_roundtrip": 11,
-    "docs_table_profile": 11,
-    "docs_table_profile_sketch": 11,
-    "multimodal_mulaw_audio": 11,  # g711 fmt-chunk tolerance (ADVICE)
-    "docs_lr_quality_train": 11,  # per-step collected weight literals
-    "docs_lr_quality_served": 11,  # shares _lr_train_weights (artifact)
-    "events_markov_attribution": 11,  # driver-side bounded chain + fused window
-}
-
-# Debut ordering (never-certified queries first in this sequence, then
-# any remaining debuts in registration order).  All 190 queries are
-# certified (r1–r10 union); new debuts would go here.
-_DEBUT_PRIORITY: list[str] = [
-    # (the four round-10 debuts drew green r10 rows and were folded
-    # into _CERT_ROUND at round-11 start; round 11 is an optimization
-    # round — no debuts.)
-]
-
-
-def _ordered_names() -> list[str]:
-    debut_rank = {n: i for i, n in enumerate(_DEBUT_PRIORITY)}
-
-    def prio(n: str) -> tuple:
-        cert = _CERT_ROUND.get(n)
-        if cert is None:
-            return (0, debut_rank.get(n, len(debut_rank)), n)
-        if cert < _EDIT_ROUND.get(n, 0):
-            return (1, 0, n)
-        return (2, cert, n)
-
-    return sorted(QUERIES, key=prio)
-
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship query on /root/testdata/sf0.001; driver checks rows>0."""
@@ -197,10 +34,10 @@ def _make(name: str) -> Callable[[SparkSession, str], DataFrame]:
         # Deterministic stage-cache lifecycle: moving to a DIFFERENT
         # query releases the previous query's tracked persist sites
         # (functions/cache.py) — the driver runs each query once, so
-        # caches never accumulate across its ~50-query sweep.  Repeat
-        # runs of the same query (bench median-of-5) keep their warm
-        # caches; bench.py additionally releases between queries
-        # outside the timed region.
+        # caches never accumulate across its sweep.  Repeat runs of
+        # the same query (bench median-of-5) keep their warm caches;
+        # bench.py additionally releases between queries outside the
+        # timed region.
         from hbase_tools_spark.functions.cache import release_stage_caches
 
         if _LAST_QUERY[0] != name:
@@ -214,14 +51,15 @@ def _make(name: str) -> Callable[[SparkSession, str], DataFrame]:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """One entry per implemented operator from SURVEY.md §2."""
-    return {name: _make(name) for name in _ordered_names()}
+    """One entry per implemented operator from SURVEY.md §2, in
+    registration order."""
+    return {name: _make(name) for name in QUERIES}
 
 
 def oracle_sql() -> dict[str, str]:
     """DuckDB-equivalent SQL per query (omitted => rows-only check)."""
     return {
         name: QUERIES[name].oracle
-        for name in _ordered_names()
+        for name in QUERIES
         if QUERIES[name].oracle is not None
     }

@@ -113,9 +113,9 @@ TOOL_QUERIES: dict[str, list[str]] = {
     ],
     # Retrieval over the corpus: BM25 + hybrid fusion + quality
     # scoreboards (the persisted inverted-index serving paths live in
-    # llm/search.py: materialize_inverted_index / bm25_topk_from_index
-    # / hybrid_rrf_from_index / index_ingest_batch, which
-    # streaming/jobs.drain_batches feeds one micro-batch at a time).
+    # llm/search.py: index_ingest_batch writes the index, whole or one
+    # streamed micro-batch at a time, and bm25_topk_from_index /
+    # hybrid_rrf_from_index serve it).
     "search": [
         "docs_bm25_topk", "docs_bm25_served", "hybrid_rrf_search", "ann_recall_at_k",
         "retrieval_rank_overlap", "retrieval_ndcg",

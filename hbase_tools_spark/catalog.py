@@ -157,6 +157,23 @@ _SQL_POSTURE = {
 }
 
 
+def normalize_timestamps(df: DataFrame, table: str) -> DataFrame:
+    """``df`` (a read of fixture ``table``) with its ``_TS_COLUMNS`` as
+    TimestampType: exact ``DIV 1000`` of the ns-longs that
+    ``_SQL_POSTURE``'s nanosAsLong gives at sf0.001/sf0.01, a cast of
+    the µs NTZ at sf0.1.  ``load_model`` and the events stream share it,
+    so batch and streaming plans see identical rows."""
+    for ts_col in _TS_COLUMNS.get(table, []):
+        dtype = dict(df.dtypes).get(ts_col)
+        if dtype == "bigint":
+            df = df.withColumn(
+                ts_col, F.timestamp_micros(F.expr(f"`{ts_col}` DIV 1000"))
+            )
+        elif dtype == "timestamp_ntz":
+            df = df.withColumn(ts_col, F.col(ts_col).cast("timestamp"))
+    return df
+
+
 def load_model(spark: SparkSession, sf_dir: str) -> Model:
     """Register base fixture tables + derived relations as temp views.
 
@@ -178,16 +195,7 @@ def load_model(spark: SparkSession, sf_dir: str) -> Model:
     sizes = []
     for name in BASE_TABLES:
         path = os.path.join(sf_dir, f"{name}.parquet")
-        df = spark.read.parquet(path)
-        for ts_col in _TS_COLUMNS.get(name, []):
-            dtype = dict(df.dtypes).get(ts_col)
-            if dtype == "bigint":  # ns-encoded (sf0.001/sf0.01 fixtures)
-                df = df.withColumn(
-                    ts_col,
-                    F.timestamp_micros(F.expr(f"`{ts_col}` DIV 1000")),
-                )
-            elif dtype == "timestamp_ntz":  # µs NTZ (sf0.1 fixtures)
-                df = df.withColumn(ts_col, F.col(ts_col).cast("timestamp"))
+        df = normalize_timestamps(spark.read.parquet(path), name)
         df.createOrReplaceTempView(name)
         sizes.append(relation_bytes(df))
     model_bytes = None if None in sizes else sum(sizes)
@@ -214,24 +222,3 @@ def warm(m: Model) -> None:
         m.spark.table(t).count()
     for t in DERIVED_VIEWS:
         m.spark.table(t).localCheckpoint(eager=True).createOrReplaceTempView(t)
-
-
-def assert_view_matches_fixture(m: Model, view: str) -> None:
-    """Guard for serving paths whose persisted artifact is built from
-    the ON-DISK fixture (streaming ingests cannot read temp views): the
-    registered view must BE that fixture, or the artifact silently
-    diverges from what queries see.  Compares analyzed-plan semantic
-    hashes and raises on mismatch; re-reading the fixture costs one
-    parquet schema-inference job, so the stream stores call it once per
-    build, not per request.  Only valid for views load_model registers as
-    plain parquet reads (no timestamp normalization), e.g. documents
-    and embeddings."""
-    disk = m.spark.read.parquet(os.path.join(m.sf_dir, f"{view}.parquet"))
-    h = lambda df: df._jdf.queryExecution().analyzed().semanticHash()  # noqa: E731
-    if h(m.spark.table(view)) != h(disk):
-        raise ValueError(
-            f"the registered '{view}' view does not match the on-disk "
-            f"fixture at {m.sf_dir}/{view}.parquet; the stream-ingested "
-            "artifact would diverge from the view — re-register the "
-            "fixture view (load_model) or use the batch path"
-        )

@@ -1,7 +1,8 @@
 """The one scratch root of the process: stream checkpoints, spill
 sinks, stage directories and served artifacts all live under it.
-Served artifacts are made by ``built``, which removes a directory
-whose build failed.
+Served artifacts are made by ``functions.memo.artifact``, whose memo
+entry owns the directory: a failed build and an evicted entry both
+remove it.
 
 The root sits under the first local dir Spark itself resolved
 (``SPARK_LOCAL_DIRS`` over ``spark.local.dir`` over ``java.io.tmpdir``),
@@ -47,20 +48,6 @@ def root(spark) -> str:
 def scratch(spark, prefix: str) -> str:
     """A fresh directory under the root, removed with it."""
     return tempfile.mkdtemp(prefix=prefix, dir=root(spark))
-
-
-def built(spark, prefix: str, fill) -> str:
-    """A fresh directory under the root, filled by ``fill(path)``: the
-    one way a served artifact is made.  If ``fill`` raises, the
-    directory is removed and the error re-raised, so a failed build
-    leaves nothing behind."""
-    path = scratch(spark, prefix)
-    try:
-        fill(path)
-    except BaseException:
-        shutil.rmtree(path, ignore_errors=True)
-        raise
-    return path
 
 
 @contextlib.contextmanager

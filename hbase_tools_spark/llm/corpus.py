@@ -799,12 +799,13 @@ def _lm_artifact_dir(m: Model) -> str:
     ``docs_ccnet_perplexity`` trains in-plan and memoizes the LM
     relations per documents-content; this twin is the PERSISTED shape
     — parquet on disk, survives the session.)"""
-    from ..functions import workdir
-    from ..functions.memo import model_cached
+    from ..functions.memo import artifact
 
-    return model_cached(m, "ppl_lm_artifact_dir", lambda: workdir.built(
-        m.spark, "ppl_lm_", lambda out: materialize_ppl_lm(m.documents, out)
-    ))
+    def fill(out: str) -> str:
+        materialize_ppl_lm(m.documents, out)
+        return out
+
+    return artifact(m, "ppl_lm_artifact_dir", fill)
 
 
 def docs_ccnet_perplexity_served(m: Model) -> DataFrame:
@@ -1795,13 +1796,13 @@ def _lr_weights_dir(m: Model) -> str:
     dir) into scratch and memoize the path — the ``_lm_artifact_dir``
     convention: in production the artifact exists before any query
     runs, so the serving query's measured cost is scoring alone."""
-    from ..functions import workdir
-    from ..functions.memo import model_cached
+    from ..functions.memo import artifact
 
-    return model_cached(m, "lr_weights_dir", lambda: workdir.built(
-        m.spark, "lr_weights_",
-        lambda out: materialize_lr_weights(m.documents, out),
-    ))
+    def fill(out: str) -> str:
+        materialize_lr_weights(m.documents, out)
+        return out
+
+    return artifact(m, "lr_weights_dir", fill)
 
 
 @query("docs_lr_quality_served", oracle=_lr_oracle(), views=[])

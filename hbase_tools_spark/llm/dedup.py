@@ -1789,25 +1789,18 @@ def signature_ingest_batch(
 def _stream_signature_store(m: Model) -> DataFrame:
     """Drain the documents fixture through the exactly-once signature
     ingest once per documents view and memoize the store's
-    (doc_id, sig) read handle.  The build first checks that the view is
-    the on-disk fixture the stream reads."""
-    from ..catalog import assert_view_matches_fixture
-    from ..functions import workdir
-    from ..functions.memo import model_cached
-    from ..streaming.jobs import documents_stream, drain_batches
+    (doc_id, sig) read handle."""
+    from ..functions.memo import artifact
+    from ..streaming.jobs import drain_fixture
 
-    def fill(out: str) -> None:
-        drain_batches(
-            documents_stream(m.spark, m.sf_dir).select("doc_id", "text"),
+    def fill(out: str) -> DataFrame:
+        drain_fixture(
+            m, "documents",
             lambda df, batch_id: signature_ingest_batch(df, out, batch_id),
         )
+        return m.spark.read.parquet(out).select("doc_id", "sig")
 
-    def build() -> DataFrame:
-        assert_view_matches_fixture(m, "documents")
-        store = workdir.built(m.spark, "sig_stream_store_", fill)
-        return m.spark.read.parquet(store).select("doc_id", "sig")
-
-    return model_cached(m, "sig_stream_store", build)
+    return artifact(m, "sig_stream_store", fill)
 
 
 from ..registry import QUERIES as _Q  # noqa: E402 — reuse the direct oracle

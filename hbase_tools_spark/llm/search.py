@@ -13,7 +13,7 @@ both shapes, Spark-first:
     the (doc, word, tf) relation once, query terms ride as a broadcast
     few-row relation, and the global top-k is a
     ``TakeOrderedAndProject`` — no global sort, no driver loop.
-  * :func:`materialize_inverted_index` / :func:`bm25_topk_from_index`
+  * :func:`index_ingest_batch` / :func:`bm25_topk_from_index`
     — the query-many production shape (the text analog of
     ``similarity.ivf_ingest_batch``): postings persisted
     PARTITIONED BY a term-hash bucket so each query reads only its
@@ -228,73 +228,36 @@ def docs_bm25_topk(m: Model) -> DataFrame:
 _INDEX_BUCKETS = 64
 
 
-def materialize_inverted_index(
-    docs: DataFrame,
-    out_dir: str,
-    n_buckets: int = _INDEX_BUCKETS,
-    mode: str = "overwrite",
-) -> None:
-    """Persist the BM25 inverted index: postings (word, doc_id, tf, dl)
-    and the per-term dictionary (word, df), both written PARTITIONED BY
-    ``bucket = pmod(xxhash64(word), n_buckets)`` so a query's read
-    prunes to its terms' buckets (~postings/n_buckets rows touched per
-    term instead of the corpus), plus the (n_docs, sum_dl) statistics
-    relation.
-
-    Every index relation is ADDITIVE — the dictionary holds partial df
-    rows and the statistics hold integer sums, with serving aggregating
-    across write batches — so ``mode="append"`` ingests a NEW document
-    batch incrementally (one batch scan, postings disjoint by doc_id),
-    and an index grown by appends serves bit-identically to a full
-    rebuild (pinned by test).  The posting build is the same two-phase
-    (doc, word) pre-aggregate as the ad hoc query — ONE corpus scan,
-    one hash shuffle — and the partitioned write is the only extra
-    cost.  Serving (:func:`bm25_topk_from_index`) then reproduces
-    :func:`docs_bm25_topk` bit-for-bit (pinned by test) without ever
-    scanning a document."""
-    postings, dictionary, st, forward = _index_relations(docs, n_buckets)
-    postings.write.mode(mode).partitionBy("bucket").parquet(
-        f"{out_dir}/postings"
-    )
-    dictionary.write.mode(mode).partitionBy("bucket").parquet(
-        f"{out_dir}/dictionary"
-    )
-    st.write.mode(mode).parquet(f"{out_dir}/stats")
-    forward.write.mode(mode).partitionBy("dbucket").parquet(
-        f"{out_dir}/forward"
-    )
-
-
-def _index_relations(
-    docs: DataFrame, n_buckets: int = _INDEX_BUCKETS, for_ingest: bool = False
-):
+def _index_relations(docs: DataFrame, n_buckets: int = _INDEX_BUCKETS):
     """The four additive index relations for one document batch:
     postings (word, doc_id, tf, dl, bucket), dictionary partials
     (word, df, bucket), statistics (n_docs, sum_dl), and the FORWARD
     index (doc_id, word, dbucket) — the doc-major mirror a serving
     layer reads to recover a probe document's terms without scanning
     text (real search stacks keep forward + inverted side by side).
-    Shared by the batch materializer and the streaming ingest so the
-    index layout has exactly one definition.
 
-    ``for_ingest=True`` persists the shared tokenize pass (``wc``/``d``
-    feed three of the four outputs; without it each write re-tokenizes
-    the batch) and returns it as a fifth element for the caller to
-    unpersist once the batch commits."""
+    Every relation is ADDITIVE — the dictionary holds partial df rows
+    and the statistics hold integer sums, with serving aggregating
+    across write batches — so an index grown batch by batch serves
+    bit-identically to one written in a single batch (pinned by test).
+    The posting build is the same two-phase (doc, word) pre-aggregate
+    as the ad hoc query: ONE corpus scan, one hash shuffle.
+
+    The shared tokenize pass (``wc``/``d`` feed three of the four
+    outputs) is persisted and returned as a fifth element for the
+    caller to unpersist once the batch commits."""
     bucket = F.pmod(F.xxhash64("word"), F.lit(n_buckets)).cast("int")
     d = docs.select(
         "doc_id", F.size(F.split(F.col("text"), " ")).cast("bigint").alias("dl")
-    )
+    ).persist()
     wc = (
         docs.select(
             "doc_id", F.explode(F.split(F.col("text"), " ")).alias("word")
         )
         .groupBy("doc_id", "word")
         .agg(F.count(F.lit(1)).cast("bigint").alias("tf"))
+        .persist()
     )
-    if for_ingest:
-        wc = wc.persist()
-        d = d.persist()
     postings = wc.join(d, "doc_id").withColumn("bucket", bucket)
     dictionary = (
         wc.groupBy("word")
@@ -310,9 +273,7 @@ def _index_relations(
         "word",
         F.pmod(F.xxhash64("doc_id"), F.lit(n_buckets)).cast("int").alias("dbucket"),
     )
-    if for_ingest:
-        return postings, dictionary, st, forward, (wc, d)
-    return postings, dictionary, st, forward
+    return postings, dictionary, st, forward, (wc, d)
 
 
 def index_ingest_batch(
@@ -343,7 +304,7 @@ def index_ingest_batch(
     recover from that by deleting the ``batch_id=N`` subtree before
     re-ingesting."""
     postings, dictionary, st, forward, shared = _index_relations(
-        batch_docs.select("doc_id", "text"), n_buckets, for_ingest=True
+        batch_docs.select("doc_id", "text"), n_buckets
     )
     try:
         for df, sub, parts in (
@@ -1109,17 +1070,17 @@ def _term_buckets_for_ids(
 
 
 def _index_artifact_dir(m: Model) -> str:
-    """Materialize the inverted index ONCE per documents view into a
-    scratch location and memoize the path — in production the index
-    exists before any query runs, so the serving query's measured cost
-    is pruned reads + scoring, never the index build."""
-    from ..functions import workdir
-    from ..functions.memo import model_cached
+    """Materialize the inverted index ONCE per documents view, as one
+    ingest batch, into a memoized artifact dir — in production the
+    index exists before any query runs, so the serving query's measured
+    cost is pruned reads + scoring, never the index build."""
+    from ..functions.memo import artifact
 
-    return model_cached(m, "bm25_index_dir", lambda: workdir.built(
-        m.spark, "bm25_index_",
-        lambda out: materialize_inverted_index(m.documents, out),
-    ))
+    def fill(out: str) -> str:
+        index_ingest_batch(m.documents, out, 0)
+        return out
+
+    return artifact(m, "bm25_index_dir", fill)
 
 
 def _bm25_served_from(m: Model, idx: str, cache_terms, cache_handles):
@@ -1250,27 +1211,20 @@ query(
 
 def _stream_index_artifact_dir(m: Model) -> str:
     """Build the inverted index by draining the documents fixture
-    through the EXACTLY-ONCE streaming ingest (``drain_batches`` +
-    per-batch_id dynamic partition overwrite), once per documents view,
-    and memoize the path — the continuous-crawl production shape.  The
-    stream reads the on-disk fixture (streams cannot read temp views),
-    so the build first checks that the view is that fixture."""
-    from ..catalog import assert_view_matches_fixture
-    from ..functions import workdir
-    from ..functions.memo import model_cached
-    from ..streaming.jobs import documents_stream, drain_batches
+    through the EXACTLY-ONCE streaming ingest (per-batch_id dynamic
+    partition overwrite), once per documents view, and memoize the
+    path — the continuous-crawl production shape."""
+    from ..functions.memo import artifact
+    from ..streaming.jobs import drain_fixture
 
-    def fill(out: str) -> None:
-        drain_batches(
-            documents_stream(m.spark, m.sf_dir).select("doc_id", "text"),
+    def fill(out: str) -> str:
+        drain_fixture(
+            m, "documents",
             lambda df, batch_id: index_ingest_batch(df, out, batch_id),
         )
+        return out
 
-    def build() -> str:
-        assert_view_matches_fixture(m, "documents")
-        return workdir.built(m.spark, "bm25_stream_index_", fill)
-
-    return model_cached(m, "bm25_stream_index_dir", build)
+    return artifact(m, "bm25_stream_index_dir", fill)
 
 
 def docs_bm25_stream_served(m: Model) -> DataFrame:

@@ -2049,32 +2049,26 @@ def _stream_ivf_index_dir(m: Model) -> str:
     memoize the path.  The quantizer (per-label centroid relation)
     trains ONCE from the corpus snapshot and is persisted beside the
     inverted lists — the pretrained-quantizer production posture; the
-    stream only ever assigns.  The build reads the on-disk fixture, so
-    it first checks that the view is that fixture."""
+    stream only ever assigns."""
     import os
 
-    from ..catalog import assert_view_matches_fixture
-    from ..functions import workdir
-    from ..functions.memo import model_cached
-    from ..streaming.jobs import drain_batches, embeddings_stream
+    from ..functions.memo import artifact
+    from ..streaming.jobs import drain_fixture
 
-    def fill(out: str) -> None:
+    def fill(out: str) -> str:
         emb = m.spark.read.parquet(os.path.join(m.sf_dir, "embeddings.parquet"))
         cent = _label_centroids(emb)
         cent_rows = [(int(r["label"]), list(r["c"])) for r in cent.collect()]
         cent.select(F.col("label").alias("cell"), "c").write.mode(
             "overwrite"
         ).parquet(out + "/centroids")
-        drain_batches(
-            embeddings_stream(m.spark, m.sf_dir),
+        drain_fixture(
+            m, "embeddings",
             lambda df, batch_id: ivf_ingest_batch(df, out, batch_id, cent_rows),
         )
+        return out
 
-    def build() -> str:
-        assert_view_matches_fixture(m, "embeddings")
-        return workdir.built(m.spark, "ivf_stream_index_", fill)
-
-    return model_cached(m, "ivf_stream_index_dir", build, deps=("embeddings",))
+    return artifact(m, "ivf_stream_index_dir", fill, deps=("embeddings",))
 
 
 from ..registry import QUERIES as _Q  # noqa: E402 — reuse the direct oracle

@@ -145,12 +145,11 @@ def _topology_store(m) -> tuple:
     partition store, built once per topology content: bulk partitioned
     append of the 48h window minus the newest epoch, the newest epoch
     through the real ``snapshot_topology`` sink, then TTL expiry."""
-    from ..functions import workdir
-    from ..functions.memo import model_cached
+    from ..functions.memo import artifact
 
     spark = m.spark
 
-    def build() -> tuple:
+    def fill(store: str) -> tuple:
         topo = m.topology.select(
             F.unix_timestamp("snapshot_ts").cast("bigint").alias("e"),
             "region_id",
@@ -158,25 +157,20 @@ def _topology_store(m) -> tuple:
         )
         me = topo.agg(F.max("e")).collect()[0][0]  # 1-row bounded probe
         recent = topo.where(F.col("e") > me - _STORE_WINDOW_SEC)
+        # bulk history: one partitioned append (the layout SC5 creates)
+        (
+            recent.where(F.col("e") < me)
+            .withColumnRenamed("e", "snapshot_epoch")
+            .write.mode("append")
+            .partitionBy("snapshot_epoch")
+            .parquet(store)
+        )
+        # the newest snapshot goes through the SC5 sink itself
+        snapshot_topology(recent.where(F.col("e") == me).drop("e"), store, me)
+        expire_topology(spark, store, now_ts=me, ttl_sec=_STORE_TTL_SEC)
+        return store, me
 
-        def fill(store: str) -> None:
-            # bulk history: one partitioned append (the layout SC5 creates)
-            (
-                recent.where(F.col("e") < me)
-                .withColumnRenamed("e", "snapshot_epoch")
-                .write.mode("append")
-                .partitionBy("snapshot_epoch")
-                .parquet(store)
-            )
-            # the newest snapshot goes through the SC5 sink itself
-            snapshot_topology(
-                recent.where(F.col("e") == me).drop("e"), store, me
-            )
-            expire_topology(spark, store, now_ts=me, ttl_sec=_STORE_TTL_SEC)
-
-        return workdir.built(spark, "topology_store_", fill), me
-
-    return model_cached(m, "topology_store", build, deps=("topology",))
+    return artifact(m, "topology_store", fill, deps=("topology",))
 
 
 @query(

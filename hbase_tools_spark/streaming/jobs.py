@@ -34,7 +34,7 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import Model
+from ..catalog import Model, normalize_timestamps
 from ..functions import workdir
 from ..functions.exprs import dsum, epoch_bigint
 from ..functions.partitioning import cores, partitions_for, relation_bytes
@@ -102,18 +102,10 @@ def _staged(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
 
 
 def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """``readStream`` over the events fixture with the same timestamp
-    normalization as the batch catalog (ns-long at small SFs, µs NTZ at
-    sf0.1) so streaming and batch plans see identical rows."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    df = _staged(spark, sf_dir, "events")
-    dtype = dict(df.dtypes)["ts"]
-    if dtype == "bigint":
-        df = df.withColumn("ts", F.timestamp_micros(F.expr("ts DIV 1000")))
-    elif dtype == "timestamp_ntz":
-        df = df.withColumn("ts", F.col("ts").cast("timestamp"))
-    return df
+    """``readStream`` over the events fixture with the batch catalog's
+    timestamp normalization, so streaming and batch plans see identical
+    rows."""
+    return normalize_timestamps(_staged(spark, sf_dir, "events"), "events")
 
 
 def documents_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -121,12 +113,6 @@ def documents_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     feed for streaming corpus telemetry (no timestamp column, so no
     normalization)."""
     return _staged(spark, sf_dir, "documents")
-
-
-def embeddings_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """``readStream`` over the embeddings fixture — the arriving-vector
-    feed for the streaming ANN-index ingest (round 7)."""
-    return _staged(spark, sf_dir, "embeddings")
 
 
 _STATE_PART_BYTES = 512 << 10  # 512 KiB of source per state partition
@@ -217,6 +203,35 @@ def drain_batches(stream_df: DataFrame, write_batch):
     return _available_now(
         stream_df.sparkSession, stream_df.writeStream.foreachBatch(on_batch)
     )
+
+
+def assert_view_matches_fixture(m: Model, view: str) -> None:
+    """Guard for artifacts built from the ON-DISK fixture (streams
+    cannot read temp views): the registered view must BE that fixture,
+    or the artifact silently diverges from what queries see.  Compares
+    analyzed-plan semantic hashes and raises on mismatch; re-reading the
+    fixture costs one parquet schema-inference job, once per build.
+    Only valid for views load_model registers as plain parquet reads
+    (no timestamp normalization), e.g. documents and embeddings."""
+    disk = m.spark.read.parquet(os.path.join(m.sf_dir, f"{view}.parquet"))
+    h = lambda df: df._jdf.queryExecution().analyzed().semanticHash()  # noqa: E731
+    if h(m.spark.table(view)) != h(disk):
+        raise ValueError(
+            f"the registered '{view}' view does not match the on-disk "
+            f"fixture at {m.sf_dir}/{view}.parquet; the stream-ingested "
+            "artifact would diverge from the view — re-register the "
+            "fixture view (load_model) or use the batch path"
+        )
+
+
+def drain_fixture(m: Model, table: str, write_batch):
+    """Drain fixture ``table``'s staged feed through ``drain_batches``
+    into ``write_batch(batch_df, batch_id)`` — the fill of every
+    stream-built store (inverted index, IVF index, signature store).
+    The stream reads the on-disk fixture, so the registered view is
+    first checked to be that fixture."""
+    assert_view_matches_fixture(m, table)
+    return drain_batches(_staged(m.spark, m.sf_dir, table), write_batch)
 
 
 def run_to_table(

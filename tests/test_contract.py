@@ -68,30 +68,6 @@ def test_contract_shapes():
     qs, os_ = e.queries(), e.oracle_sql()
     assert set(os_) <= set(qs)
     assert len(qs) > 0
-
-
-def test_cert_ledger_is_mechanical():
-    """Round-5 verdict task 1: the certification queue must be derived
-    from per-query (cert_round, edit_round) bookkeeping, the ledger may
-    only reference registered queries, and the backlog (never-certified
-    or stale-certificate queries) must fill the driver's ~50-query
-    budget head so one round closes it."""
-    import __spark_entry__ as e
-
-    assert set(e._CERT_ROUND) <= set(QUERIES)
-    assert set(e._EDIT_ROUND) <= set(QUERIES)
-    order = e._ordered_names()
-    assert sorted(order) == sorted(QUERIES)
-    backlog = {
-        n
-        for n in QUERIES
-        if e._CERT_ROUND.get(n) is None
-        or e._CERT_ROUND[n] < e._EDIT_ROUND.get(n, 0)
-    }
-    # The first min(len(backlog), 50) queue slots must be backlog
-    # entries even when the backlog exceeds the driver budget — the
-    # regime the ~50-query invariant exists for (round-6 ADVICE).
-    head = min(len(backlog), 50)
-    assert set(order[:head]) <= backlog
-    if len(backlog) <= 50:
-        assert backlog <= set(order[: len(backlog)])
+    # every registered query, in registration order
+    assert list(qs) == list(QUERIES)
+    assert list(os_) == [n for n in QUERIES if QUERIES[n].oracle is not None]

@@ -163,17 +163,14 @@ def test_ann_scoreboard_legs_not_stale_after_embeddings_swap(spark):
 
 
 def test_stream_served_guards_against_view_swap(spark):
-    """The streaming-ingested index is built from the ON-DISK fixture
-    (streams cannot read temp views), so its serving path must REFUSE a
-    swapped documents view instead of silently diverging (round-6
+    """The streaming-ingested stores are built from the ON-DISK fixture
+    (streams cannot read temp views), so their serving path must REFUSE
+    a swapped documents view instead of silently diverging (round-6
     advice: the old content-keyed memo rebuilt from the old files)."""
-    import pytest
-
-    from hbase_tools_spark.catalog import (
-        Model,
-        assert_view_matches_fixture,
-        load_model,
-    )
+    import hbase_tools_spark.llm  # noqa: F401 — registers the queries
+    from hbase_tools_spark.catalog import Model, load_model
+    from hbase_tools_spark.registry import QUERIES
+    from hbase_tools_spark.streaming.jobs import assert_view_matches_fixture
 
     m = Model(spark, SF_DIR)
     try:
@@ -184,6 +181,9 @@ def test_stream_served_guards_against_view_swap(spark):
         )
         with pytest.raises(ValueError, match="does not match the on-disk"):
             assert_view_matches_fixture(m, "documents")
+        for name in ("minhash_stream_served", "docs_bm25_stream_served"):
+            with pytest.raises(ValueError, match="does not match the on-disk"):
+                QUERIES[name].fn(m)
     finally:
         spark.conf.set("spark.hbase_tools.model_dir", "")
         load_model(spark, SF_DIR)
@@ -243,29 +243,33 @@ def test_warm_stream_served_request_runs_no_schema_inference(spark, name, jobs):
 @pytest.mark.parametrize(
     "name, module, target",
     [
-        ("docs_bm25_served", "search", "materialize_inverted_index"),
-        ("minhash_stream_served", "dedup", "signature_ingest_batch"),
+        ("docs_bm25_served", "llm.search", "index_ingest_batch"),
+        ("minhash_stream_served", "llm.dedup", "signature_ingest_batch"),
+        ("embedding_ivf_stream_served", "llm.similarity", "ivf_ingest_batch"),
+        ("topology_store_roundtrip", "sources.tables", "snapshot_topology"),
     ],
-    ids=["batch_artifact", "stream_store"],
+    ids=["batch_artifact", "stream_store", "ivf_stream_store", "topology_store"],
 )
 def test_failed_artifact_build_leaves_no_dir_or_memo_entry(
     spark, ducksql, monkeypatch, name, module, target
 ):
-    """A served artifact whose build raises (a batch materializer, or a
-    stream store's batch writer inside the ingest drain) propagates the
-    error, leaves the scratch root with no more entries than before and
-    adds no memo entry; once the fault is gone, the next call builds
-    and serves the oracle's rows."""
+    """A served artifact whose build raises (a batch writer, a stream
+    store's batch writer inside the ingest drain, or the topology
+    store's snapshot sink) propagates the error, leaves the scratch
+    root with no more entries than before and adds no memo entry; once
+    the fault is gone, the next call builds and serves the oracle's
+    rows."""
     import importlib
     import os
 
+    import hbase_tools_spark.llm  # noqa: F401 — registers the queries
     from conftest import assert_query_matches_oracle
     from hbase_tools_spark.catalog import load_model
     from hbase_tools_spark.functions import memo, workdir
     from hbase_tools_spark.registry import QUERIES
-    from hbase_tools_spark.streaming.jobs import documents_stream
+    from hbase_tools_spark.streaming.jobs import _staged
 
-    mod = importlib.import_module(f"hbase_tools_spark.llm.{module}")
+    mod = importlib.import_module(f"hbase_tools_spark.{module}")
 
     def broken(_df, out_dir, *_args, **_kwargs):
         open(os.path.join(out_dir, "partial"), "w").close()
@@ -274,7 +278,8 @@ def test_failed_artifact_build_leaves_no_dir_or_memo_entry(
     # an empty memo, restored afterwards, so the artifact builds here
     monkeypatch.setattr(memo, "_CACHE", {})
     m = load_model(spark, SF_DIR)
-    documents_stream(spark, SF_DIR)  # stage the feed before counting
+    for table in ("documents", "embeddings"):
+        _staged(spark, SF_DIR, table)  # stage the feeds before counting
     root = workdir.root(spark)
     before = len(os.listdir(root))
     with monkeypatch.context() as mp:
@@ -284,6 +289,71 @@ def test_failed_artifact_build_leaves_no_dir_or_memo_entry(
     assert len(os.listdir(root)) <= before
     assert memo._CACHE == {}
     assert_query_matches_oracle(spark, ducksql, name)
+
+
+def test_superseded_artifact_dir_is_removed(spark, tmp_path):
+    """Serving over other content removes the directory of the artifact
+    it supersedes: after a documents swap one new ``bm25_index_*`` dir
+    is left, after an embeddings rewrite one new ``ivf_stream_index_*``
+    dir, each the one memo entry of its key.  The serving handles
+    derived from the superseded content go with its directory, so a
+    hybrid request back on the first documents rebuilds instead of
+    reading the removed index."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from hbase_tools_spark.catalog import load_model
+    from hbase_tools_spark.functions import memo, workdir
+    from hbase_tools_spark.llm.search import docs_bm25_served, hybrid_rrf_served
+    from hbase_tools_spark.llm.similarity import embedding_ivf_stream_served
+
+    # a fixture copy of its own: the IVF store drains the on-disk file,
+    # so other content means rewriting it (with a new column, since the
+    # memo fingerprint is the analyzed plan, not the bytes)
+    sf = str(tmp_path / "sf")
+    os.mkdir(sf)
+    for f in os.listdir(SF_DIR):
+        os.symlink(os.path.join(SF_DIR, f), os.path.join(sf, f))
+    root = workdir.root(spark)
+
+    def reload():
+        spark.conf.set("spark.hbase_tools.model_dir", "")
+        return load_model(spark, sf)
+
+    def left(prefix, key):
+        entries = [c for c in memo._CACHE if c[:2] == (sf, key)]
+        assert len(entries) == 1, entries
+        dirs = {d for d in os.listdir(root) if d.startswith(prefix)} - before[prefix]
+        assert dirs == {os.path.basename(memo._CACHE[entries[0]][1])}, dirs
+
+    before = {
+        p: {d for d in os.listdir(root) if d.startswith(p)}
+        for p in ("bm25_index_", "ivf_stream_index_")
+    }
+    try:
+        m = reload()
+        docs_bm25_served(m).collect()
+        hybrid = sorted(map(tuple, hybrid_rrf_served(m).collect()))
+        embedding_ivf_stream_served(m).collect()
+        m.documents.where("doc_id % 2 = 0").createOrReplaceTempView("documents")
+        docs_bm25_served(m).collect()
+        left("bm25_index_", "bm25_index_dir")
+        m = reload()
+        assert sorted(map(tuple, hybrid_rrf_served(m).collect())) == hybrid
+        left("bm25_index_", "bm25_index_dir")
+
+        emb = os.path.join(sf, "embeddings.parquet")
+        table = pq.read_table(os.path.join(SF_DIR, "embeddings.parquet"))
+        os.remove(emb)
+        pq.write_table(table.append_column("pad", pa.array([0] * len(table))), emb)
+        m = reload()
+        embedding_ivf_stream_served(m).collect()
+        left("ivf_stream_index_", "ivf_stream_index_dir")
+    finally:
+        spark.conf.set("spark.hbase_tools.model_dir", "")
+        load_model(spark, SF_DIR)
 
 
 def test_stage_persist_lifecycle(spark):
@@ -376,7 +446,7 @@ def test_memo_keys_are_declared_index_state():
 
     pkg = os.path.dirname(hbase_tools_spark.__file__)
     repo = os.path.dirname(pkg)
-    # model_cached is the one memo key: no second keying scheme
+    # one memo key: no second keying scheme
     program = (
         glob.glob(f"{pkg}/**/*.py", recursive=True)
         + glob.glob(f"{repo}/scripts/**/*.py", recursive=True)
@@ -385,7 +455,7 @@ def test_memo_keys_are_declared_index_state():
     for path in program:
         assert "sf_cached" not in open(path).read(), path
     pat = re.compile(
-        r"(?:model_cached|checkpointed)\(\s*"
+        r"(?:model_cached|checkpointed|artifact)\(\s*"
         r"(?:[A-Za-z_][\w.]*\s*,)?\s*\"([a-z_0-9]+)\"",
         re.S,
     )

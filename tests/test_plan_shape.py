@@ -347,7 +347,7 @@ def test_stream_queries_start_only_in_streaming():
     """Only ``streaming/`` starts stream queries: no other package
     module names ``writeStream``, ``foreachBatch`` or
     ``awaitTermination`` (the stores drain through
-    ``streaming.jobs.drain_batches``)."""
+    ``streaming.jobs.drain_fixture``)."""
     import os
     import subprocess
 
@@ -361,6 +361,34 @@ def test_stream_queries_start_only_in_streaming():
     ).stdout
     streaming = os.path.join(pkg, "streaming") + os.sep
     assert [f for f in out.split() if not f.startswith(streaming)] == []
+
+
+def test_artifacts_and_stream_stores_have_one_lifecycle():
+    """Served artifacts have one maker, ``memo.artifact``: no program
+    file names ``workdir.built``.  The stream stores drain through one
+    fixture-guarded call: in the package only ``streaming/jobs.py``
+    calls ``drain_batches`` or ``assert_view_matches_fixture``."""
+    import glob
+    import os
+    import subprocess
+
+    from hbase_tools_spark.functions import workdir
+
+    pkg = os.path.dirname(os.path.dirname(os.path.abspath(workdir.__file__)))
+    repo = os.path.dirname(pkg)
+    program = (
+        glob.glob(f"{pkg}/**/*.py", recursive=True)
+        + glob.glob(f"{repo}/scripts/**/*.py", recursive=True)
+        + [f"{repo}/bench.py", f"{repo}/__spark_entry__.py"]
+    )
+    assert not hasattr(workdir, "built")
+    assert [p for p in program if "workdir.built" in open(p).read()] == []
+    for pattern in (r"drain_batches\(", r"assert_view_matches_fixture\("):
+        out = subprocess.run(
+            ["grep", "-rlE", "--include=*.py", pattern, pkg],
+            capture_output=True, text=True,
+        ).stdout
+        assert out.split() == [os.path.join(pkg, "streaming", "jobs.py")], pattern
 
 
 def test_codec_queries_share_one_per_document_map():

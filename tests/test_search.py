@@ -15,7 +15,7 @@ from hbase_tools_spark.llm.search import (
     _QTERM_LO,
     bm25_topk_from_index,
     docs_bm25_topk,
-    materialize_inverted_index,
+    index_ingest_batch,
 )
 
 
@@ -55,7 +55,7 @@ def test_bm25_index_serving_equals_direct_and_prunes(spark, tmp_path):
     (static PartitionFilters — the corpus is never rescanned)."""
     m = load_model(spark, SF_DIR)
     idx = str(tmp_path / "inv_index")
-    materialize_inverted_index(m.documents, idx)
+    index_ingest_batch(m.documents, idx, 0)
     terms = _query_terms(spark)
     served = bm25_topk_from_index(spark, idx, terms)
     plan = served._jdf.queryExecution().executedPlan().toString()
@@ -83,7 +83,7 @@ def test_bm25_index_prune_skips_unrelated_buckets(spark, tmp_path):
     term's true postings."""
     m = load_model(spark, SF_DIR)
     idx = str(tmp_path / "inv_index2")
-    materialize_inverted_index(m.documents, idx)
+    index_ingest_batch(m.documents, idx, 0)
     term = _query_terms(spark)[0]
     served = bm25_topk_from_index(spark, idx, [term], k=5)
     rows = served.collect()
@@ -199,10 +199,10 @@ def test_bm25_index_incremental_append_equals_rebuild(spark, tmp_path):
     half_b = m.documents.where(F.col("doc_id") % 2 == 1)
 
     full_idx = str(tmp_path / "full_idx")
-    materialize_inverted_index(m.documents, full_idx)
+    index_ingest_batch(m.documents, full_idx, 0)
     inc_idx = str(tmp_path / "inc_idx")
-    materialize_inverted_index(half_a, inc_idx)
-    materialize_inverted_index(half_b, inc_idx, mode="append")
+    index_ingest_batch(half_a, inc_idx, 0)
+    index_ingest_batch(half_b, inc_idx, 1)
 
     terms = _query_terms(spark)
     key = lambda r: (r["doc_id"], r["n_terms"], r["score"], r["rank"])
@@ -275,7 +275,6 @@ def test_index_ingest_stream_serves_like_full_rebuild(spark, tmp_path):
     idempotence)."""
     import os
 
-    from hbase_tools_spark.llm.search import index_ingest_batch
     from hbase_tools_spark.streaming.jobs import drain_batches
 
     m = load_model(spark, SF_DIR)
@@ -300,7 +299,7 @@ def test_index_ingest_stream_serves_like_full_rebuild(spark, tmp_path):
     assert len(q.recentProgress) >= 3
 
     full_idx = str(tmp_path / "full_idx")
-    materialize_inverted_index(m.documents, full_idx)
+    index_ingest_batch(m.documents, full_idx, 0)
     terms = _query_terms(spark)
     key = lambda r: (r["doc_id"], r["n_terms"], r["score"], r["rank"])
     from_stream = sorted(map(key, bm25_topk_from_index(spark, idx, terms).collect()))
@@ -335,7 +334,7 @@ def test_hybrid_served_from_index_equals_direct(spark, tmp_path):
 
     m = load_model(spark, SF_DIR)
     idx = str(tmp_path / "stack_idx")
-    materialize_inverted_index(m.documents, idx)
+    index_ingest_batch(m.documents, idx, 0)
     served = hybrid_rrf_from_index(spark, idx, m.embeddings)
     plan = served._jdf.queryExecution().executedPlan().toString()
     pruned = [
